@@ -19,7 +19,10 @@ Spec shapes implemented:
   unknown/terminated session — the spec's signal to re-initialize);
 - ``DELETE`` terminates the session (``200``); ``GET`` (the optional
   server-push stream) returns ``405 Method Not Allowed``;
-- invalid JSON → HTTP 400 carrying a JSON-RPC parse-error body.
+- invalid JSON → HTTP 400 carrying a JSON-RPC parse-error body;
+- a negative or non-numeric ``Content-Length`` → 400 and one above
+  MAX_BODY_BYTES → 413, both before the body is read (the connection is
+  then closed, since its unread body cannot be skipped).
 
 Protocol semantics (version negotiation, schema-validated params,
 isError tool results) are NOT duplicated here: every parsed message is
@@ -36,6 +39,10 @@ from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from typing import Any, Callable
 
 from .mcp_stdio import PARSE_ERROR, dispatch
+
+# Largest request body read; a longer Content-Length is refused with 413
+# before any of it is read.
+MAX_BODY_BYTES = 1 << 20
 
 
 def make_handler(
@@ -90,10 +97,21 @@ def make_handler(
             if self.path.rstrip("/") != path.rstrip("/"):
                 self._send_json(404, {"error": "unknown endpoint"})
                 return
+            length = self.headers.get("Content-Length", "0").strip()
+            if not (length.isascii() and length.isdigit()):
+                # rfile.read(-1) would wait for the peer to close
+                self.close_connection = True
+                self._send_json(400, {"error": "invalid Content-Length"},
+                                {"Connection": "close"})
+                return
+            if int(length) > MAX_BODY_BYTES:
+                self.close_connection = True
+                self._send_json(413, {
+                    "error": f"body exceeds {MAX_BODY_BYTES} bytes",
+                }, {"Connection": "close"})
+                return
             try:
-                length = int(self.headers.get("Content-Length", "0"))
-                raw = self.rfile.read(length)
-                msg = json.loads(raw)
+                msg = json.loads(self.rfile.read(int(length)))
             except (ValueError, json.JSONDecodeError):
                 self._send_json(400, {
                     "jsonrpc": "2.0", "id": None,

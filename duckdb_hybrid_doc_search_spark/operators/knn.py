@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..config import SCORE_ROUND
+from ..functions import topk
 from ..functions import vector as V
 
 
@@ -46,24 +47,12 @@ def knn_join(queries: DataFrame, corpus: DataFrame, k: int,
              c_id: str = "c_id", c_vec: str = "c_vec") -> DataFrame:
     """Brute-force top-k neighbors per query row (higher similarity first).
 
-    The queries side is bounded by contract — at scale it is a batch of
-    probe vectors (the pre-r14 form broadcast it); the corpus streams.
+    The queries side is bounded by contract (functions/topk.MAX_QUERIES)
+    and collected to the driver; the corpus streams once through the
+    Arrow top-k scan (functions/topk.scan_topk) on the rounded cosine.
     Output: q_id, c_id, cos_sim, rank.
-
-    r14: the N x Q pair materialization (crossJoin + interpreted HOF
-    cosine per pair + a row_number window over ALL pairs) is replaced by
-    one Arrow-GEMM pass with the bounded query set collected to the
-    driver (the same rows the broadcast shipped): each scan batch
-    computes its sims block, rounds at SCORE_ROUND (np.round — the
-    pinned assign_to_centroids / knn_classify convention, verified
-    value-identical to the rounded HOF fold across every oracle) and
-    emits only its LOCAL top-k per query by the exact global ordering
-    (rounded sim desc, c_id asc) — a superset of the global top-k, so
-    the unchanged final window selects identical rows. The window now
-    sorts Q x k x n_batches candidate rows instead of N x Q.
     """
     import numpy as np
-    import pandas as pd
     from pyspark.sql import types as T
 
     out_schema = T.StructType([
@@ -71,45 +60,13 @@ def knn_join(queries: DataFrame, corpus: DataFrame, k: int,
         T.StructField(c_id, corpus.schema[c_id].dataType),
         T.StructField("cos_sim", T.DoubleType()),
     ])
-    qrows = sorted(queries.select(q_id, q_vec).collect(), key=lambda r: r[0])
-    if not qrows:
-        pairs = corpus.sparkSession.createDataFrame([], out_schema)
-    else:
-        Qm = np.array([[float(x) for x in r[1]] for r in qrows],
-                      dtype=np.float64)
-        q_ids = np.array([r[0] for r in qrows])
-        qnorm = np.sqrt((Qm * Qm).sum(axis=1))
-
-        def fn(batches):
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                X = np.array(pdf[c_vec].tolist(), dtype=np.float64)
-                c_ids = pdf[c_id].to_numpy()
-                sims = np.round(
-                    (X @ Qm.T)
-                    / (np.sqrt((X * X).sum(axis=1))[:, None]
-                       * qnorm[None, :]),
-                    SCORE_ROUND,
-                )
-                qi, ci = [], []
-                for j in range(len(q_ids)):
-                    order = np.lexsort((c_ids, -sims[:, j]))[:k]
-                    qi.append(np.full(len(order), j, dtype=np.int64))
-                    ci.append(order)
-                qi = np.concatenate(qi)
-                ci = np.concatenate(ci)
-                yield pd.DataFrame({
-                    q_id: q_ids[qi],
-                    c_id: c_ids[ci],
-                    "cos_sim": sims[ci, qi],
-                })
-
-        pairs = corpus.select(c_id, c_vec).mapInPandas(fn, out_schema)
-    w = Window.partitionBy(q_id).orderBy(F.desc("cos_sim"), F.asc(c_id))
-    return (
-        pairs.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
+    qrows = topk.collect_queries(queries.select(q_id, q_vec), q_id)
+    Q = topk.matrix(r[1] for r in qrows)
+    return topk.scan_topk(
+        corpus.select(c_id, c_vec), k, out_schema,
+        lambda pdf: (topk.rounded_cosine(topk.matrix(pdf[c_vec]), Q), None),
+        {q_id: np.array([r[0] for r in qrows])}, {c_id: c_id},
+        "cos_sim", desc=True,
     )
 
 
@@ -489,25 +446,19 @@ def matryoshka_recall(emb: DataFrame, k: int, n_queries: int,
     (store/scan only the first `dim` dims, rerank survivors full-width).
 
     ONE corpus scan: each (query, candidate) pair scores BOTH the full
-    and the prefix cosine in the same projection, then two rank windows
-    over the same shuffled pair set; recall@k = |top-k ∩ top-k_trunc|/k.
+    and the prefix cosine in the same score block, ranked per (query,
+    metric); recall@k = |top-k ∩ top-k_trunc|/k.
     At 100 TB the query set is the bounded broadcast side (an eval
     sample), so cost is one corpus pass regardless of how many metric
     variants are scored per pair.
 
     Output: q_id, recall_at_k (one row per query, 0.0 when disjoint).
 
-    r14: the N x Q pair materialization (crossJoin + two interpreted HOF
-    cosines per pair + two row_number windows over ALL pairs) is
-    replaced by one Arrow-GEMM pass (the knn_join shape): each scan
-    batch scores both metrics and emits its LOCAL top-k per query under
-    EACH ordering (rounded sim desc, c_id asc — supersets of the global
-    top-k sets), the two small windows rank Q x k x n_batches candidate
-    rows, and recall@k = |top-k_full ∩ top-k_trunc| / k — identical to
-    counting pairs with rf <= k AND rt <= k.
+    The score block stacks both metrics' rounded cosines side by side,
+    tagged by ``kind`` (f = full, t = truncated), so one Arrow top-k scan
+    ranks each query under both orderings.
     """
     import numpy as np
-    import pandas as pd
     from pyspark.sql import types as T
 
     queries = emb.where(F.col(id_col) < n_queries).select(
@@ -515,63 +466,30 @@ def matryoshka_recall(emb: DataFrame, k: int, n_queries: int,
     )
     out_schema = T.StructType([
         T.StructField("q_id", emb.schema[id_col].dataType),
+        T.StructField("kind", T.StringType()),
         T.StructField("c_id", emb.schema[id_col].dataType),
         T.StructField("sim", T.DoubleType()),
-        T.StructField("kind", T.StringType()),
     ])
-    qrows = sorted(queries.collect(), key=lambda r: r["q_id"])
-    if not qrows:
-        cand = emb.sparkSession.createDataFrame([], out_schema)
-    else:
-        Qm = np.array([[float(x) for x in r["q_vec"]] for r in qrows],
-                      dtype=np.float64)
-        q_ids = np.array([r["q_id"] for r in qrows])
-        Qt = Qm[:, :dim]
-        qn_full = np.sqrt((Qm * Qm).sum(axis=1))
-        qn_trunc = np.sqrt((Qt * Qt).sum(axis=1))
+    qrows = topk.collect_queries(queries, "q_id")
+    Q = topk.matrix(r["q_vec"] for r in qrows)
+    q_ids = np.array([r["q_id"] for r in qrows])
 
-        def fn(batches):
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                X = np.array(pdf[vec_col].tolist(), dtype=np.float64)
-                c_ids = pdf[id_col].to_numpy()
-                Xt = X[:, :dim]
-                sims = {
-                    "f": np.round(
-                        (X @ Qm.T)
-                        / (np.sqrt((X * X).sum(axis=1))[:, None]
-                           * qn_full[None, :]), SCORE_ROUND),
-                    "t": np.round(
-                        (Xt @ Qt.T)
-                        / (np.sqrt((Xt * Xt).sum(axis=1))[:, None]
-                           * qn_trunc[None, :]), SCORE_ROUND),
-                }
-                for kind, sm in sims.items():
-                    qi, ci = [], []
-                    for j in range(len(q_ids)):
-                        order = np.lexsort((c_ids, -sm[:, j]))[:k]
-                        qi.append(np.full(len(order), j, dtype=np.int64))
-                        ci.append(order)
-                    qi = np.concatenate(qi)
-                    ci = np.concatenate(ci)
-                    yield pd.DataFrame({
-                        "q_id": q_ids[qi],
-                        "c_id": c_ids[ci],
-                        "sim": sm[ci, qi],
-                        "kind": kind,
-                    })
+    def score(pdf):
+        X = topk.matrix(pdf[vec_col])
+        return np.hstack([
+            topk.rounded_cosine(X, Q),
+            topk.rounded_cosine(X[:, :dim], Q[:, :dim]),
+        ]), None
 
-        cand = emb.select(id_col, vec_col).mapInPandas(fn, out_schema)
-    w = Window.partitionBy("q_id").orderBy(F.desc("sim"), F.asc("c_id"))
-    topk = {
-        kind: cand.where(F.col("kind") == kind)
-        .withColumn("r", F.row_number().over(w))
-        .where(F.col("r") <= k)
-        .select("q_id", "c_id")
-        for kind in ("f", "t")
-    }
-    hits = topk["f"].join(topk["t"], ["q_id", "c_id"]).groupBy("q_id").agg(
+    ranked = topk.scan_topk(
+        emb.select(id_col, vec_col), k, out_schema, score,
+        {"q_id": np.concatenate([q_ids, q_ids]),
+         "kind": np.repeat(["f", "t"], len(q_ids))},
+        {"c_id": id_col}, "sim", desc=True,
+    )
+    top = {kind: ranked.where(F.col("kind") == kind).select("q_id", "c_id")
+           for kind in ("f", "t")}
+    hits = top["f"].join(top["t"], ["q_id", "c_id"]).groupBy("q_id").agg(
         F.count(F.lit(1)).alias("n_hit")
     )
     return (
@@ -639,79 +557,33 @@ def knn_classify_accuracy(emb: DataFrame, k: int, n_queries: int,
     Scale shape: the evaluation query set is the bounded broadcast side;
     the corpus streams once; per-query state after the scan is k rows.
 
-    r14: the N x Q pair materialization (crossJoin + interpreted HOF
-    cosine per pair + a row_number window over ALL pairs) is replaced by
-    one Arrow-GEMM pass with the bounded query set collected to the
-    driver (same rows the broadcast shipped): each scan batch computes
-    its sims block, rounds at SCORE_ROUND (np.round, the pinned
-    assign_to_centroids convention) and emits only its LOCAL top-k per
-    query by the exact global ordering (rounded sim desc, c_id asc) —
-    a superset of the global top-k, so the downstream window over
-    Q x k x n_batches candidate rows selects identical neighbors. The
-    vote and accuracy stages are unchanged.
+    The neighbor search is the Arrow top-k scan (functions/topk) with
+    the query itself masked out of its own candidates.
 
     Output per true label: n, n_correct, accuracy.
     """
     import numpy as np
-    import pandas as pd
 
-    qrows = sorted(
+    qrows = topk.collect_queries(
         emb.where(F.col(id_col) < n_queries)
         .select(F.col(id_col).alias("q_id"), F.col(vec_col).alias("q_vec"),
-                F.col(label_col).alias("q_label"))
-        .collect(),
-        key=lambda r: r["q_id"],
+                F.col(label_col).alias("q_label")),
+        "q_id",
     )
-    cand_schema = "q_id long, q_label int, c_id long, c_label int, " \
-                  "cos_sim double"
-    if not qrows:
-        nn = emb.sparkSession.createDataFrame([], cand_schema)
-    else:
-        Qm = np.array([[float(x) for x in r["q_vec"]] for r in qrows],
-                      dtype=np.float64)
-        q_ids = np.array([int(r["q_id"]) for r in qrows], dtype=np.int64)
-        q_labels = np.array([int(r["q_label"]) for r in qrows],
-                            dtype=np.int32)
-        qnorm = np.sqrt((Qm * Qm).sum(axis=1))
+    Q = topk.matrix(r["q_vec"] for r in qrows)
+    q_ids = np.array([int(r["q_id"]) for r in qrows], dtype=np.int64)
+    q_labels = np.array([int(r["q_label"]) for r in qrows], dtype=np.int32)
 
-        def fn(batches):
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                X = np.array(pdf[vec_col].tolist(), dtype=np.float64)
-                c_ids = pdf[id_col].to_numpy()
-                c_labels = pdf[label_col].to_numpy()
-                sims = np.round(
-                    (X @ Qm.T)
-                    / (np.sqrt((X * X).sum(axis=1))[:, None]
-                       * qnorm[None, :]),
-                    SCORE_ROUND,
-                )
-                qi, ci = [], []
-                for j in range(len(q_ids)):
-                    keep = np.flatnonzero(c_ids != q_ids[j])
-                    order = np.lexsort(
-                        (c_ids[keep], -sims[keep, j]))[:k]
-                    sel = keep[order]
-                    qi.append(np.full(len(sel), j, dtype=np.int64))
-                    ci.append(sel)
-                qi = np.concatenate(qi)
-                ci = np.concatenate(ci)
-                yield pd.DataFrame({
-                    "q_id": q_ids[qi],
-                    "q_label": q_labels[qi],
-                    "c_id": c_ids[ci],
-                    "c_label": c_labels[ci],
-                    "cos_sim": sims[ci, qi],
-                })
+    def score(pdf):
+        c_ids = pdf[id_col].to_numpy()
+        return (topk.rounded_cosine(topk.matrix(pdf[vec_col]), Q),
+                c_ids[:, None] != q_ids[None, :])
 
-        nn = emb.select(id_col, vec_col, label_col).mapInPandas(
-            fn, cand_schema)
-    w_nn = Window.partitionBy("q_id").orderBy(
-        F.desc("cos_sim"), F.asc("c_id")
-    )
-    nn = nn.withColumn("rnk", F.row_number().over(w_nn)).where(
-        F.col("rnk") <= k
+    nn = topk.scan_topk(
+        emb.select(id_col, vec_col, label_col), k,
+        "q_id long, q_label int, c_id long, c_label int, cos_sim double",
+        score, {"q_id": q_ids, "q_label": q_labels},
+        {"c_id": id_col, "c_label": label_col}, "cos_sim", desc=True,
     )
     votes = nn.groupBy("q_id", "q_label", "c_label").agg(
         F.count(F.lit(1)).alias("n_votes")
@@ -1011,6 +883,56 @@ def pq_codebook(emb: DataFrame, id_col: str = "vec_id",
     )
 
 
+def _pq_books(cb_rows, m: int) -> tuple[list, list]:
+    """Per-subspace codeword matrices (code order) and their squared
+    norms from (m, code, cw) rows sorted by (m, code)."""
+    books = [topk.matrix(r["cw"] for r in cb_rows if r["m"] == mi)
+             for mi in range(m)]
+    return books, [(C * C).sum(axis=1) if len(C) else None for C in books]
+
+
+def _pq_codes(X, books, sq, sub: int):
+    """(n, m) position of each row's nearest codeword per subspace:
+    squared L2 by the dot identity, rounded at SCORE_ROUND, first min =
+    lowest code."""
+    import numpy as np
+
+    codes = np.empty((len(X), len(books)), dtype=np.int64)
+    for mi, (C, cs) in enumerate(zip(books, sq)):
+        S = X[:, mi * sub:(mi + 1) * sub]
+        codes[:, mi] = np.round(
+            (S * S).sum(axis=1)[:, None] - 2.0 * (S @ C.T) + cs[None, :],
+            SCORE_ROUND,
+        ).argmin(axis=1)
+    return codes
+
+
+def _pq_lut(Q, books, sq, sub: int) -> list:
+    """Per-subspace (K, q) ADC lookup tables: the rounded squared L2 of
+    each codeword to each query's subvector (the oracle's formula)."""
+    import numpy as np
+
+    lut = []
+    for mi, (C, cs) in enumerate(zip(books, sq)):
+        QS = Q[:, mi * sub:(mi + 1) * sub]
+        lut.append(np.round(
+            cs[:, None] - 2.0 * (C @ QS.T) + (QS * QS).sum(axis=1)[None, :],
+            SCORE_ROUND,
+        ))
+    return lut
+
+
+def _adc(codes, lut):
+    """(n, q) ADC distances: the M table lookups of each row's codes,
+    summed in subspace order and rounded at SCORE_ROUND."""
+    import numpy as np
+
+    adc = np.zeros((len(codes), lut[0].shape[1]))
+    for mi, L in enumerate(lut):
+        adc += L[codes[:, mi], :]
+    return np.round(adc, SCORE_ROUND)
+
+
 def pq_encode_with(df: DataFrame, cb: DataFrame, id_col: str = "vec_id",
                    vec_col: str = "embedding", dim: int = PQ_DIM,
                    m: int = PQ_M) -> DataFrame:
@@ -1019,16 +941,12 @@ def pq_encode_with(df: DataFrame, cb: DataFrame, id_col: str = "vec_id",
     at build time and read back from the layout's side table rather than
     rederived from the (now larger) corpus. Same math as pq_encode.
 
-    Scale shape (r14): one Arrow-GEMM map pass over the corpus with the
-    bounded K x M codebook collected to the driver (the same rows the
-    old broadcast shipped) — the N x M x K row materialization of the
-    join + the (vid, m) argmin aggregate's exchange are gone; output IS
-    the encoded size (M short rows per vector), map-only. Same rule to
-    the bit that matters: per-subspace squared-L2 via the same
-    dot-identity, rounded at SCORE_ROUND (np.round — the pinned GEMM
-    convention), argmin ties to the LOWER code (codewords scanned in
-    ascending code order; first-min argmin), pinned value-identical to
-    the join+struct-min form by tests/test_pq.py and every downstream
+    Scale shape: one Arrow-GEMM map pass over the corpus with the
+    bounded K x M codebook collected to the driver; output IS the
+    encoded size (M short rows per vector), map-only. The rule
+    (_pq_codes): per-subspace squared-L2 via the dot identity, rounded
+    at SCORE_ROUND, argmin ties to the LOWER code, pinned value-identical
+    to the join+struct-min form by tests/test_pq.py and every downstream
     oracle."""
     import numpy as np
     import pandas as pd
@@ -1037,18 +955,15 @@ def pq_encode_with(df: DataFrame, cb: DataFrame, id_col: str = "vec_id",
     sub = dim // m
     crows = sorted(cb.select("m", "code", "cw").collect(),
                    key=lambda r: (r["m"], r["code"]))
-    Cm = [np.array([list(map(float, r["cw"])) for r in crows
-                    if r["m"] == mi], dtype=np.float64)
-          for mi in range(m)]
+    books, sq = _pq_books(crows, m)
     codes_m = [np.array([r["code"] for r in crows if r["m"] == mi])
                for mi in range(m)]
-    css = [(C * C).sum(axis=1) if len(C) else None for C in Cm]
     out_schema = T.StructType([
         T.StructField("vec_id", df.schema[id_col].dataType),
         T.StructField("m", T.IntegerType()),
         T.StructField("code", cb.schema["code"].dataType),
     ])
-    if any(len(C) == 0 for C in Cm):
+    if any(len(C) == 0 for C in books):
         # empty codebook subspace: the old inner join emitted nothing
         return df.sparkSession.createDataFrame([], out_schema)
 
@@ -1056,23 +971,13 @@ def pq_encode_with(df: DataFrame, cb: DataFrame, id_col: str = "vec_id",
         for pdf in batches:
             if not len(pdf):
                 continue
-            X = np.array(pdf[vec_col].tolist(), dtype=np.float64)
             vids = pdf[id_col].to_numpy()
-            frames = []
-            for mi in range(m):
-                S = X[:, mi * sub:(mi + 1) * sub]
-                d2 = np.round(
-                    (S * S).sum(axis=1)[:, None]
-                    - 2.0 * (S @ Cm[mi].T) + css[mi][None, :],
-                    SCORE_ROUND,
-                )
-                best = d2.argmin(axis=1)  # first min = lowest code
-                frames.append(pd.DataFrame({
-                    "vec_id": vids,
-                    "m": np.full(len(vids), mi, dtype=np.int32),
-                    "code": codes_m[mi][best],
-                }))
-            yield pd.concat(frames, ignore_index=True)
+            codes = _pq_codes(topk.matrix(pdf[vec_col]), books, sq, sub)
+            yield pd.concat([pd.DataFrame({
+                "vec_id": vids,
+                "m": np.full(len(vids), mi, dtype=np.int32),
+                "code": codes_m[mi][codes[:, mi]],
+            }) for mi in range(m)], ignore_index=True)
 
     return df.select(F.col(id_col), vec_col).mapInPandas(fn, out_schema)
 
@@ -1102,91 +1007,40 @@ def pq_topk(emb: DataFrame, k: int, n_queries: int = 10,
     Output: q_id, c_id, adc_dist (ascending = nearer), rank — approximate
     by construction; pq_recall records the quality.
 
-    r14: encode and ADC scoring fuse into ONE Arrow-GEMM scan — the
-    query LUT is built on the driver from the bounded codebook and the
-    bounded query batch (the rows the old plan broadcast), each scan
-    batch encodes its vectors, sums its M LUT lookups (per-subspace d
-    rounded at SCORE_ROUND, then the sum re-rounded — the exact oracle
-    formula) and emits only its LOCAL top-k per query by the global
-    ordering (adc asc, c_id asc), a superset of the global top-k; the
-    unchanged final window ranks Q x k x n_batches candidates. The
-    codes-join-LUT exchange, the (q, c) sum aggregate and the full
-    N x Q window are gone; the corpus streams once, map-only.
+    The LUT is built on the driver from the bounded codebook and query
+    batch; each Arrow batch of the top-k scan encodes its vectors and
+    sums their M LUT lookups, so the corpus streams once, map-only.
     """
     import numpy as np
-    import pandas as pd
     from pyspark.sql import types as T
 
     sub = dim // m
-    crows = sorted(
+    books, sq = _pq_books(sorted(
         pq_codebook(emb, id_col, vec_col, dim, m).collect(),
         key=lambda r: (r["m"], r["code"]),
-    )
-    Cm = [np.array([list(map(float, r["cw"])) for r in crows
-                    if r["m"] == mi], dtype=np.float64)
-          for mi in range(m)]
-    css = [(C * C).sum(axis=1) if len(C) else None for C in Cm]
-    qrows = sorted(
+    ), m)
+    qrows = topk.collect_queries(
         emb.where(F.col(id_col) < n_queries)
-        .select(F.col(id_col).alias("q_id"), vec_col).collect(),
-        key=lambda r: r["q_id"],
+        .select(F.col(id_col).alias("q_id"), vec_col),
+        "q_id",
     )
     out_schema = T.StructType([
         T.StructField("q_id", emb.schema[id_col].dataType),
         T.StructField("c_id", emb.schema[id_col].dataType),
         T.StructField("adc_dist", T.DoubleType()),
     ])
-    if not qrows or any(len(C) == 0 for C in Cm):
-        pairs = emb.sparkSession.createDataFrame([], out_schema)
-    else:
-        Qm = np.array([[float(x) for x in r[1]] for r in qrows],
-                      dtype=np.float64)
-        q_ids = np.array([r[0] for r in qrows])
-        # (m, K, Q) LUT: round(l2sq(q_sub, cw)) — the oracle's per-
-        # subspace distance table, built once on the driver
-        lut = []
-        for mi in range(m):
-            QS = Qm[:, mi * sub:(mi + 1) * sub]
-            lut.append(np.round(
-                css[mi][:, None] - 2.0 * (Cm[mi] @ QS.T)
-                + (QS * QS).sum(axis=1)[None, :],
-                SCORE_ROUND,
-            ))
+    score = None
+    if qrows and all(len(C) for C in books):
+        lut = _pq_lut(topk.matrix(r[1] for r in qrows), books, sq, sub)
 
-        def fn(batches):
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                X = np.array(pdf[vec_col].tolist(), dtype=np.float64)
-                c_ids = pdf[id_col].to_numpy()
-                adc = np.zeros((len(c_ids), len(q_ids)))
-                for mi in range(m):
-                    S = X[:, mi * sub:(mi + 1) * sub]
-                    d2 = np.round(
-                        (S * S).sum(axis=1)[:, None]
-                        - 2.0 * (S @ Cm[mi].T) + css[mi][None, :],
-                        SCORE_ROUND,
-                    )
-                    adc += lut[mi][d2.argmin(axis=1), :]
-                adc = np.round(adc, SCORE_ROUND)
-                qi, ci = [], []
-                for j in range(len(q_ids)):
-                    order = np.lexsort((c_ids, adc[:, j]))[:k]
-                    qi.append(np.full(len(order), j, dtype=np.int64))
-                    ci.append(order)
-                qi = np.concatenate(qi)
-                ci = np.concatenate(ci)
-                yield pd.DataFrame({
-                    "q_id": q_ids[qi],
-                    "c_id": c_ids[ci],
-                    "adc_dist": adc[ci, qi],
-                })
+        def score(pdf):
+            codes = _pq_codes(topk.matrix(pdf[vec_col]), books, sq, sub)
+            return _adc(codes, lut), None
 
-        pairs = emb.select(id_col, vec_col).mapInPandas(fn, out_schema)
-    w = Window.partitionBy("q_id").orderBy(F.asc("adc_dist"), F.asc("c_id"))
-    return (
-        pairs.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
+    return topk.scan_topk(
+        emb.select(id_col, vec_col), k, out_schema, score,
+        {"q_id": np.array([r[0] for r in qrows])}, {"c_id": id_col},
+        "adc_dist", desc=False,
     )
 
 
@@ -1349,22 +1203,14 @@ def ivfpq_topk(emb: DataFrame, k: int, n_queries: int = 10,
 
     Output: q_id, c_id, adc_dist, rank (ascending distance).
 
-    r14: the composed probe fuses into ONE Arrow-GEMM scan. Every side
-    table the old plan broadcast is bounded and collects to the driver
-    instead — the ~sqrt(N) centroid sample (probe cells per query are
-    the same top-NPROBE by rounded cosine desc / cent_id asc), the
-    K x M codebook, the query batch (its LUT is built driver-side, the
-    oracle's per-subspace formula verbatim). Each scan batch assigns
-    its vectors (the assign_to_centroids GEMM rule to the bit), encodes
-    them (the pq_encode_with rule), scores candidates whose cell is in
-    a query's probe set, and emits the local top-k per query by the
-    global ordering (adc asc, c_id asc) — a superset of the global
-    top-k, ranked by the unchanged final window over Q x k x n_batches
-    rows. The assignment pass, probe window, candidate join, codes
-    join and (q, c) sum aggregate are gone; the corpus streams once.
+    ONE Arrow top-k scan: the bounded side tables (the ~sqrt(N)
+    centroid sample, the K x M codebook, the query batch and its LUT)
+    are collected to the driver, and each batch assigns its vectors to
+    cells (the assign_to_centroids rule), encodes them (the
+    pq_encode_with rule) and ADC-scores them for the queries whose
+    NPROBE probe cells hold the row's cell.
     """
     import numpy as np
-    import pandas as pd
     from pyspark.sql import types as T
 
     sub = dim // m
@@ -1375,99 +1221,40 @@ def ivfpq_topk(emb: DataFrame, k: int, n_queries: int = 10,
         .collect(),
         key=lambda r: r["cent_id"],
     )
-    cb_rows = sorted(
+    books, sq = _pq_books(sorted(
         pq_codebook(emb, id_col, vec_col, dim, m).collect(),
         key=lambda r: (r["m"], r["code"]),
-    )
-    qrows = sorted(
+    ), m)
+    qrows = topk.collect_queries(
         emb.where(F.col(id_col) < n_queries)
-        .select(F.col(id_col).alias("q_id"), vec_col).collect(),
-        key=lambda r: r["q_id"],
+        .select(F.col(id_col).alias("q_id"), vec_col),
+        "q_id",
     )
     out_schema = T.StructType([
         T.StructField("q_id", emb.schema[id_col].dataType),
         T.StructField("c_id", emb.schema[id_col].dataType),
         T.StructField("adc_dist", T.DoubleType()),
     ])
-    Cm = [np.array([list(map(float, r["cw"])) for r in cb_rows
-                    if r["m"] == mi], dtype=np.float64)
-          for mi in range(m)]
-    if not qrows or not cent_rows or any(len(C) == 0 for C in Cm):
-        pairs = emb.sparkSession.createDataFrame([], out_schema)
-    else:
-        css = [(C * C).sum(axis=1) for C in Cm]
-        CC = np.array([[float(x) for x in r["cvec"]] for r in cent_rows],
-                      dtype=np.float64)
+    score = None
+    if qrows and cent_rows and all(len(C) for C in books):
+        CC = topk.matrix(r["cvec"] for r in cent_rows)
         cc_ids = np.array([int(r["cent_id"]) for r in cent_rows],
                           dtype=np.int64)
-        ccn = np.sqrt((CC * CC).sum(axis=1))
-        Qm = np.array([[float(x) for x in r[1]] for r in qrows],
-                      dtype=np.float64)
-        q_ids = np.array([r[0] for r in qrows])
-        # probe cells per query: top-NPROBE by (rounded qsim desc,
-        # cent_id asc) — the old window's ordering on the same rounded
-        # cosine (stable argsort over cid-ascending centroids)
-        qsims = np.round(
-            (Qm @ CC.T)
-            / (np.sqrt((Qm * Qm).sum(axis=1))[:, None] * ccn[None, :]),
-            SCORE_ROUND,
-        )
-        take = min(NPROBE, len(cc_ids))
-        pidx = np.argsort(-qsims, axis=1, kind="stable")[:, :take]
-        probe_cells = [set(cc_ids[pidx[j]].tolist())
-                       for j in range(len(q_ids))]
-        lut = []
-        for mi in range(m):
-            QS = Qm[:, mi * sub:(mi + 1) * sub]
-            lut.append(np.round(
-                css[mi][:, None] - 2.0 * (Cm[mi] @ QS.T)
-                + (QS * QS).sum(axis=1)[None, :],
-                SCORE_ROUND,
-            ))
+        Q = topk.matrix(r[1] for r in qrows)
+        probe = cc_ids[topk.top_cells(Q, CC, NPROBE)]
+        lut = _pq_lut(Q, books, sq, sub)
 
-        def fn(batches):
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                X = np.array(pdf[vec_col].tolist(), dtype=np.float64)
-                c_ids = pdf[id_col].to_numpy()
-                cells = cc_ids[np.round(
-                    (X @ CC.T)
-                    / (np.sqrt((X * X).sum(axis=1))[:, None]
-                       * ccn[None, :]),
-                    SCORE_ROUND,
-                ).argmax(axis=1)]  # first max = lowest cent_id
-                adc = np.zeros((len(c_ids), len(q_ids)))
-                for mi in range(m):
-                    S = X[:, mi * sub:(mi + 1) * sub]
-                    d2 = np.round(
-                        (S * S).sum(axis=1)[:, None]
-                        - 2.0 * (S @ Cm[mi].T) + css[mi][None, :],
-                        SCORE_ROUND,
-                    )
-                    adc += lut[mi][d2.argmin(axis=1), :]
-                adc = np.round(adc, SCORE_ROUND)
-                qi, ci = [], []
-                for j in range(len(q_ids)):
-                    keep = np.flatnonzero(
-                        np.isin(cells, list(probe_cells[j])))
-                    order = np.lexsort((c_ids[keep], adc[keep, j]))[:k]
-                    sel = keep[order]
-                    qi.append(np.full(len(sel), j, dtype=np.int64))
-                    ci.append(sel)
-                qi = np.concatenate(qi)
-                ci = np.concatenate(ci)
-                yield pd.DataFrame({
-                    "q_id": q_ids[qi],
-                    "c_id": c_ids[ci],
-                    "adc_dist": adc[ci, qi],
-                })
+        def score(pdf):
+            X = topk.matrix(pdf[vec_col])
+            # first max = lowest cent_id, the assign_to_centroids rule
+            cells = cc_ids[topk.rounded_cosine(X, CC).argmax(axis=1)]
+            return (_adc(_pq_codes(X, books, sq, sub), lut),
+                    topk.probe_mask(cells, probe))
 
-        pairs = emb.select(id_col, vec_col).mapInPandas(fn, out_schema)
-    w = Window.partitionBy("q_id").orderBy(F.asc("adc_dist"), F.asc("c_id"))
-    return (
-        pairs.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
+    return topk.scan_topk(
+        emb.select(id_col, vec_col), k, out_schema, score,
+        {"q_id": np.array([r[0] for r in qrows])}, {"c_id": id_col},
+        "adc_dist", desc=False,
     )
 
 
@@ -1626,19 +1413,15 @@ def ivfpq_residual_topk(emb: DataFrame, k: int, n_queries: int = 10,
     residual LUT (q - centroid, n_q x nprobe x M x K rows — still
     broadcast-bounded), because the query's residual differs per cell.
 
-    Same shape as ivfpq_topk, fused the same way (r14): the bounded
-    sides — the ~sqrt(N) centroid sample, the deterministic PQ_CB_MOD
-    sample whose residuals form the codebook, the query batch with its
-    per-probed-cell residual LUT — collect to the driver (the rows the
-    old plan broadcast), and ONE Arrow-GEMM scan assigns, computes
-    residuals, encodes and ADC-scores each batch, emitting the local
-    top-k per query (a superset of the global top-k, ranked by the
-    unchanged final window). Every distance is rounded at SCORE_ROUND
-    with the same tie rules as the joined form; the deterministic
-    codebook keeps the DuckDB oracle exact.
+    Same shape as ivfpq_topk: the bounded sides — the ~sqrt(N) centroid
+    sample, the deterministic PQ_CB_MOD sample whose residuals form the
+    codebook, the query batch with its per-probed-cell residual LUT —
+    are collected to the driver, and each batch of ONE Arrow top-k scan
+    assigns, computes residuals, encodes and ADC-scores its rows. Every
+    distance is rounded at SCORE_ROUND with the same tie rules as the
+    joined form; the deterministic codebook keeps the DuckDB oracle exact.
     """
     import numpy as np
-    import pandas as pd
     from pyspark.sql import types as T
 
     sub = dim // m
@@ -1654,126 +1437,61 @@ def ivfpq_residual_topk(emb: DataFrame, k: int, n_queries: int = 10,
         .select(F.col(id_col).alias("sid"), vec_col).collect(),
         key=lambda r: r["sid"],
     )
-    qrows = sorted(
+    qrows = topk.collect_queries(
         emb.where(F.col(id_col) < n_queries)
-        .select(F.col(id_col).alias("q_id"), vec_col).collect(),
-        key=lambda r: r["q_id"],
+        .select(F.col(id_col).alias("q_id"), vec_col),
+        "q_id",
     )
     out_schema = T.StructType([
         T.StructField("q_id", emb.schema[id_col].dataType),
         T.StructField("c_id", emb.schema[id_col].dataType),
         T.StructField("adc_dist", T.DoubleType()),
     ])
-    if not qrows or not cent_rows or not srows:
-        pairs = emb.sparkSession.createDataFrame([], out_schema)
-    else:
-        CC = np.array([[float(x) for x in r["cvec"]] for r in cent_rows],
-                      dtype=np.float64)
-        cc_ids = np.array([int(r["cent_id"]) for r in cent_rows],
-                          dtype=np.int64)
-        ccn = np.sqrt((CC * CC).sum(axis=1))
-        cell_pos = {int(c): i for i, c in enumerate(cc_ids)}
+    score = None
+    if qrows and cent_rows and srows:
+        CC = topk.matrix(r["cvec"] for r in cent_rows)
 
         def assign_pos(X):
-            # the assign_to_centroids rule: rounded cosine, first-max
-            # argmax = lowest cent_id
-            return np.round(
-                (X @ CC.T)
-                / (np.sqrt((X * X).sum(axis=1))[:, None] * ccn[None, :]),
-                SCORE_ROUND,
-            ).argmax(axis=1)
+            # the assign_to_centroids rule: first max = lowest cent_id
+            return topk.rounded_cosine(X, CC).argmax(axis=1)
 
         # residual codebook: residuals of the deterministic sample rows
-        # against THEIR OWN cells (bounded rows, the old broadcast side)
-        Sv = np.array([[float(x) for x in r[1]] for r in srows],
-                      dtype=np.float64)
+        # against THEIR OWN cells
+        Sv = topk.matrix(r[1] for r in srows)
         Rs = Sv - CC[assign_pos(Sv)]
-        rcb = [Rs[:, mi * sub:(mi + 1) * sub] for mi in range(m)]
-        rss = [(R * R).sum(axis=1) for R in rcb]
-        s_ids = np.array([r[0] for r in srows])
+        books = [Rs[:, mi * sub:(mi + 1) * sub] for mi in range(m)]
+        sq = [(B * B).sum(axis=1) for B in books]
+        Q = topk.matrix(r[1] for r in qrows)
+        pidx = topk.top_cells(Q, CC, NPROBE)
+        # per probe slot p, the (K, q) residual LUTs: query j's residual
+        # against its p-th probed cell, round(l2sq(q - cvec, cw)) per
+        # subspace — the oracle formula verbatim
+        luts = []
+        for p in range(pidx.shape[1]):
+            R = Q - CC[pidx[:, p]]
+            luts.append([
+                np.stack([
+                    np.round((qs @ qs) - 2.0 * (books[mi] @ qs) + sq[mi],
+                             SCORE_ROUND)
+                    for qs in R[:, mi * sub:(mi + 1) * sub]
+                ], axis=1)
+                for mi in range(m)
+            ])
 
-        Qm = np.array([[float(x) for x in r[1]] for r in qrows],
-                      dtype=np.float64)
-        q_ids = np.array([r[0] for r in qrows])
-        # probe cells per query: top-NPROBE by (rounded qsim desc,
-        # cent_id asc), the old window ordering
-        qsims = np.round(
-            (Qm @ CC.T)
-            / (np.sqrt((Qm * Qm).sum(axis=1))[:, None] * ccn[None, :]),
-            SCORE_ROUND,
-        )
-        take = min(NPROBE, len(cc_ids))
-        pidx = np.argsort(-qsims, axis=1, kind="stable")[:, :take]
-        # per (query, probed cell): the residual LUT over the sample
-        # codebook — round(l2sq(q - cvec, cw)) per subspace, the oracle
-        # formula verbatim
-        lut = {}
-        for j in range(len(q_ids)):
-            for p in range(take):
-                cp = int(pidx[j, p])
-                qr = Qm[j] - CC[cp]
-                ent = []
-                for mi in range(m):
-                    qs = qr[mi * sub:(mi + 1) * sub]
-                    ent.append(np.round(
-                        (qs @ qs) - 2.0 * (rcb[mi] @ qs) + rss[mi],
-                        SCORE_ROUND,
-                    ))
-                lut[(j, cp)] = ent
+        def score(pdf):
+            X = topk.matrix(pdf[vec_col])
+            pos = assign_pos(X)
+            codes = _pq_codes(X - CC[pos], books, sq, sub)
+            adc = np.zeros((len(X), len(Q)))
+            for p, lut in enumerate(luts):
+                adc = np.where(pos[:, None] == pidx[None, :, p],
+                               _adc(codes, lut), adc)
+            return adc, topk.probe_mask(pos, pidx)
 
-        def fn(batches):
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                X = np.array(pdf[vec_col].tolist(), dtype=np.float64)
-                c_ids = pdf[id_col].to_numpy()
-                pos = assign_pos(X)
-                R = X - CC[pos]
-                code_idx = np.empty((len(c_ids), m), dtype=np.int64)
-                for mi in range(m):
-                    S = R[:, mi * sub:(mi + 1) * sub]
-                    d2 = np.round(
-                        (S * S).sum(axis=1)[:, None]
-                        - 2.0 * (S @ rcb[mi].T) + rss[mi][None, :],
-                        SCORE_ROUND,
-                    )
-                    code_idx[:, mi] = d2.argmin(axis=1)  # lowest code
-                qi, ci, dv = [], [], []
-                for j in range(len(q_ids)):
-                    sel_rows, sel_adc = [], []
-                    for p in range(take):
-                        cp = int(pidx[j, p])
-                        rows = np.flatnonzero(pos == cp)
-                        if not len(rows):
-                            continue
-                        ent = lut[(j, cp)]
-                        adc = np.zeros(len(rows))
-                        for mi in range(m):
-                            adc += ent[mi][code_idx[rows, mi]]
-                        sel_rows.append(rows)
-                        sel_adc.append(np.round(adc, SCORE_ROUND))
-                    if not sel_rows:
-                        continue
-                    rows = np.concatenate(sel_rows)
-                    adc = np.concatenate(sel_adc)
-                    order = np.lexsort((c_ids[rows], adc))[:k]
-                    qi.append(np.full(len(order), j, dtype=np.int64))
-                    ci.append(rows[order])
-                    dv.append(adc[order])
-                if not qi:
-                    continue
-                qi = np.concatenate(qi)
-                yield pd.DataFrame({
-                    "q_id": q_ids[qi],
-                    "c_id": c_ids[np.concatenate(ci)],
-                    "adc_dist": np.concatenate(dv),
-                })
-
-        pairs = emb.select(id_col, vec_col).mapInPandas(fn, out_schema)
-    w = Window.partitionBy("q_id").orderBy(F.asc("adc_dist"), F.asc("c_id"))
-    return (
-        pairs.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
+    return topk.scan_topk(
+        emb.select(id_col, vec_col), k, out_schema, score,
+        {"q_id": np.array([r[0] for r in qrows])}, {"c_id": id_col},
+        "adc_dist", desc=False,
     )
 
 
@@ -2289,22 +2007,14 @@ def hard_negatives(emb: DataFrame, k: int, n_queries: int,
     pipeline (in-batch negatives' offline counterpart).
 
     Scale shape: identical to knn_join — the bounded query set is
-    broadcast, the corpus streams once, the label filter lands BEFORE
-    the rank window so per-query state stays k rows. Self-pairs are
-    excluded by the label inequality itself.
+    collected to the driver, the corpus streams once, and the label
+    filter is the scan's keep-mask, applied BEFORE the per-batch top-k
+    so per-query state stays k rows. Self-pairs are excluded by the
+    label inequality itself.
 
     Output: q_id, q_label, c_id, c_label, cos_sim, rank.
-
-    r14: one Arrow-GEMM pass (the knn_join / knn_classify shape) with
-    the bounded query set collected to the driver — each scan batch
-    drops same-label candidates, then emits its LOCAL top-k per query
-    by the exact global ordering (rounded sim desc, c_id asc), a
-    superset of the global top-k; the unchanged final window ranks
-    Q x k x n_batches candidate rows instead of the filtered N x Q
-    pair set.
     """
     import numpy as np
-    import pandas as pd
     from pyspark.sql import types as T
 
     queries = emb.where(F.col(id_col) < n_queries).select(
@@ -2319,53 +2029,19 @@ def hard_negatives(emb: DataFrame, k: int, n_queries: int,
         T.StructField("c_label", emb.schema[label_col].dataType),
         T.StructField("cos_sim", T.DoubleType()),
     ])
-    qrows = sorted(queries.collect(), key=lambda r: r["q_id"])
-    if not qrows:
-        pairs = emb.sparkSession.createDataFrame([], out_schema)
-    else:
-        Qm = np.array([[float(x) for x in r["q_vec"]] for r in qrows],
-                      dtype=np.float64)
-        q_ids = np.array([r["q_id"] for r in qrows])
-        q_labels = np.array([r["q_label"] for r in qrows])
-        qnorm = np.sqrt((Qm * Qm).sum(axis=1))
+    qrows = topk.collect_queries(queries, "q_id")
+    Q = topk.matrix(r["q_vec"] for r in qrows)
+    q_labels = np.array([r["q_label"] for r in qrows])
 
-        def fn(batches):
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                X = np.array(pdf[vec_col].tolist(), dtype=np.float64)
-                c_ids = pdf[id_col].to_numpy()
-                c_labels = pdf[label_col].to_numpy()
-                sims = np.round(
-                    (X @ Qm.T)
-                    / (np.sqrt((X * X).sum(axis=1))[:, None]
-                       * qnorm[None, :]),
-                    SCORE_ROUND,
-                )
-                qi, ci = [], []
-                for j in range(len(q_ids)):
-                    keep = np.flatnonzero(c_labels != q_labels[j])
-                    order = np.lexsort(
-                        (c_ids[keep], -sims[keep, j]))[:k]
-                    sel = keep[order]
-                    qi.append(np.full(len(sel), j, dtype=np.int64))
-                    ci.append(sel)
-                qi = np.concatenate(qi)
-                ci = np.concatenate(ci)
-                yield pd.DataFrame({
-                    "q_id": q_ids[qi],
-                    "q_label": q_labels[qi],
-                    "c_id": c_ids[ci],
-                    "c_label": c_labels[ci],
-                    "cos_sim": sims[ci, qi],
-                })
+    def score(pdf):
+        c_labels = pdf[label_col].to_numpy()
+        return (topk.rounded_cosine(topk.matrix(pdf[vec_col]), Q),
+                c_labels[:, None] != q_labels[None, :])
 
-        pairs = emb.select(id_col, vec_col, label_col).mapInPandas(
-            fn, out_schema)
-    w = Window.partitionBy("q_id").orderBy(F.desc("cos_sim"), F.asc("c_id"))
-    return (
-        pairs.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
+    return topk.scan_topk(
+        emb.select(id_col, vec_col, label_col), k, out_schema, score,
+        {"q_id": np.array([r["q_id"] for r in qrows]), "q_label": q_labels},
+        {"c_id": id_col, "c_label": label_col}, "cos_sim", desc=True,
     )
 
 

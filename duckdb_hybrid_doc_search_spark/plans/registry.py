@@ -63,163 +63,23 @@ def bench_queries() -> dict[str, SparkQuery]:
 # round the change landed in: the flag SELF-CLEARS once a driver row from
 # that round (or later) comes back green, so stale entries stop costing
 # window slots without per-round manual cleanup.
-RECHECK: dict[str, int] = {
-    # (r4 entries — HUGEINT-cast fixes and the distributed_ntile rewrite —
-    # all came back green in CORRECTNESS_r04 and self-cleared.)
-    # bm25 probes: round 5 moved the layout fingerprint off the per-probe
-    # path (index/fts_layout.py memo) — re-verify the probe results.
-    "bm25_topk": 5,
-    "bm25_batch_topk": 5,
-    # round 5 capped per-basket fan-out (operators/mining.py BASKET_CAP)
-    "basket_part_pairs": 5,
-    # round 5 added edge-shape fixtures (setext/closers/CRLF/HTML-block/
-    # tilde) — the registered result set grew; re-verify vs the oracle
-    "markdown_chunk_fixtures": 5,
-    # round 5 single-levenshtein rewrite (operators/mining.py spell_suggest)
-    "search_spell_suggest": 5,
-    # round 6: `types` now leaves the plan as array_join CSV (both sides)
-    # so the driver's pandas canonicalizer can sort/hash the frame — the
-    # raw array<string> column was CORRECTNESS_r05's one red row.
-    "part_type_arrays": 6,
-    # round 7: IVF centroid sets capped at fixed CENTROID_K
-    # (knn.centroid_pred) and SemDeDup moved to k ~ sqrt(N) centroids
-    # (dedup.semdedup_mod) — the r6 VERDICT #1 scale fix. At the
-    # driver's sf0.01 the IVF cap is inactive (max vec_id 499 < MOD*K =
-    # 800) so those results are value-identical; SemDeDup's centroid set
-    # genuinely changed. Every query whose assignment/oracle formula
-    # changed re-verifies:
-    "ann_ivf_topk": 7,
-    "ann_ivf_recall": 7,
-    "ann_ivf_nprobe_curve": 7,
-    "ann_ivf_append_probe": 7,
-    "ann_ivfpq_topk": 7,
-    "ann_ivfpq_residual_topk": 7,
-    "ann_ivfpq_recall": 7,
-    "ann_ivfpq_layout_probe": 7,
-    "ann_sq8_layout_probe": 7,   # layout gained the _LAYOUT_DONE sentinel
-    "dedup_semantic_cells": 8,   # r8: oracle stride now EXACT integer
-    # sqrt (r7 ADVICE: floor(sqrt()) in double could diverge from
-    # math.isqrt at boundary counts) — value-identical at sf0.01, but
-    # the oracle text changed so re-verify
-    "hybrid_search_ivf_fused": 7,
-    # r8 (r7 ADVICE medium): Gopher bullet-line gate corrected to the
-    # paper's >90% removal rule (was >10%), symbol ratio split per
-    # symbol, and the "top" n-gram picked by max COUNT (tie-break longer
-    # gram) instead of max character mass. Both queries have no driver
-    # row yet (were defer_gate) so RECHECK is belt-and-braces.
-    "text_gopher_quality": 8,
-    # (text_gopher_repetition's r8 entry superseded by the r9 one below)
-    # r9 (r8 VERDICT #5): _incremental_decide's exact tier restructured
-    # (fp window + is_exact column instead of a re-joined id set; three
-    # broadcast-build distincts dropped) — value-identical, but the
-    # plan changed for both store-probe forms
-    "dedup_incremental_batch": 9,
-    "dedup_incremental_layout_probe": 9,
-    # r9 (r8 VERDICT #2): the last three seeded-stand-in media rows
-    # re-registered over REAL bytes — features/resize run the
-    # magic-byte auto_pure seam over the mixed PNG+BMP corpus, video
-    # frames demux+decode the concatenated-BMP containers; all three
-    # gained formula oracles (were rows-only since r2)
-    "media_image_features": 9,
-    "media_resize_images": 9,
-    "media_video_frames": 9,
-    # r9 (r8 VERDICT #3): most-frequent-gram max now packs (cnt, glen)
-    # into one long on both sides (was struct max) — value-identical
-    # order, but both the plan and the oracle text changed; the funnel
-    # composes the same aggregate
-    "text_gopher_repetition": 9,
-    "corpus_filter_funnel": 9,
-    # r9: GIF joined the mixed-format dispatch row (third codec in the
-    # union oracle; operator now dispatches gif payloads too)
-    "media_mixed_decode_stats": 9,
-    # r9 (r8 VERDICT #6): three layout rows upgraded from rows-only to
-    # oracle-gated — compaction dropped the writer-dependent byte count
-    # from its output, the prune layout now writes one file per year
-    # dir (repartition by o_year), and the shard export's file counts
-    # are pinned to the ceil(n/maxRecordsPerFile) formula
-    "corpus_write_shards": 9,
-    "lineitem_compaction_stats": 9,
-    "orders_partition_prune_stats": 9,
-    # r9 (r8 VERDICT #4): the streaming ingestion-dedup loop's decisions
-    # now land in a batch-id-keyed parquet sink (driver dict removed)
-    # and appends key on the micro-batch id — value-identical, but the
-    # executed path changed
-    "streaming_incremental_dedup": 9,
-    # r10 (r9 VERDICT #1): IVF nlist is now DERIVED from the corpus
-    # count at build time (knn.derive_nlist ~ sqrt(N), floor 16) and
-    # frozen in the layout meta, replacing the global CENTROID_K=16 —
-    # at the driver's sf0.01 (5000 vectors) nlist is 70, so every IVF
-    # centroid set, cell assignment, and probe result genuinely changes
-    # (verified vs the updated oracles at sf0.01 before registering)
-    "ann_ivf_topk": 10,
-    "ann_ivf_recall": 10,
-    "ann_ivf_nprobe_curve": 10,
-    "ann_ivf_append_probe": 10,
-    "ann_ivfpq_topk": 10,
-    "ann_ivfpq_residual_topk": 10,
-    "ann_ivfpq_recall": 10,
-    "ann_ivfpq_layout_probe": 10,
-    "ann_ivfpq_append_probe": 10,
-    "hybrid_search_ivf_fused": 10,
-    # r10: decide_batch_against_store pins bfp/bsig via localCheckpoint
-    # for one-shot callers (the r9 advisor fix had traded the cache
-    # leak for a per-consumer minhash recompute) — value-identical,
-    # but the executed path changed for both store-probe forms
-    "dedup_incremental_batch": 10,
-    "dedup_incremental_layout_probe": 10,
-    # r10: folded-store probes short-circuit through segment_fts_index's
-    # probe_only scored-table memo — value-identical, but the probe
-    # plan construction changed after the query was registered, so pull
-    # it into this round's window instead of the deferred r11 slot
-    "bm25_folded_layout_probe": 10,
-    # r11 (r10 VERDICT #6): GIF disposal method 3 (restore-to-previous)
-    # implemented; the gifanim fixture corpus gained restore.gif, so the
-    # registered result set grew by three composited-frame rows
-    "media_gif_frames": 11,
-    # r11: the nprobe curve now reads the persisted layout's stored
-    # assignment (two-column scan) instead of the in-plan O(N x nlist)
-    # crossJoin — value-identical (append-equivalence contract), plan
-    # changed
-    "ann_ivf_nprobe_curve": 11,
-    # r11 (self-review): ivf_partitioned_topk now delegates to
-    # ivf_frozen_layout_topk (probe reads the _centroids side table
-    # instead of re-deriving via ivf_assign) — value-identical, plan
-    # changed for both layout-probe queries
-    "ann_ivf_topk": 11,
-    "ann_ivf_append_probe": 11,
-    # r12 (r11 VERDICT #2): dedup_embedding_ivf widened to top-2
-    # multi-probe cell assignment (written layout + oracle rn <= 2 +
-    # DISTINCT) — the result SET genuinely grows (boundary pairs
-    # recovered), so the r11 green row no longer covers it
-    "dedup_embedding_ivf": 12,
-    # r12 (r11 VERDICT #6): the stdlib baseline JPEG codec landed —
-    # the three JPEG fixtures joined the mixed-format corpus, so all
-    # three mixed rows' result sets grow (new fixture rows + new
-    # oracle CTEs)
-    "media_image_features": 12,
-    "media_resize_images": 12,
-    "media_mixed_decode_stats": 12,
-    # r13 (r12 VERDICT #4): the BPE trainer applies batches of
-    # provably non-interacting merges per pass (bpe._select_merge_batch)
-    # — merge table pinned identical to sequential at 256 merges, but
-    # the executed path changed
-    "text_bpe_train": 13,
-    # r13 (r12 ADVICE): dedup_components_star confirms its fixpoint
-    # with an exact exceptAll identity check — value-identical, one
-    # extra bounded join in the executed path
-    "dedup_components_star": 13,
-    # r13 (r12 VERDICT #5): multi-probe width widened 2 -> 3
-    # (DEDUP_IVF_NPROBE) after the recall/cost sweep — recall 0.71 ->
-    # 0.92 at sf0.01; the result SET genuinely grows, so the r12 green
-    # row no longer covers it (oracle mirrors with rn <= 3)
-    "dedup_embedding_ivf": 13,
-    # r13: the three PROGRESSIVE JPEG fixtures joined the mixed-format
-    # corpus (SOF2 decode landed), so all three mixed rows' result sets
-    # grow again — same shape as the r12 baseline-JPEG entries
-    "media_image_features": 13,
-    "media_resize_images": 13,
-    "media_mixed_decode_stats": 13,
-}
+# Round 16: every GEMM top-k site moved onto the one Arrow top-k kernel
+# (functions/topk.py) — value-identical, executed path changed.
+RECHECK: dict[str, int] = dict.fromkeys([
+    "ann_brute_topk", "ann_filtered_topk", "ann_hnsw_recall",
+    "ann_ivf_append_probe", "ann_ivf_kmeans_recall",
+    "ann_ivf_nprobe_curve", "ann_ivf_recall", "ann_ivf_topk",
+    "ann_ivf_trained_recall", "ann_ivfpq_recall",
+    "ann_ivfpq_residual_topk", "ann_ivfpq_topk", "ann_pq_recall",
+    "ann_pq_rescore_recall", "ann_sq8_recall",
+    "embeddings_hard_negatives", "embeddings_knn_classify",
+    "embeddings_matryoshka_recall", "hybrid_search_batch",
+    "hybrid_search_batch_reranked", "search_rank_agreement",
+    "streaming_ivf_append",
+    # ... and the PQ encode shared with it builds the IVF-PQ layouts
+    "ann_ivfpq_append_probe", "ann_ivfpq_layout_probe", "ann_pq_topk",
+    "ann_pq_rescore_topk",
+], 16)
 
 
 def _check_history() -> dict[str, tuple[int, bool, str | None]]:

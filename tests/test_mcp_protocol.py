@@ -351,6 +351,25 @@ def test_http_parse_error_and_protocol_errors():
         assert st == 404
 
 
+def test_http_bad_content_length_is_refused_before_reading():
+    """A negative or non-numeric Content-Length gets 400 and one above
+    MAX_BODY_BYTES gets 413 — without the server waiting for a body the
+    client never sends (rfile.read(-1) blocks on a keep-alive socket)."""
+    from duckdb_hybrid_doc_search_spark.mcp_http import MAX_BODY_BYTES
+
+    with _http_server() as port:
+        for length, status in (("-1", 400), ("abc", 400),
+                               (str(MAX_BODY_BYTES + 1), 413)):
+            conn = http.client.HTTPConnection("127.0.0.1", port, timeout=10)
+            conn.putrequest("POST", "/mcp")
+            conn.putheader("Content-Length", length)
+            conn.endheaders()
+            r = conn.getresponse()
+            body = json.loads(r.read())
+            conn.close()
+            assert r.status == status and "error" in body
+
+
 def test_http_subprocess_round_trip(mcp_index):
     """REAL subprocess drive of `cli serve --transport streamable-http`:
     the built-in HTTP transport serves actual search results end-to-end
