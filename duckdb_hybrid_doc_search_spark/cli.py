@@ -49,9 +49,13 @@ def cmd_search(args: argparse.Namespace) -> int:
 
     engine = DocSearchEngine(_spark(), args.db, args.embedding_model)
     if len(args.query) > 1:
-        # bulk mode: all queries in one pair of Spark plans
+        # bulk mode: all queries in one Spark plan
         batches = engine.search_batch(
-            args.query, top_k=args.top_k, rerank=not args.no_rerank
+            args.query,
+            top_k=args.top_k,
+            rerank=not args.no_rerank,
+            add_prefix=args.add_path_prefix,
+            remove_prefix=args.remove_path_prefix,
         )
         print(
             json.dumps(

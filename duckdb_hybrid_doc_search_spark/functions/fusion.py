@@ -10,10 +10,12 @@ NULL on a branch means "not found by that branch" (§2.6.2).
 
 from __future__ import annotations
 
-from pyspark.sql import Column
+from collections.abc import Sequence
+
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..config import FUSION_WEIGHT_SINGLE
+from ..config import FUSION_WEIGHT_SINGLE, SCORE_ROUND
 
 
 def fuse_scores(fts: Column, vss: Column) -> Column:
@@ -23,6 +25,18 @@ def fuse_scores(fts: Column, vss: Column) -> Column:
         .when(fts.isNotNull(), fts * w)
         .when(vss.isNotNull(), vss * w)
         .otherwise(F.lit(0.0))
+    )
+
+
+def fuse(fts: DataFrame, vss: DataFrame, keys: str | Sequence[str]
+         ) -> DataFrame:
+    """The candidate merge (Q5/Q7) and fusion (Q8): the full-outer join of
+    the two branch top-k sets (``fts_score`` / ``vss_score`` columns) on
+    ``keys``, plus the fused ``score`` rounded at SCORE_ROUND."""
+    return fts.join(vss, keys, "full_outer").withColumn(
+        "score",
+        F.round(fuse_scores(F.col("fts_score"), F.col("vss_score")),
+                SCORE_ROUND),
     )
 
 

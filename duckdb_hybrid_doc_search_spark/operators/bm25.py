@@ -147,16 +147,23 @@ def bm25_scores(index: dict[str, DataFrame], query_terms: list[str]) -> DataFram
     )
 
 
+def bm25_topk_terms(index: dict[str, DataFrame], query_terms: list[str],
+                    k: int, allowed: DataFrame | None = None) -> DataFrame:
+    """(doc_id, score) top-k of one query's term list: score descending,
+    ties to the lower doc_id (one TakeOrderedAndProject). ``allowed`` (a
+    doc_id frame) restricts the candidates before the top-k."""
+    scores = bm25_scores(index, query_terms)
+    if allowed is not None:
+        scores = scores.join(allowed, "doc_id", "left_semi")
+    return scores.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+
+
 def bm25_topk_from_index(index: dict[str, DataFrame], query: str,
                          k: int) -> DataFrame:
     """BM25 top-k against a prebuilt index dict (in-plan or written layout)."""
     from ..models.tokenizer import tokenize_query
 
-    return (
-        bm25_scores(index, tokenize_query(query))
-        .orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(k)
-    )
+    return bm25_topk_terms(index, tokenize_query(query), k)
 
 
 def bm25_topk(docs: DataFrame, query: str, k: int,
@@ -166,10 +173,11 @@ def bm25_topk(docs: DataFrame, query: str, k: int,
                                 query, k)
 
 
-def bm25_batch_topk_from_index(index: dict[str, DataFrame],
-                               queries: list[str], k: int) -> DataFrame:
+def bm25_batch_topk_terms(index: dict[str, DataFrame],
+                          query_terms: list[list[str]], k: int) -> DataFrame:
     """Score MANY queries against the corpus in ONE plan — the bulk path
     the reference cannot express (it loops one DuckDB probe per query).
+    ``query_terms[i]`` is query i's term list (the caller's analyzer).
 
     The query set becomes a tiny broadcast (query_id, term) table joined
     into postings; one groupBy (query_id, doc_id) scores everything, one
@@ -181,15 +189,13 @@ def bm25_batch_topk_from_index(index: dict[str, DataFrame],
     """
     from pyspark.sql import Window
 
-    from ..models.tokenizer import tokenize_query
-
     # probe_only index dicts carry only postings_scored — derive the
     # session from whatever table is present (all that _matched needs)
     spark = next(iter(index.values())).sparkSession
     qrows = [
         (qi, t)
-        for qi, q in enumerate(queries)
-        for t in sorted(set(tokenize_query(q)))
+        for qi, terms in enumerate(query_terms)
+        for t in sorted(set(terms))
     ]
     qterms = spark.createDataFrame(qrows, "query_id int, term string")
     all_terms = sorted({t for _, t in qrows})
@@ -206,6 +212,17 @@ def bm25_batch_topk_from_index(index: dict[str, DataFrame],
     return (
         scored.withColumn("rank", F.row_number().over(w))
         .where(F.col("rank") <= k)
+    )
+
+
+def bm25_batch_topk_from_index(index: dict[str, DataFrame],
+                               queries: list[str], k: int) -> DataFrame:
+    """:func:`bm25_batch_topk_terms` of query strings, tokenized by the
+    regex analyzer."""
+    from ..models.tokenizer import tokenize_query
+
+    return bm25_batch_topk_terms(
+        index, [tokenize_query(q) for q in queries], k
     )
 
 

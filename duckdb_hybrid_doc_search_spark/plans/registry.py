@@ -79,6 +79,14 @@ RECHECK: dict[str, int] = dict.fromkeys([
     # ... and the PQ encode shared with it builds the IVF-PQ layouts
     "ann_ivfpq_append_probe", "ann_ivfpq_layout_probe", "ann_pq_topk",
     "ann_pq_rescore_topk",
+    # ... and the hybrid search steps moved into shared functions (BM25
+    # top-k by term list, functions/fusion.fuse, the batch candidate plan
+    # and the single-query fetch/threshold tail in search/engine.py)
+    "bm25_batch_topk", "bm25_folded_layout_probe",
+    "bm25_incremental_layout_probe", "bm25_topk", "hybrid_search_bpe_fused",
+    "hybrid_search_filtered", "hybrid_search_fused",
+    "hybrid_search_ivf_fused", "hybrid_search_reranked", "part_name_bm25",
+    "search_snippets", "streaming_fts_segment_append",
 ], 16)
 
 

@@ -19,15 +19,16 @@ from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from ..config import SCORE_ROUND, SCORE_THRESHOLD, TOP_K_DEFAULT
-from ..functions.fusion import fuse_scores
-from ..functions.vector import cosine_distance, lit_vector
+from ..functions import topk
+from ..functions.fusion import fuse
 from ..models.embedder import hash_embed_text
 from ..models.reranker import cross_encoder_scores
 from ..models.tokenizer import tokenize_query
-from ..operators.bm25 import bm25_scores
+from ..operators.bm25 import bm25_topk_terms
 from ..operators.chunker_core import add_path_prefix, trim_path_prefix
+from ..operators.knn import cosine_distance_topk
 from ..utils import round_half_up
-from .engine import DISPLAY_COLS  # noqa: F401  (kept for API symmetry)
+from .engine import batch_candidates
 
 RESULT_FIELDS = ("doc_id", "file_path", "header_path", "line_start",
                  "line_end", "content", "score", "fts_score", "vss_score")
@@ -87,44 +88,70 @@ class DocSearchEngine:
         except ImportError:
             return hash_embed_text(query, self.dim)
 
+    def _query_terms(self, query: str) -> list[str]:
+        # the index's own analyzer (tokenizer identity, SURVEY.md §2.6.5)
+        return tokenize_query(query, backend=self.meta.get("tokenizer",
+                                                           "jp_heuristic"))
+
     def search(self, query: str, top_k: int = TOP_K_DEFAULT,
                rerank: bool = True,
                add_prefix: str | None = None,
                remove_prefix: str | None = None) -> list[dict[str, Any]]:
-        qterms = tokenize_query(query, backend=self.meta.get("tokenizer",
-                                                            "jp_heuristic"))
-        qvec = self._embed_query(query)
+        qterms = self._query_terms(query)
+        fts = bm25_topk_terms(self.index, qterms, top_k).withColumnRenamed(
+            "score", "fts_score")
+        vss = cosine_distance_topk(self.embeddings, self._embed_query(query),
+                                   top_k, id_col="doc_id")
+        rows = fuse(fts, vss, "doc_id").join(self.documents, "doc_id").select(
+            *RESULT_FIELDS).collect()
+        return self._finish(query, qterms, [r.asDict() for r in rows], top_k,
+                            rerank, add_prefix, remove_prefix)
 
-        fts = (
-            bm25_scores(self.index, qterms)
-            .orderBy(F.desc("score"), F.asc("doc_id"))
-            .limit(top_k)
-            .withColumnRenamed("score", "fts_score")
-        )
-        vss = (
-            self.embeddings.select(
-                "doc_id",
-                F.round(
-                    cosine_distance(F.col("embedding"), lit_vector(qvec)),
-                    SCORE_ROUND,
-                ).alias("vss_score"),
+    def search_batch(self, queries: list[str], top_k: int = TOP_K_DEFAULT,
+                     rerank: bool = True,
+                     add_prefix: str | None = None,
+                     remove_prefix: str | None = None
+                     ) -> list[list[dict[str, Any]]]:
+        """Bulk search: every query scored by ONE Spark plan and one
+        collect. The candidates come from search/engine.batch_candidates,
+        the plan hybrid_search_batch runs (batched BM25, one Arrow top-k
+        scan of the embeddings, fusion on (query_id, doc_id)), over the
+        persisted index; one broadcast join against documents fetches the
+        result fields. The collect is at most 2 * top_k * len(queries)
+        rows. Rerank, threshold, top-k and the path prefixes then run per
+        query through search()'s own tail, so results match per-query
+        `search()` exactly.
+
+        Raises ValueError above functions/topk.MAX_QUERIES queries,
+        before any Spark work."""
+        if len(queries) > topk.MAX_QUERIES:
+            raise ValueError(
+                f"search_batch takes at most MAX_QUERIES={topk.MAX_QUERIES}"
+                f" queries, got {len(queries)}; split the batch"
             )
-            .orderBy(F.asc("vss_score"), F.asc("doc_id"))
-            .limit(top_k)
-        )
-        fused = fts.join(vss, "doc_id", "full_outer").withColumn(
-            "score",
-            F.round(fuse_scores(F.col("fts_score"), F.col("vss_score")),
-                    SCORE_ROUND),
-        )
-        rows = [
-            r.asDict()
-            for r in fused.join(self.documents, "doc_id").select(
-                *[c for c in RESULT_FIELDS if c not in ("score",)],
-                "score",
-            ).collect()
+        if not queries:
+            return []
+        qterms = [self._query_terms(q) for q in queries]
+        Q = topk.matrix(self._embed_query(q) for q in queries)
+        cands = batch_candidates(self.index, self.embeddings, qterms, Q,
+                                 top_k, id_col="doc_id")
+        rows: list[list[dict[str, Any]]] = [[] for _ in queries]
+        for r in F.broadcast(cands).join(self.documents, "doc_id").select(
+                "query_id", *RESULT_FIELDS).collect():
+            d = r.asDict()
+            rows[d.pop("query_id")].append(d)
+        return [
+            self._finish(q, t, r, top_k, rerank, add_prefix, remove_prefix)
+            for q, t, r in zip(queries, qterms, rows)
         ]
 
+    def _finish(self, query: str, qterms: list[str],
+                rows: list[dict[str, Any]], top_k: int, rerank: bool,
+                add_prefix: str | None, remove_prefix: str | None
+                ) -> list[dict[str, Any]]:
+        """Q10-Q13 of one query on the driver: rerank, sort, threshold,
+        limit, then the path-prefix rewrite and the RESULT_FIELDS
+        projection."""
         if rerank and rows:
             rows = self._rerank(query, qterms, rows)
         rows.sort(key=lambda r: (-r["score"], r["doc_id"]))
@@ -133,148 +160,6 @@ class DocSearchEngine:
             p = trim_path_prefix(r["file_path"], remove_prefix)
             r["file_path"] = add_path_prefix(p, add_prefix)
         return [{k: r[k] for k in RESULT_FIELDS} for r in rows]
-
-    def search_batch(self, queries: list[str], top_k: int = TOP_K_DEFAULT,
-                     rerank: bool = True) -> list[list[dict[str, Any]]]:
-        """Bulk search: ALL queries scored in one pair of Spark plans.
-
-        FTS side = one batched postings probe (operators/bm25.bm25_batch_topk
-        structure over the persisted index); VSS side = one broadcast
-        knn_join of the query-vector batch against the embeddings table.
-        The reference answers a batch by looping its per-query probe; here
-        per-query marginal cost is ~zero once the scan is paid — the shape
-        that matters when re-ranking training corpora against thousands of
-        probes. Results match per-query `search()` exactly.
-        """
-        from pyspark.sql import Window
-
-        tok_backend = self.meta.get("tokenizer", "jp_heuristic")
-        qterm_rows = [
-            (qi, t)
-            for qi, q in enumerate(queries)
-            for t in sorted(set(tokenize_query(q, backend=tok_backend)))
-        ]
-        spark = self.spark
-        all_terms = sorted({t for _, t in qterm_rows})
-
-        # FTS branch, batched
-        postings = self.index["postings"].where(F.col("term").isin(all_terms))
-        docfreq = self.index["docfreq"].where(F.col("term").isin(all_terms))
-        from ..config import BM25_B, BM25_K1
-
-        if qterm_rows:
-            qterms_df = spark.createDataFrame(
-                qterm_rows, "query_id int, term string"
-            )
-            scored = (
-                postings.join(F.broadcast(qterms_df), "term")
-                .join(F.broadcast(docfreq), "term")
-                .join(self.index["docstats"], "doc_id")
-                .crossJoin(F.broadcast(self.index["corpus_stats"]))
-                .withColumn(
-                    "contrib",
-                    F.log(
-                        F.lit(1.0)
-                        + (F.col("n_docs") - F.col("df") + F.lit(0.5))
-                        / (F.col("df") + F.lit(0.5))
-                    )
-                    * F.col("tf") * F.lit(BM25_K1 + 1.0)
-                    / (
-                        F.col("tf")
-                        + F.lit(BM25_K1)
-                        * (F.lit(1.0 - BM25_B)
-                           + F.lit(BM25_B) * F.col("dl") / F.col("avgdl"))
-                    ),
-                )
-                .groupBy("query_id", "doc_id")
-                .agg(F.round(F.sum("contrib"), SCORE_ROUND).alias("fts_score"))
-            )
-            wf = Window.partitionBy("query_id").orderBy(
-                F.desc("fts_score"), F.asc("doc_id")
-            )
-            fts = (
-                scored.withColumn("rn", F.row_number().over(wf))
-                .where(F.col("rn") <= top_k)
-                .select("query_id", "doc_id", "fts_score")
-            )
-            fts_rows = fts.collect()
-        else:
-            fts_rows = []
-
-        # VSS branch, batched: broadcast the query-vector batch against the
-        # embeddings scan; round the DISTANCE once, exactly like the
-        # single-query path (rounding a rounded similarity double-rounds
-        # and diverges in the last digit).
-        qvecs = spark.createDataFrame(
-            [(qi, self._embed_query(q)) for qi, q in enumerate(queries)],
-            "query_id int, q_vec array<float>",
-        )
-        pair_dist = self.embeddings.crossJoin(F.broadcast(qvecs)).select(
-            "query_id",
-            "doc_id",
-            F.round(
-                cosine_distance(F.col("q_vec"), F.col("embedding")),
-                SCORE_ROUND,
-            ).alias("vss_score"),
-        )
-        wv = Window.partitionBy("query_id").orderBy(
-            F.asc("vss_score"), F.asc("doc_id")
-        )
-        vss_rows = (
-            pair_dist.withColumn("rn", F.row_number().over(wv))
-            .where(F.col("rn") <= top_k)
-            .select("query_id", "doc_id", "vss_score")
-            .collect()
-        )
-
-        # fuse + fetch + rerank per query, driver-side over <=2k rows/query
-        by_q_fts: dict[int, dict] = {}
-        for r in fts_rows:
-            by_q_fts.setdefault(r.query_id, {})[r.doc_id] = r.fts_score
-        by_q_vss: dict[int, dict] = {}
-        for r in vss_rows:
-            by_q_vss.setdefault(r.query_id, {})[r.doc_id] = r.vss_score
-
-        all_ids = sorted(
-            {d for m in by_q_fts.values() for d in m}
-            | {d for m in by_q_vss.values() for d in m}
-        )
-        docs = {
-            r["doc_id"]: r.asDict()
-            for r in self.documents.where(
-                F.col("doc_id").isin(all_ids)
-            ).collect()
-        }
-
-        out: list[list[dict[str, Any]]] = []
-        for qi, q in enumerate(queries):
-            fts_m = by_q_fts.get(qi, {})
-            vss_m = by_q_vss.get(qi, {})
-            rows = []
-            for doc_id in set(fts_m) | set(vss_m):
-                f, v = fts_m.get(doc_id), vss_m.get(doc_id)
-                score = (
-                    round_half_up((f + v) / 2.0, SCORE_ROUND)
-                    if f is not None and v is not None
-                    else round_half_up(
-                        (f if f is not None else v) * 0.8, SCORE_ROUND
-                    )
-                )
-                rows.append(
-                    {
-                        **docs[doc_id],
-                        "score": score,
-                        "fts_score": f,
-                        "vss_score": v,
-                    }
-                )
-            if rerank and rows:
-                qterms = tokenize_query(q, backend=tok_backend)
-                rows = self._rerank(q, qterms, rows)
-            rows.sort(key=lambda r: (-r["score"], r["doc_id"]))
-            rows = [r for r in rows if r["score"] > SCORE_THRESHOLD][:top_k]
-            out.append([{k: r[k] for k in RESULT_FIELDS} for r in rows])
-        return out
 
     def _rerank(self, query: str, qterms: list[str],
                 rows: list[dict[str, Any]]) -> list[dict[str, Any]]:

@@ -19,18 +19,21 @@ top-k AND final top-k.
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..config import SCORE_ROUND, SCORE_THRESHOLD, TOP_K_DEFAULT
 from ..functions import topk
-from ..functions.fusion import dd_fuse_scores, fuse_scores
+from ..functions.fusion import dd_fuse_scores, fuse
 from ..functions.vector import cosine_distance, lit_vector
 from ..models.embedder import hash_embed_text
 from ..models.reranker import dd_overlap_rerank, overlap_rerank_expr
 from ..models.tokenizer import tokenize_query
-from ..operators.bm25 import (bm25_scores, build_fts_index,
-                              dd_bm25_scored_cte, dd_fts_index_ctes)
+from ..operators.bm25 import (bm25_batch_topk_terms, bm25_topk_terms,
+                              build_fts_index, dd_bm25_scored_cte,
+                              dd_fts_index_ctes)
 from ..operators.knn import cosine_distance_topk, dd_vss_scored_cte
 
 DISPLAY_COLS = ["lang", "source"]
@@ -55,38 +58,33 @@ def hybrid_search(docs: DataFrame, embeddings: DataFrame, query: str,
     # passes the query's subword encoding — §2.6.5 tokenizer identity:
     # the index and the query must use the same analyzer)
     qterms = tokenize_query(query) if fts_qterms is None else fts_qterms
-    qvec = hash_embed_text(query)
-
-    if index is None:
-        index = build_fts_index(docs)
-    fts = bm25_scores(index, qterms)
     vss_corpus = embeddings
     if allowed is not None:
-        fts = fts.join(allowed, "doc_id", "left_semi")
         vss_corpus = embeddings.join(
             allowed.select(F.col("doc_id").alias("vec_id")), "vec_id",
             "left_semi",
         )
-    fts = (
-        fts.orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(top_k)
-        .withColumnRenamed("score", "fts_score")
-    )
-    vss = cosine_distance_topk(vss_corpus, qvec, top_k)
+    vss = cosine_distance_topk(vss_corpus, hash_embed_text(query), top_k)
+    return _fused_top(docs, index, qterms, vss, top_k, threshold, rerank,
+                      allowed)
 
-    fused = (
-        fts.join(vss, "doc_id", "full_outer")
-        .withColumn(
-            "score",
-            F.round(fuse_scores(F.col("fts_score"), F.col("vss_score")),
-                    SCORE_ROUND),
-        )
-    )
 
+def _fused_top(docs: DataFrame, index: dict[str, DataFrame] | None,
+               qterms: list[str], vss: DataFrame, top_k: int,
+               threshold: float, rerank: bool = False,
+               allowed: DataFrame | None = None) -> DataFrame:
+    """Everything of one hybrid query but its VSS branch ``vss``
+    (doc_id, vss_score): the BM25 top-k of ``qterms``, fusion, the
+    display-column fetch, the optional overlap rerank, the threshold and
+    the final top-k."""
+    if index is None:
+        index = build_fts_index(docs)
+    fts = bm25_topk_terms(index, qterms, top_k, allowed).withColumnRenamed(
+        "score", "fts_score")
     # Q6 fetch: candidate set is <=2k rows — explicit broadcast guarantees
     # the BroadcastHashJoin shape at any corpus scale (AQE would convert it
     # here, but the hint makes the plan contract unconditional).
-    out = F.broadcast(fused).join(docs, "doc_id", "inner")
+    out = F.broadcast(fuse(fts, vss, "doc_id")).join(docs, "doc_id", "inner")
     if rerank:
         out = out.withColumn(
             "score",
@@ -159,32 +157,10 @@ def hybrid_search_ivf(spark, docs: DataFrame, embeddings: DataFrame,
     BM25 probes the term-range postings_scored layout, VSS probes the
     cell-partitioned IVF layout. Fusion/threshold/ordering identical to
     :func:`hybrid_search`."""
-    from ..operators.bm25 import build_fts_index
-
-    qterms = tokenize_query(query)
-    qvec = hash_embed_text(query)
-    if index is None:
-        index = build_fts_index(docs)
-    fts = (
-        bm25_scores(index, qterms)
-        .orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(top_k)
-        .withColumnRenamed("score", "fts_score")
-    )
-    vss = ivf_vss_topk(spark, embeddings, sf_dir, qvec, top_k,
-                       layout_root=layout_root)
-    fused = fts.join(vss, "doc_id", "full_outer").withColumn(
-        "score",
-        F.round(fuse_scores(F.col("fts_score"), F.col("vss_score")),
-                SCORE_ROUND),
-    )
-    return (
-        F.broadcast(fused).join(docs, "doc_id", "inner")
-        .where(F.col("score") > F.lit(threshold))
-        .orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(top_k)
-        .select("doc_id", "score", "fts_score", "vss_score", *DISPLAY_COLS)
-    )
+    vss = ivf_vss_topk(spark, embeddings, sf_dir, hash_embed_text(query),
+                       top_k, layout_root=layout_root)
+    return _fused_top(docs, index, tokenize_query(query), vss, top_k,
+                      threshold)
 
 
 def dd_hybrid_search_ivf_sql(query: str, top_k: int = TOP_K_DEFAULT,
@@ -298,6 +274,38 @@ ORDER BY score DESC, m.doc_id ASC LIMIT {top_k}
 """.strip()
 
 
+def batch_candidates(index: dict[str, DataFrame], embeddings: DataFrame,
+                     query_terms: list[list[str]], Q: np.ndarray,
+                     top_k: int, id_col: str = "vec_id") -> DataFrame:
+    """The fused candidates of a query batch, one plan for all queries:
+    the batched BM25 top-k of each query's term list
+    (operators/bm25.bm25_batch_topk_terms) and one Arrow top-k scan of
+    ``embeddings`` (functions/topk) against the query vectors, the rows
+    of ``Q``, ordered by the rounded cosine DISTANCE ascending
+    (hybrid_search's vss_score), fused on (query_id, doc_id).
+    ``id_col`` is the embeddings id; ``doc_id`` takes its type.
+
+    Output: query_id, doc_id, fts_score, vss_score, score — at most
+    2 * top_k rows per query."""
+    fts = bm25_batch_topk_terms(index, query_terms, top_k).select(
+        "query_id", "doc_id", F.col("score").alias("fts_score")
+    )
+    schema = T.StructType([
+        T.StructField("query_id", T.IntegerType()),
+        T.StructField("doc_id", embeddings.schema[id_col].dataType),
+        T.StructField("vss_score", T.DoubleType()),
+    ])
+    vss = topk.scan_topk(
+        embeddings.select(id_col, "embedding"), top_k, schema,
+        lambda pdf: (np.round(
+            1.0 - topk.cosine(topk.matrix(pdf["embedding"]), Q), SCORE_ROUND
+        ), None),
+        {"query_id": np.arange(len(Q), dtype=np.int32)},
+        {"doc_id": id_col}, "vss_score", desc=False,
+    ).select("query_id", "doc_id", "vss_score")
+    return fuse(fts, vss, ["query_id", "doc_id"])
+
+
 def hybrid_search_batch(docs: DataFrame, embeddings: DataFrame,
                         queries: list[str],
                         top_k: int = TOP_K_DEFAULT,
@@ -305,53 +313,27 @@ def hybrid_search_batch(docs: DataFrame, embeddings: DataFrame,
                         index: dict[str, DataFrame] | None = None,
                         rerank: bool = False) -> DataFrame:
     """A whole query batch through the FULL hybrid lifecycle in ONE
-    plan — no driver-side fusion loop (unlike DocSearchEngine.
-    search_batch, whose per-query rerank forces collects): the FTS
-    side is one term-pruned postings probe scoring every query
-    (operators/bm25.bm25_batch_topk_from_index), the VSS side one
-    Arrow top-k scan of the embeddings (functions/topk),
-    fusion a composite-key full-outer join, fetch one broadcast join
-    against documents, and the per-query threshold + top-k a single
-    window. Per-query results equal hybrid_search(query) exactly (same
-    fusion/threshold/tie-break constants, same lit-vector double
-    precision) — the UNION-of-singles oracle hash-gates that equality
-    on every driver rotation, not just in pytest (r12 VERDICT #7: the
-    3.5-4.9x batch amortization lived only in PERF_NOTES).
+    plan: :func:`batch_candidates` (the candidate plan
+    DocSearchEngine.search_batch also runs), fetch one broadcast join
+    against documents, the optional token-overlap rerank in-plan, and
+    the per-query threshold + top-k a single window. Per-query results
+    equal hybrid_search(query) exactly (same fusion/threshold/tie-break
+    constants) — the UNION-of-singles oracle
+    (:func:`dd_hybrid_search_batch_sql`) hash-gates that equality.
 
     Output: query_id, doc_id, score, fts_score, vss_score + display
     columns, <= top_k rows per query."""
-    import numpy as np
     from pyspark.sql import Window
-
-    from ..operators.bm25 import bm25_batch_topk_from_index
 
     if index is None:
         index = build_fts_index(docs)
-    fts = bm25_batch_topk_from_index(index, queries, top_k).select(
-        "query_id", "doc_id", F.col("score").alias("fts_score")
-    )
-    # the VSS side: one Arrow top-k scan of the embeddings, ordered by
-    # the rounded cosine DISTANCE ascending (hybrid_search's vss_score)
+    qterms = [tokenize_query(q) for q in queries]
     Q = topk.matrix(hash_embed_text(q) for q in queries)
-    vss = topk.scan_topk(
-        embeddings.select("vec_id", "embedding"), top_k,
-        "query_id int, doc_id long, vss_score double",
-        lambda pdf: (np.round(
-            1.0 - topk.cosine(topk.matrix(pdf["embedding"]), Q), SCORE_ROUND
-        ), None),
-        {"query_id": np.arange(len(queries), dtype=np.int32)},
-        {"doc_id": "vec_id"}, "vss_score", desc=False,
-    ).select("query_id", "doc_id", "vss_score")
-    fused = fts.join(vss, ["query_id", "doc_id"], "full_outer").withColumn(
-        "score",
-        F.round(fuse_scores(F.col("fts_score"), F.col("vss_score")),
-                SCORE_ROUND),
-    )
+    fused = batch_candidates(index, embeddings, qterms, Q, top_k)
     out = F.broadcast(fused).join(docs, "doc_id", "inner")
     if rerank:
         # per-query token-overlap rerank IN-PLAN (the single path's
-        # overlap_rerank_expr with per-query term sets joined in —
-        # unlike DocSearchEngine.search_batch, no driver-side loop):
+        # overlap_rerank_expr with per-query term sets joined in):
         # score <- |distinct_tokens(text[:2048]) ∩ qterms| / |qterms|,
         # replacing the fused score BEFORE threshold/top-k, exactly as
         # hybrid_search(rerank=True) orders the steps
@@ -359,10 +341,7 @@ def hybrid_search_batch(docs: DataFrame, embeddings: DataFrame,
         from ..models.reranker import RERANK_TRUNCATE_CHARS
 
         spark = docs.sparkSession
-        qrows = [
-            (qi, sorted(set(tokenize_query(q))))
-            for qi, q in enumerate(queries)
-        ]
+        qrows = [(qi, sorted(set(t))) for qi, t in enumerate(qterms)]
         qdf = spark.createDataFrame(
             qrows, "query_id int, qterms array<string>")
         truncated = F.substring(F.col("text"), 1, RERANK_TRUNCATE_CHARS)

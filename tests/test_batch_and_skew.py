@@ -14,7 +14,8 @@ from duckdb_hybrid_doc_search_spark.search.doc_engine import DocSearchEngine
 
 FIX = str(pathlib.Path(__file__).parent.parent / "fixtures" / "docs")
 
-QUERIES = ["全文検索", "final text", "zzqxq wvvqy", "nested directory content"]
+QUERIES = ["全文検索", "final text", "zzqxq wvvqy", "nested directory content",
+           ""]
 
 
 @pytest.fixture(scope="module")
@@ -30,6 +31,19 @@ def test_batch_search_equals_per_query(engine, rerank):
     for q, got in zip(QUERIES, batch):
         want = engine.search(q, top_k=5, rerank=rerank)
         assert got == want, f"batch != single for {q!r}"
+    assert engine.search_batch([], top_k=5, rerank=rerank) == []
+
+
+def test_batch_search_rejects_oversize_batch(engine, monkeypatch):
+    from duckdb_hybrid_doc_search_spark.functions import topk
+    from duckdb_hybrid_doc_search_spark.search import doc_engine
+
+    def no_spark(*args, **kwargs):
+        raise AssertionError("planned a batch above MAX_QUERIES")
+
+    monkeypatch.setattr(doc_engine, "batch_candidates", no_spark)
+    with pytest.raises(ValueError, match="MAX_QUERIES"):
+        engine.search_batch(["q"] * (topk.MAX_QUERIES + 1))
 
 
 def test_salted_join_equals_plain_join(spark, sf_dir):

@@ -5,6 +5,7 @@ driven through the argparse entry point exactly as a user would
 from __future__ import annotations
 
 import json
+import os
 
 import pytest
 
@@ -34,11 +35,16 @@ def test_cli_search_bulk_two_queries(cli_index, capsys):
     rc = cli.main([
         "search", "--db", cli_index,
         "-q", "deep nested", "-q", "front matter",
+        "--remove-path-prefix", os.path.abspath("fixtures/docs"),
+        "--add-path-prefix", "/mnt/docs",
     ])
     assert rc == 0
     out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert len(out["batches"]) == 2
     assert out["batches"][0]["query"] == "deep nested"
+    paths = [r["file_path"] for b in out["batches"] for r in b["results"]]
+    assert paths, "expected at least one hit"
+    assert all(p.startswith("/mnt/docs/") for p in paths), paths
 
 
 def test_cli_search_top_k_bound_rejected(cli_index):
