@@ -49,7 +49,7 @@ def cmd_search(args: argparse.Namespace) -> int:
 
     engine = DocSearchEngine(_spark(), args.db, args.embedding_model)
     if len(args.query) > 1:
-        # bulk mode: all queries in one Spark plan
+        # bulk mode: one result list per query
         batches = engine.search_batch(
             args.query,
             top_k=args.top_k,

@@ -28,6 +28,18 @@ def fuse_scores(fts: Column, vss: Column) -> Column:
     )
 
 
+def fuse_value(fts: float | None, vss: float | None) -> float:
+    """:func:`fuse_scores` of one candidate on the driver (None = not
+    found by that branch), unrounded."""
+    if fts is not None and vss is not None:
+        return (fts + vss) / 2.0
+    if fts is not None:
+        return fts * FUSION_WEIGHT_SINGLE
+    if vss is not None:
+        return vss * FUSION_WEIGHT_SINGLE
+    return 0.0
+
+
 def fuse(fts: DataFrame, vss: DataFrame, keys: str | Sequence[str]
          ) -> DataFrame:
     """The candidate merge (Q5/Q7) and fusion (Q8): the full-outer join of

@@ -65,6 +65,10 @@ def make_handler(
 
     class MCPHandler(BaseHTTPRequestHandler):
         protocol_version = "HTTP/1.1"
+        # TCP_NODELAY: a response is two writes (headers, then body), and
+        # with Nagle on the body waits for the client's delayed ACK of
+        # the headers, ~40 ms on a keep-alive connection
+        disable_nagle_algorithm = True
 
         # quiet: BaseHTTPRequestHandler logs every request to stderr
         def log_message(self, fmt: str, *args: Any) -> None:

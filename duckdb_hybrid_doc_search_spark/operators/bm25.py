@@ -50,8 +50,7 @@ def build_fts_index(docs: DataFrame, id_col: str = "doc_id",
     computes only the slice it needs), and long-lived sessions get reuse
     from a WRITTEN layout instead — ``index/fts_layout.ensure_fts_layout``
     builds these tables once on disk, term-ordered, so probes read a
-    pushdown-pruned slice (the 100 TB shape). In-memory persistence lives
-    only inside DocSearchEngine, which owns a session's lifecycle.
+    pushdown-pruned slice (the 100 TB shape).
     """
     toks = tokenize_docs(docs, id_col, text_col)
     docstats = toks.select("doc_id", F.size("toks").alias("dl"))

@@ -252,8 +252,7 @@ def hybrid_search_batch_reranked(spark: SparkSession,
                                  sf_dir: str) -> DataFrame:
     """The reranked batch: per-query token-overlap rerank applied
     IN-PLAN over the batched candidates (per-query term sets joined as
-    a broadcast array column — no driver-side fusion loop, unlike
-    DocSearchEngine.search_batch), threshold and top-k after the
+    a broadcast array column), threshold and top-k after the
     rerank exactly like the single path. Oracle = UNION ALL of the
     per-query hybrid_search_reranked oracles, so the batch's rerank
     ladder is hash-gated against the singles every rotation."""

@@ -4,10 +4,16 @@ lifecycle (searcher.py:76-322) against the Parquet index tables.
 This is the product surface a reference user lands on: open an index,
 issue a query string, get ranked result dicts with the exact field set of
 searcher.py:243-255 (doc_id, file_path, header_path, line_start, line_end,
-content, score, fts_score, vss_score). All of Q3..Q13 composes into one
-lazy plan per query; the index DataFrames persist across queries in the
-session (the Spark analogue of the reference's long-lived read-only
-connection, cli.py:325).
+content, score, fts_score, vss_score).
+
+Spark builds the index; the engine serves it. Opening an engine reads the
+precomputed index tables once into a read-only driver snapshot (the
+analogue of the reference's long-lived read-only connection, cli.py:325):
+the display fields, the embedding matrix, and every posting's BM25
+contribution, computed in the JVM by the one Okapi expression
+(operators/bm25.okapi_contrib). A search is then numpy on the driver and
+runs no Spark job. Corpora too large for a driver snapshot are scored by
+the Spark plan of search/engine.hybrid_search_batch.
 """
 
 from __future__ import annotations
@@ -15,27 +21,114 @@ from __future__ import annotations
 import os
 from typing import Any
 
-from pyspark.sql import SparkSession
-from pyspark.sql import functions as F
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
+from pyspark.sql import DataFrame, SparkSession
 
 from ..config import SCORE_ROUND, SCORE_THRESHOLD, TOP_K_DEFAULT
 from ..functions import topk
-from ..functions.fusion import fuse
+from ..functions.fusion import fuse_value
 from ..models.embedder import hash_embed_text
 from ..models.reranker import cross_encoder_scores
 from ..models.tokenizer import tokenize_query
-from ..operators.bm25 import bm25_topk_terms
+from ..operators.bm25 import okapi_contrib, scored_postings
 from ..operators.chunker_core import add_path_prefix, trim_path_prefix
-from ..operators.knn import cosine_distance_topk
 from ..utils import round_half_up
-from .engine import batch_candidates
 
 RESULT_FIELDS = ("doc_id", "file_path", "header_path", "line_start",
                  "line_end", "content", "score", "fts_score", "vss_score")
+DISPLAY_FIELDS = RESULT_FIELDS[:6]
+
+# Largest index, in on-disk bytes of the tables the snapshot reads, that
+# an engine opens. On the 1031-chunk bench index (64-dim embeddings) the
+# snapshot held 2.4 bytes of driver memory per on-disk byte (2.41 MB for
+# 1.00 MB), so the bound is ~600 MB of driver memory.
+MAX_SNAPSHOT_BYTES = 256 * 1024 * 1024
+
+
+def _disk_bytes(path: str) -> int:
+    return sum(os.path.getsize(os.path.join(d, f))
+               for d, _, fs in os.walk(path) for f in fs
+               if not f.startswith((".", "_")))
+
+
+class _Snapshot:
+    """The serving copy of one index, read-only after construction (MCP
+    HTTP requests share it across threads): the documents sorted by
+    doc_id, so array position is the tie-break order; their display
+    fields; the float64 (n, d) embedding matrix in that order; and the
+    BM25 contributions as a term-sorted CSR — term ``t``'s postings are
+    ``pos[off[t]:off[t+1]]`` (doc positions) and ``contrib[...]``."""
+
+    def __init__(self, documents: DataFrame, embeddings: DataFrame,
+                 postings: DataFrame):
+        docs = documents.select(*DISPLAY_FIELDS).toArrow()
+        docs = docs.take(pc.sort_indices(docs["doc_id"]))
+        ids = docs["doc_id"]
+        self.fields = {c: docs[c].to_pylist() for c in DISPLAY_FIELDS}
+        self.n = len(ids)
+
+        emb = embeddings.select("doc_id", "embedding").toArrow()
+        emb = emb.take(pc.sort_indices(emb["doc_id"]))
+        if not emb["doc_id"].equals(ids):
+            raise ValueError("index tables disagree: documents and "
+                             "embeddings hold different doc_ids")
+        flat = pc.list_flatten(emb["embedding"]).to_numpy()
+        self.X = flat.astype(np.float64).reshape(self.n, -1 if self.n else 0)
+
+        post = postings.select(
+            "term", "doc_id", okapi_contrib().alias("contrib")).toArrow()
+        pos = pc.index_in(post["doc_id"], value_set=ids)
+        post = pa.table({"term": post["term"], "pos": pos,
+                         "contrib": post["contrib"]}).sort_by(
+            [("term", "ascending"), ("pos", "ascending")])
+        terms = post["term"].to_numpy(zero_copy_only=False)
+        # the first row of each term's run; none without postings
+        starts = np.flatnonzero(np.r_[len(terms) > 0, terms[1:] != terms[:-1]])
+        self.term_ix = {t: i for i, t in enumerate(terms[starts])}
+        self.off = np.r_[starts, len(terms)]
+        self.pos = post["pos"].to_numpy()
+        self.contrib = post["contrib"].to_numpy()
+
+    def candidates(self, qterms: list[str], qvec: list[float], k: int
+                   ) -> list[dict[str, Any]]:
+        """Q3-Q9 of one query: the BM25 top-k (score descending) and
+        the cosine-distance top-k (ascending), ties to the lower doc_id,
+        fused — one row per candidate, at most 2k rows."""
+        if not self.n:
+            return []
+        terms = sorted({self.term_ix[t] for t in qterms if t in self.term_ix})
+        ix = np.concatenate([np.zeros(0, np.int64)] + [
+            np.arange(self.off[t], self.off[t + 1]) for t in terms])
+        raw = np.bincount(self.pos[ix], self.contrib[ix], minlength=self.n)
+        hit = np.unique(self.pos[ix])
+        bm25 = np.array([round_half_up(x, SCORE_ROUND) for x in raw[hit]])
+        _, top = topk.local_topk(bm25[:, None], hit, k, desc=True)
+        fts = dict(zip(hit[top].tolist(), bm25[top].tolist()))
+
+        dist = np.round(1.0 - topk.cosine(self.X, topk.matrix([qvec])),
+                        SCORE_ROUND)
+        _, top = topk.local_topk(dist, np.arange(self.n), k, desc=False)
+        vss = dict(zip(top.tolist(), dist[top, 0].tolist()))
+
+        rows = []
+        for p in fts.keys() | vss.keys():
+            f, v = fts.get(p), vss.get(p)
+            row = {c: self.fields[c][p] for c in DISPLAY_FIELDS}
+            row.update(fts_score=f, vss_score=v,
+                       score=round_half_up(fuse_value(f, v), SCORE_ROUND))
+            rows.append(row)
+        return rows
 
 
 class DocSearchEngine:
-    """Long-lived engine over one index directory."""
+    """Long-lived engine over one index directory.
+
+    ``documents``, ``embeddings`` and ``index`` are lazy Spark handles on
+    the index tables (never persisted); the snapshot is read from them
+    once, here. Raises ValueError, before any Spark work, when those
+    tables exceed MAX_SNAPSHOT_BYTES on disk."""
 
     def __init__(self, spark: SparkSession, index_dir: str,
                  embedding_model: str | None = None):
@@ -47,25 +140,31 @@ class DocSearchEngine:
         self.model, self.backend, self.dim = resolve_model(
             index_dir, embedding_model
         )
-        load = lambda t: spark.read.parquet(f"{index_dir}/{t}")  # noqa: E731
-        self.documents = load("documents").persist()
-        self.embeddings = load("embeddings").persist()
-        self.index = {
-            "postings": load("postings").persist(),
-            "docfreq": load("docfreq").persist(),
-            "docstats": load("docstats").persist(),
-            "corpus_stats": load("corpus_stats").persist(),
-        }
+        path = lambda t: os.path.join(index_dir, t)  # noqa: E731
         # newer indexes carry the denormalized probe table (join-free BM25
-        # branch, operators/bm25._matched); older dirs fall back to joins
-        if os.path.isdir(os.path.join(index_dir, "postings_scored")):
-            self.index["postings_scored"] = load("postings_scored").persist()
+        # branch, operators/bm25._matched); older dirs derive it by joins
+        fts = (("postings_scored",) if os.path.isdir(path("postings_scored"))
+               else ("postings", "docfreq", "docstats", "corpus_stats"))
+        size = sum(_disk_bytes(path(t))
+                   for t in ("documents", "embeddings", *fts))
+        if size > MAX_SNAPSHOT_BYTES:
+            raise ValueError(
+                f"index {index_dir} is {size} bytes on disk, above "
+                f"MAX_SNAPSHOT_BYTES={MAX_SNAPSHOT_BYTES}: DocSearchEngine "
+                "serves from a driver snapshot; search a corpus this size "
+                "with search/engine.hybrid_search_batch"
+            )
+        load = lambda t: spark.read.parquet(path(t))  # noqa: E731
+        self.documents = load("documents")
+        self.embeddings = load("embeddings")
+        self.index = {t: load(t) for t in fts}
+        postings = (self.index["postings_scored"] if "postings_scored" in fts
+                    else scored_postings(self.index))
+        self._snap = _Snapshot(self.documents, self.embeddings, postings)
 
     def close(self) -> None:
-        """Release the session-held index caches (the engine owns their
-        lifecycle; one-shot registered queries never persist at all)."""
-        for df in (self.documents, self.embeddings, *self.index.values()):
-            df.unpersist()
+        """Drop the snapshot."""
+        self._snap = None
 
     def __enter__(self) -> "DocSearchEngine":
         return self
@@ -98,52 +197,24 @@ class DocSearchEngine:
                add_prefix: str | None = None,
                remove_prefix: str | None = None) -> list[dict[str, Any]]:
         qterms = self._query_terms(query)
-        fts = bm25_topk_terms(self.index, qterms, top_k).withColumnRenamed(
-            "score", "fts_score")
-        vss = cosine_distance_topk(self.embeddings, self._embed_query(query),
-                                   top_k, id_col="doc_id")
-        rows = fuse(fts, vss, "doc_id").join(self.documents, "doc_id").select(
-            *RESULT_FIELDS).collect()
-        return self._finish(query, qterms, [r.asDict() for r in rows], top_k,
-                            rerank, add_prefix, remove_prefix)
+        rows = self._snap.candidates(qterms, self._embed_query(query), top_k)
+        return self._finish(query, qterms, rows, top_k, rerank, add_prefix,
+                            remove_prefix)
 
     def search_batch(self, queries: list[str], top_k: int = TOP_K_DEFAULT,
                      rerank: bool = True,
                      add_prefix: str | None = None,
                      remove_prefix: str | None = None
                      ) -> list[list[dict[str, Any]]]:
-        """Bulk search: every query scored by ONE Spark plan and one
-        collect. The candidates come from search/engine.batch_candidates,
-        the plan hybrid_search_batch runs (batched BM25, one Arrow top-k
-        scan of the embeddings, fusion on (query_id, doc_id)), over the
-        persisted index; one broadcast join against documents fetches the
-        result fields. The collect is at most 2 * top_k * len(queries)
-        rows. Rerank, threshold, top-k and the path prefixes then run per
-        query through search()'s own tail, so results match per-query
-        `search()` exactly.
-
-        Raises ValueError above functions/topk.MAX_QUERIES queries,
-        before any Spark work."""
+        """``[search(q, ...) for q in queries]``. Raises ValueError above
+        functions/topk.MAX_QUERIES queries, before scoring any."""
         if len(queries) > topk.MAX_QUERIES:
             raise ValueError(
                 f"search_batch takes at most MAX_QUERIES={topk.MAX_QUERIES}"
                 f" queries, got {len(queries)}; split the batch"
             )
-        if not queries:
-            return []
-        qterms = [self._query_terms(q) for q in queries]
-        Q = topk.matrix(self._embed_query(q) for q in queries)
-        cands = batch_candidates(self.index, self.embeddings, qterms, Q,
-                                 top_k, id_col="doc_id")
-        rows: list[list[dict[str, Any]]] = [[] for _ in queries]
-        for r in F.broadcast(cands).join(self.documents, "doc_id").select(
-                "query_id", *RESULT_FIELDS).collect():
-            d = r.asDict()
-            rows[d.pop("query_id")].append(d)
-        return [
-            self._finish(q, t, r, top_k, rerank, add_prefix, remove_prefix)
-            for q, t, r in zip(queries, qterms, rows)
-        ]
+        return [self.search(q, top_k, rerank, add_prefix, remove_prefix)
+                for q in queries]
 
     def _finish(self, query: str, qterms: list[str],
                 rows: list[dict[str, Any]], top_k: int, rerank: bool,

@@ -313,8 +313,7 @@ def hybrid_search_batch(docs: DataFrame, embeddings: DataFrame,
                         index: dict[str, DataFrame] | None = None,
                         rerank: bool = False) -> DataFrame:
     """A whole query batch through the FULL hybrid lifecycle in ONE
-    plan: :func:`batch_candidates` (the candidate plan
-    DocSearchEngine.search_batch also runs), fetch one broadcast join
+    plan: :func:`batch_candidates`, fetch one broadcast join
     against documents, the optional token-overlap rerank in-plan, and
     the per-query threshold + top-k a single window. Per-query results
     equal hybrid_search(query) exactly (same fusion/threshold/tie-break

@@ -1,7 +1,7 @@
 """MCP server veneer (reference server.py:15-103).
 
-The tool handler closes over a long-lived DocSearchEngine (persisted index
-DataFrames) and returns {"results": [...]} exactly like the reference
+The tool handler closes over a long-lived DocSearchEngine (a driver
+snapshot of the index) and returns {"results": [...]} exactly like the reference
 (server.py:95). When FastMCP is installed it runs the server exactly like
 the reference; when it is not, BOTH transports fall back to built-in
 minimal MCP implementations per the public spec — stdio (mcp_stdio.py,

@@ -325,6 +325,34 @@ def test_http_lifecycle_and_sessions():
         assert st == 404
 
 
+def test_http_keep_alive_round_trip_has_no_ack_delay():
+    """A response is written as headers then body; with Nagle on, the
+    body waits for the client's delayed ACK (~40 ms per request on a
+    keep-alive connection). Without it a localhost ping takes well under
+    a millisecond."""
+    import statistics
+    import time
+
+    with _http_server() as port:
+        conn = http.client.HTTPConnection("127.0.0.1", port, timeout=30)
+
+        def call(msg, headers):
+            t = time.perf_counter()
+            conn.request("POST", "/mcp", body=json.dumps(msg),
+                         headers=headers)
+            r = conn.getresponse()
+            r.read()
+            return r, time.perf_counter() - t
+
+        r, _ = call(_rpc_msg("initialize", 1, protocolVersion="2025-03-26",
+                             capabilities={},
+                             clientInfo={"name": "t", "version": "0"}), {})
+        sid = {"Mcp-Session-Id": r.getheader("Mcp-Session-Id")}
+        rtts = [call(_rpc_msg("ping", i), sid)[1] for i in range(2, 17)]
+        conn.close()
+    assert statistics.median(rtts) < 0.02, rtts
+
+
 def test_http_parse_error_and_protocol_errors():
     with _http_server() as port:
         st, body, _ = _req(port, "POST", body="this is not json")
