@@ -7,8 +7,6 @@ DuckDB oracle-SQL builders so the two can never drift.
 
 from __future__ import annotations
 
-from dataclasses import dataclass
-
 # BM25 parameters (DuckDB FTS defaults used by the reference index,
 # reference: db.py:143-150 creates the FTS index with stemmer/stopwords
 # disabled; DuckDB FTS documents k=1.2 b=0.75 as match_bm25 defaults).
@@ -43,15 +41,3 @@ TEST_EMBED_DIM = 64
 # comparing against the DuckDB oracle (both engines compute in float64 from
 # the same inputs in the same order; rounding absorbs last-bit differences).
 SCORE_ROUND = 6
-
-
-@dataclass(frozen=True)
-class EngineConfig:
-    bm25_k1: float = BM25_K1
-    bm25_b: float = BM25_B
-    fusion_weight_single: float = FUSION_WEIGHT_SINGLE
-    score_threshold: float = SCORE_THRESHOLD
-    top_k: int = TOP_K_DEFAULT
-    chunk_size: int = CHUNK_SIZE_TOKENS
-    chunk_overlap: int = CHUNK_OVERLAP_TOKENS
-    embed_dim: int = TEST_EMBED_DIM

@@ -26,12 +26,3 @@ def h64(col: Column) -> Column:
 def dd_h64(expr: str) -> str:
     """DuckDB SQL fragment computing the identical hash of ``expr``."""
     return f"(('0x' || substr(md5({expr}), 1, 15))::BIGINT)"
-
-
-def doc_fingerprint(col: Column) -> Column:
-    """Full md5 fingerprint (hex) of a string column (T9/fingerprinting)."""
-    return F.md5(col)
-
-
-def dd_doc_fingerprint(expr: str) -> str:
-    return f"md5({expr})"

@@ -4,51 +4,50 @@ pipeline of SURVEY.md §3.1).
 The reference's build path (cli.index -> indexer.index_directories) is a
 process pool per file plus ONE serial driver-process embedding call
 (indexer.py:86-96); here the whole build is one lazy DataFrame chain —
- files -> chunks (mapInPandas) -> ids -> embeddings (pandas_udf, executor-
-parallel) -> write — and the FTS tables derive from the chunk tokens with
-explode + groupBy. Layout per SURVEY.md §4.3: narrow tables so a BM25
-probe never reads content bytes and a kNN scan streams only vectors.
+ files -> chunks (mapInPandas) -> ids -> path trim -> embeddings
+(pandas_udf, executor-parallel) -> write — and the FTS tables derive from
+the chunk tokens with explode + groupBy (operators/bm25.fts_tables).
+Layout per SURVEY.md §4.3: narrow tables so a BM25 probe never reads
+content bytes and a kNN scan streams only vectors.
 
-`--clear` semantics (reference db.py:199-206): overwrite mode replaces the
-index atomically per table.
+A full build (`index_directories`) and an incremental one
+(`index_incremental`) share one chunk pipeline, driven by the build
+settings recorded in meta.json, and one writer, which writes the tables
+of TABLES in order and counts each table's rows on its own write.
+
+`--clear` semantics (reference db.py:199-206): each table is written in
+overwrite mode, which deletes the table's directory and then writes it
+anew, one table after another. A build is not atomic: a reader that opens
+the index while it runs can find a table missing or a mix of old and new
+tables.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import shutil
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..config import TEST_EMBED_DIM
 from ..models.embedder import embed_udf
+from ..operators.bm25 import fts_tables, scored_postings
 from ..operators.chunker import chunk_documents, with_doc_ids
 from ..sources.markdown import read_markdown_dirs
 
+# every table a build writes, in write order
 TABLES = ("documents", "embeddings", "postings", "docfreq", "docstats",
-          "corpus_stats")
+          "corpus_stats", "postings_scored")
 
 
 def build_fts_index_from_tokens(docs: DataFrame) -> dict[str, DataFrame]:
-    """FTS tables from pre-tokenized chunks (tokens array column)."""
-    docstats = docs.select("doc_id", F.size("tokens").alias("dl"))
-    postings = (
-        docs.select("doc_id", F.explode("tokens").alias("term"))
-        .groupBy("term", "doc_id")
-        .agg(F.count(F.lit(1)).alias("tf"))
-    )
-    docfreq = postings.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-    corpus_stats = docstats.agg(
-        F.count(F.lit(1)).alias("n_docs"), F.avg("dl").alias("avgdl")
-    )
-    index = {"postings": postings, "docfreq": docfreq, "docstats": docstats,
-             "corpus_stats": corpus_stats}
-    # denormalized probe table (operators/bm25.scored_postings): written
-    # alongside the normalized tables so a long-lived engine's BM25 branch
-    # is a join-free scan too
-    from ..operators.bm25 import scored_postings
-
+    """FTS tables from pre-tokenized chunks (tokens array column), plus
+    the denormalized probe table `postings_scored`
+    (operators/bm25.scored_postings), so a long-lived engine's BM25
+    branch is a join-free scan."""
+    index = fts_tables(docs.select("doc_id", F.col("tokens").alias("toks")))
     index["postings_scored"] = scored_postings(index)
     return index
 
@@ -69,6 +68,46 @@ def trim_prefix_expr(col, prefix: str | None):
     return F.when(col.startswith(norm), trimmed).otherwise(col)
 
 
+def _chunks(spark: SparkSession, dirs: list[str],
+            settings: dict[str, str | None]) -> DataFrame:
+    """The `documents` table of `dirs` under the build settings, persisted:
+    read -> chunk -> deterministic ids (over the untrimmed path) -> path
+    trim. Chunking runs once and feeds documents, embeddings and the FTS
+    tables; the caller unpersists."""
+    files = read_markdown_dirs(spark, dirs)
+    chunks = with_doc_ids(chunk_documents(
+        files, int(settings["chunk_size"]), int(settings["chunk_overlap"]),
+        settings["strategy"], settings["tokenizer"]))
+    trim = trim_prefix_expr(F.col("file_path"),
+                            settings.get("remove_path_prefix"))
+    return chunks.select(
+        "doc_id", trim.alias("file_path"), "header_path", "line_start",
+        "line_end", "content", "tokens").persist()
+
+
+def _embeddings(chunks: DataFrame, settings: dict[str, str | None]
+                ) -> DataFrame:
+    embed = embed_udf(settings["embedding_backend"],
+                      settings["embedding_model"],
+                      int(settings["embedding_dim"]))
+    return chunks.select("doc_id", embed(F.col("content")).alias("embedding"))
+
+
+def _write_index(documents: DataFrame, embeddings: DataFrame,
+                 out_dir: str) -> dict[str, int]:
+    """Write every table of TABLES under out_dir; returns each table's
+    row count, observed on the write itself."""
+    tables = {"documents": documents, "embeddings": embeddings,
+              **build_fts_index_from_tokens(documents)}
+    counts: dict[str, int] = {}
+    for name in TABLES:
+        obs = Observation()
+        tables[name].observe(obs, F.count(F.lit(1)).alias("rows")).write \
+            .mode("overwrite").parquet(os.path.join(out_dir, name))
+        counts[name] = obs.get["rows"]
+    return counts
+
+
 def index_directories(
     spark: SparkSession,
     dirs: list[str],
@@ -84,34 +123,7 @@ def index_directories(
     remove_path_prefix: str | None = None,
 ) -> dict[str, int]:
     """Build all index tables under out_dir; returns row counts."""
-    files = read_markdown_dirs(spark, dirs)
-    chunks = with_doc_ids(
-        chunk_documents(files, chunk_size, chunk_overlap, strategy, tokenizer)
-    ).withColumn("file_path", trim_prefix_expr(F.col("file_path"),
-                                               remove_path_prefix))
-
-    # chunking runs once, feeds documents + embeddings + FTS derivations
-    chunks = chunks.persist()
-    docs = chunks.select(
-        "doc_id", "file_path", "header_path", "line_start", "line_end",
-        "content", "tokens",
-    )
-    emb = chunks.select(
-        "doc_id",
-        embed_udf(embed_backend, embedding_model, embed_dim)(
-            F.col("content")
-        ).alias("embedding"),
-    )
-    fts = build_fts_index_from_tokens(docs)
-
-    counts: dict[str, int] = {}
-    writes = {"documents": docs, "embeddings": emb, **fts}
-    for name, df in writes.items():
-        path = os.path.join(out_dir, name)
-        df.write.mode("overwrite").parquet(path)
-        counts[name] = spark.read.parquet(path).count()
-
-    meta = {
+    settings = {
         "embedding_model": embedding_model,
         "embedding_backend": embed_backend,
         "embedding_dim": str(embed_dim),
@@ -119,10 +131,13 @@ def index_directories(
         "chunk_size": str(chunk_size),
         "chunk_overlap": str(chunk_overlap),
         "strategy": strategy,
+        "remove_path_prefix": remove_path_prefix,
     }
-    with open(os.path.join(out_dir, "meta.json"), "w") as f:
-        json.dump(meta, f, indent=2)
+    chunks = _chunks(spark, dirs, settings)
+    counts = _write_index(chunks, _embeddings(chunks, settings), out_dir)
     chunks.unpersist()
+    with open(os.path.join(out_dir, "meta.json"), "w") as f:
+        json.dump(settings, f, indent=2)
     return counts
 
 
@@ -130,35 +145,24 @@ def index_incremental(
     spark: SparkSession,
     dirs: list[str],
     out_dir: str,
-    **kwargs,
 ) -> dict[str, int]:
-    """Re-index only what changed. Deterministic chunk ids (sha2 over
-    file/line/content — T9) turn incremental indexing into set algebra:
-    chunks whose id already exists keep their stored EMBEDDING (the
-    expensive stage); only genuinely new/changed chunks are embedded.
-    Derived FTS tables are recomputed from the merged corpus (cheap
-    relative to embedding; and df/avgdl are global, so they must be).
+    """Re-index only what changed, under the build settings recorded in
+    out_dir's meta.json (path trim included; a meta.json without
+    `remove_path_prefix` means no trim). Deterministic chunk ids (sha2
+    over file/line/content — T9) turn incremental indexing into set
+    algebra: chunks whose id already exists keep their stored EMBEDDING
+    (the expensive stage); only genuinely new/changed chunks are
+    embedded. Derived FTS tables are recomputed from the merged corpus
+    (cheap relative to embedding; and df/avgdl are global, so they must
+    be). The result holds the same rows as a full rebuild.
 
-    Tables are written to a temp subdir then swapped in, so the build
-    never overwrites parquet it is still lazily reading.
+    Tables are written to a temp subdir, then swapped in one at a time,
+    so the build never overwrites parquet it is still lazily reading.
 
     Returns counts: added, kept, removed, plus per-table row counts.
     """
-    import shutil
-
-    meta = read_meta(out_dir)
-    chunk_size = int(meta["chunk_size"])
-    chunk_overlap = int(meta["chunk_overlap"])
-    strategy = meta["strategy"]
-    tokenizer = meta["tokenizer"]
-    backend = meta["embedding_backend"]
-    model = meta["embedding_model"]
-    dim = int(meta["embedding_dim"])
-
-    files = read_markdown_dirs(spark, dirs)
-    chunks = with_doc_ids(
-        chunk_documents(files, chunk_size, chunk_overlap, strategy, tokenizer)
-    ).persist()
+    settings = read_meta(out_dir)
+    chunks = _chunks(spark, dirs, settings)
 
     old_docs = spark.read.parquet(os.path.join(out_dir, "documents"))
     old_emb = spark.read.parquet(os.path.join(out_dir, "embeddings"))
@@ -166,39 +170,22 @@ def index_incremental(
     ids = chunks.select("doc_id")
     kept_emb = old_emb.join(ids, "doc_id", "left_semi")
     new_chunks = chunks.join(old_docs.select("doc_id"), "doc_id", "left_anti")
-    new_emb = new_chunks.select(
-        "doc_id",
-        embed_udf(backend, model, dim)(F.col("content")).alias("embedding"),
-    )
-    n_added = new_chunks.count()
-    n_kept = kept_emb.count()
-    n_removed = old_docs.join(ids, "doc_id", "left_anti").count()
-
-    docs = chunks.select(
-        "doc_id", "file_path", "header_path", "line_start", "line_end",
-        "content", "tokens",
-    )
-    emb = kept_emb.unionByName(new_emb)
-    fts = build_fts_index_from_tokens(docs)
+    counts = {"added": new_chunks.count(), "kept": kept_emb.count(),
+              "removed": old_docs.join(ids, "doc_id", "left_anti").count()}
 
     tmp = os.path.join(out_dir, "_incremental_tmp")
-    counts: dict[str, int] = {
-        "added": n_added, "kept": n_kept, "removed": n_removed
-    }
-    writes = {"documents": docs, "embeddings": emb, **fts}
-    for name, df in writes.items():
-        df.write.mode("overwrite").parquet(os.path.join(tmp, name))
+    counts.update(_write_index(
+        chunks, kept_emb.unionByName(_embeddings(new_chunks, settings)), tmp))
     chunks.unpersist()
-    for name in writes:
+    for name in TABLES:
         final = os.path.join(out_dir, name)
         shutil.rmtree(final, ignore_errors=True)
         os.replace(os.path.join(tmp, name), final)
-        counts[name] = spark.read.parquet(final).count()
     shutil.rmtree(tmp, ignore_errors=True)
     return counts
 
 
-def read_meta(index_dir: str) -> dict[str, str]:
+def read_meta(index_dir: str) -> dict[str, str | None]:
     with open(os.path.join(index_dir, "meta.json")) as f:
         return json.load(f)
 

@@ -45,10 +45,6 @@ def _write(out: TextIO, msg: dict[str, Any]) -> None:
     out.flush()
 
 
-def _result(out: TextIO, req_id: Any, result: dict[str, Any]) -> None:
-    _write(out, {"jsonrpc": "2.0", "id": req_id, "result": result})
-
-
 def _error(out: TextIO, req_id: Any, code: int, message: str) -> None:
     _write(out, {"jsonrpc": "2.0", "id": req_id,
                  "error": {"code": code, "message": message}})

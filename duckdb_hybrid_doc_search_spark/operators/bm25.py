@@ -52,7 +52,12 @@ def build_fts_index(docs: DataFrame, id_col: str = "doc_id",
     builds these tables once on disk, term-ordered, so probes read a
     pushdown-pruned slice (the 100 TB shape).
     """
-    toks = tokenize_docs(docs, id_col, text_col)
+    return fts_tables(tokenize_docs(docs, id_col, text_col))
+
+
+def fts_tables(toks: DataFrame) -> dict[str, DataFrame]:
+    """The four FTS index tables of a (doc_id, toks) frame, lazily: the
+    one derivation behind build_fts_index and the index builder."""
     docstats = toks.select("doc_id", F.size("toks").alias("dl"))
     postings = (
         toks.select("doc_id", F.explode("toks").alias("term"))

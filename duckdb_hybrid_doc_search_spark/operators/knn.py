@@ -1393,14 +1393,6 @@ ORDER BY q.q_id
 # --- residual IVF-PQ (the production encoding) --------------------------------
 
 
-def _residual(vec: "F.Column", cvec: "F.Column") -> "F.Column":
-    """Elementwise vec - centroid, widened to double BEFORE subtracting
-    so the DuckDB twin (a[i]::DOUBLE - b[i]::DOUBLE) is bit-identical."""
-    return F.zip_with(
-        vec, cvec, lambda x, y: x.cast("double") - y.cast("double")
-    )
-
-
 def ivfpq_residual_topk(emb: DataFrame, k: int, n_queries: int = 10,
                         id_col: str = "vec_id",
                         vec_col: str = "embedding",

@@ -6,14 +6,16 @@ issue a query string, get ranked result dicts with the exact field set of
 searcher.py:243-255 (doc_id, file_path, header_path, line_start, line_end,
 content, score, fts_score, vss_score).
 
-Spark builds the index; the engine serves it. Opening an engine reads the
-precomputed index tables once into a read-only driver snapshot (the
-analogue of the reference's long-lived read-only connection, cli.py:325):
-the display fields, the embedding matrix, and every posting's BM25
-contribution, computed in the JVM by the one Okapi expression
+Spark builds the index; the engine serves it. Opening an engine reads
+three of the tables index/builder writes — documents, embeddings and
+postings_scored — once into a read-only driver snapshot (the analogue of
+the reference's long-lived read-only connection, cli.py:325): the display
+fields, the embedding matrix, and every posting's BM25 contribution,
+computed in the JVM by the one Okapi expression
 (operators/bm25.okapi_contrib). A search is then numpy on the driver and
-runs no Spark job. Corpora too large for a driver snapshot are scored by
-the Spark plan of search/engine.hybrid_search_batch.
+runs no Spark job. An index directory without postings_scored is refused;
+rebuild it with `index`. Corpora too large for a driver snapshot are
+scored by the Spark plan of search/engine.hybrid_search_batch.
 """
 
 from __future__ import annotations
@@ -32,7 +34,7 @@ from ..functions.fusion import fuse_value
 from ..models.embedder import hash_embed_text
 from ..models.reranker import cross_encoder_scores
 from ..models.tokenizer import tokenize_query
-from ..operators.bm25 import okapi_contrib, scored_postings
+from ..operators.bm25 import okapi_contrib
 from ..operators.chunker_core import add_path_prefix, trim_path_prefix
 from ..utils import round_half_up
 
@@ -125,10 +127,14 @@ class _Snapshot:
 class DocSearchEngine:
     """Long-lived engine over one index directory.
 
-    ``documents``, ``embeddings`` and ``index`` are lazy Spark handles on
-    the index tables (never persisted); the snapshot is read from them
-    once, here. Raises ValueError, before any Spark work, when those
-    tables exceed MAX_SNAPSHOT_BYTES on disk."""
+    ``documents``, ``embeddings`` and ``index["postings_scored"]`` are
+    lazy Spark handles on the index tables (never persisted); the
+    snapshot is read from them once, here. Opening raises
+    FileNotFoundError when the directory has no meta.json, and
+    ValueError, before any Spark work, when it has no postings_scored
+    table or its three tables exceed MAX_SNAPSHOT_BYTES on disk. A
+    search over a sentence-transformers index raises NotImplementedError
+    when that package is not installed, as the build does."""
 
     def __init__(self, spark: SparkSession, index_dir: str,
                  embedding_model: str | None = None):
@@ -141,12 +147,13 @@ class DocSearchEngine:
             index_dir, embedding_model
         )
         path = lambda t: os.path.join(index_dir, t)  # noqa: E731
-        # newer indexes carry the denormalized probe table (join-free BM25
-        # branch, operators/bm25._matched); older dirs derive it by joins
-        fts = (("postings_scored",) if os.path.isdir(path("postings_scored"))
-               else ("postings", "docfreq", "docstats", "corpus_stats"))
+        if not os.path.isdir(path("postings_scored")):
+            raise ValueError(
+                f"index {index_dir} has no postings_scored table: it was "
+                "built by an older version; rebuild it with `index`"
+            )
         size = sum(_disk_bytes(path(t))
-                   for t in ("documents", "embeddings", *fts))
+                   for t in ("documents", "embeddings", "postings_scored"))
         if size > MAX_SNAPSHOT_BYTES:
             raise ValueError(
                 f"index {index_dir} is {size} bytes on disk, above "
@@ -157,10 +164,9 @@ class DocSearchEngine:
         load = lambda t: spark.read.parquet(path(t))  # noqa: E731
         self.documents = load("documents")
         self.embeddings = load("embeddings")
-        self.index = {t: load(t) for t in fts}
-        postings = (self.index["postings_scored"] if "postings_scored" in fts
-                    else scored_postings(self.index))
-        self._snap = _Snapshot(self.documents, self.embeddings, postings)
+        self.index = {"postings_scored": load("postings_scored")}
+        self._snap = _Snapshot(self.documents, self.embeddings,
+                               self.index["postings_scored"])
 
     def close(self) -> None:
         """Drop the snapshot."""
@@ -179,13 +185,14 @@ class DocSearchEngine:
 
         try:  # real model on the driver (Q2, searcher.py:109)
             from sentence_transformers import SentenceTransformer
-
-            m = _ST_MODELS.get(self.model)
-            if m is None:
-                m = _ST_MODELS[self.model] = SentenceTransformer(self.model)
-            return [float(x) for x in m.encode([query])[0]]
-        except ImportError:
-            return hash_embed_text(query, self.dim)
+        except ImportError as e:
+            raise NotImplementedError(
+                "sentence-transformers not installed; use the 'hash' backend"
+            ) from e
+        m = _ST_MODELS.get(self.model)
+        if m is None:
+            m = _ST_MODELS[self.model] = SentenceTransformer(self.model)
+        return [float(x) for x in m.encode([query])[0]]
 
     def _query_terms(self, query: str) -> list[str]:
         # the index's own analyzer (tokenizer identity, SURVEY.md §2.6.5)

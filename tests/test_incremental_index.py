@@ -3,12 +3,14 @@ keep byte-identical embeddings; removed files disappear."""
 
 from __future__ import annotations
 
+import os
 import pathlib
 import shutil
 
 import pytest
 
-from duckdb_hybrid_doc_search_spark.index.builder import (index_directories,
+from duckdb_hybrid_doc_search_spark.index.builder import (TABLES,
+                                                          index_directories,
                                                           index_incremental)
 from duckdb_hybrid_doc_search_spark.search.doc_engine import DocSearchEngine
 
@@ -54,3 +56,30 @@ def test_incremental_reindex(spark, tmp_path):
     assert any("brand_new.md" in r["file_path"] for r in hits)
     gone = eng.search("repeated paragraph content", top_k=5, rerank=True)
     assert not any("dup_content.md" in r["file_path"] for r in gone)
+
+
+def test_incremental_keeps_path_trim(spark, tmp_path):
+    """An incremental pass applies the path trim the index was built
+    with, and leaves the same tables as a fresh build of the edited corpus
+    with the same settings."""
+    corpus = tmp_path / "corpus"
+    shutil.copytree(FIX, corpus)
+    prefix = f"{corpus}/"
+    out = str(tmp_path / "idx")
+    index_directories(spark, [str(corpus)], out, remove_path_prefix=prefix)
+
+    (corpus / "brand_new.md").write_text("# New Doc\n\nfresh added content\n")
+    (corpus / "dup_content.md").unlink()
+    index_incremental(spark, [str(corpus)], out)
+    fresh = str(tmp_path / "fresh")
+    index_directories(spark, [str(corpus)], fresh, remove_path_prefix=prefix)
+
+    def rows(index_dir, table):
+        df = spark.read.parquet(os.path.join(index_dir, table))
+        return sorted(tuple(r) for r in df.collect())
+
+    for t in TABLES:
+        assert rows(out, t) == rows(fresh, t), t
+    paths = {r[1] for r in rows(out, "documents")}
+    assert "brand_new.md" in paths
+    assert not any(os.path.isabs(p) for p in paths)

@@ -3,11 +3,16 @@ query path §3.2 through the product API)."""
 
 from __future__ import annotations
 
+import importlib.util
+import json
+import os
 import pathlib
+import shutil
 
 import pytest
 
-from duckdb_hybrid_doc_search_spark.index.builder import (index_directories,
+from duckdb_hybrid_doc_search_spark.index.builder import (TABLES,
+                                                          index_directories,
                                                           resolve_model)
 from duckdb_hybrid_doc_search_spark.search.doc_engine import DocSearchEngine
 
@@ -15,12 +20,56 @@ FIX = str(pathlib.Path(__file__).parent.parent / "fixtures" / "docs")
 
 
 @pytest.fixture(scope="module")
-def index_dir(spark, tmp_path_factory):
+def built(spark, tmp_path_factory):
     out = str(tmp_path_factory.mktemp("idx"))
     counts = index_directories(spark, [FIX], out)
     assert counts["documents"] > 0
     assert counts["documents"] == counts["embeddings"]
-    return out
+    return out, counts
+
+
+@pytest.fixture(scope="module")
+def index_dir(built):
+    return built[0]
+
+
+def test_build_writes_tables_and_counts_each_write(spark, built):
+    """The builder writes exactly builder.TABLES (plus meta.json), and the
+    count it returns for each table is that table's row count on disk."""
+    out, counts = built
+    assert sorted(os.listdir(out)) == sorted([*TABLES, "meta.json"])
+    assert counts == {t: spark.read.parquet(os.path.join(out, t)).count()
+                      for t in TABLES}
+
+
+def test_engine_refuses_index_without_postings_scored(spark, index_dir,
+                                                      tmp_path):
+    old = str(tmp_path / "old")
+    shutil.copytree(index_dir, old)
+    shutil.rmtree(os.path.join(old, "postings_scored"))
+    with pytest.raises(ValueError, match="rebuild it with `index`"):
+        DocSearchEngine(spark, old)
+
+
+@pytest.mark.skipif(importlib.util.find_spec("sentence_transformers")
+                    is not None,
+                    reason="sentence-transformers installed; the query "
+                           "embeds with the real model")
+def test_search_without_model_package_raises(spark, index_dir, tmp_path):
+    """A sentence-transformers index is never searched with the hash
+    embedder in its place: without the package the query side raises,
+    as the build side does (models/embedder.st_embed_udf)."""
+    st = str(tmp_path / "st")
+    shutil.copytree(index_dir, st)
+    meta_path = os.path.join(st, "meta.json")
+    with open(meta_path) as f:
+        meta = json.load(f)
+    meta["embedding_backend"] = "sentence-transformers"
+    with open(meta_path, "w") as f:
+        json.dump(meta, f)
+    eng = DocSearchEngine(spark, st)
+    with pytest.raises(NotImplementedError, match="sentence-transformers"):
+        eng.search("deep nested", top_k=3)
 
 
 def test_index_tables_consistent(spark, index_dir):
