@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..operators.bpe import (BPE_MERGES, BPE_TRAIN_BATCH,
                              MERGES_SCHEMA, bpe_train)
+from .fingerprint import ensure_layout, layout_fingerprint
 
 BPE_DONE = "_BPE_DONE"
 
@@ -55,30 +56,11 @@ def ensure_bpe_layout(spark: SparkSession, docs: DataFrame, sf_dir: str,
                       n_merges: int = BPE_MERGES) -> str:
     """Build (once, fingerprint-keyed) the trained-tokenizer layout for
     this corpus — training is write-time cost, probes read 16 rows."""
-    import shutil
-
-    from .fingerprint import layout_fingerprint, warehouse_root
-
-    fp = layout_fingerprint(docs, "doc_id", "text")
-    key = (
-        f"{os.path.basename(os.path.normpath(sf_dir)) or 'default'}"
-        f"-bpe{n_merges}-{fp}"
-    )
-    out_dir = os.path.join(warehouse_root("bpe_layout", root), key)
-    if os.path.exists(os.path.join(out_dir, BPE_DONE)):
-        return out_dir
-    if os.path.exists(out_dir):
-        shutil.rmtree(out_dir)
-    write_bpe_merges(docs, out_dir, n_merges)
-    return out_dir
-
-
-# Opened-layout memo (the fts_layout._OPEN pattern): repeated probes of
-# the same written subword layout reuse the resolved DataFrames instead
-# of re-reading five table dirs' parquet footers per call. Keyed by
-# Spark application id; stale content is impossible because the out_dir
-# embeds the corpus fingerprint.
-_OPEN: dict[tuple[str, str], dict] = {}
+    return ensure_layout(
+        "bpe_layout", sf_dir, f"bpe{n_merges}",
+        layout_fingerprint(docs, "doc_id", "text"),
+        lambda out_dir: write_bpe_merges(docs, out_dir, n_merges),
+        BPE_DONE, root)
 
 
 def ensure_bpe_fts_layout(spark: SparkSession, docs: DataFrame,
@@ -93,39 +75,17 @@ def ensure_bpe_fts_layout(spark: SparkSession, docs: DataFrame,
     analyzer pays its encode cost at write time, not per query.
 
     Returns the opened index dict (operators/bm25 probe convention)."""
-    import shutil
-
     from ..operators.bpe import bpe_fts_index
-    from .fingerprint import layout_fingerprint, warehouse_root
-    from .fts_layout import read_fts_layout, write_index_tables
+    from .fts_layout import FTS_DONE, open_fts_layout, write_index_tables
 
-    fp = layout_fingerprint(docs, "doc_id", "text")
-    key = (
-        f"{os.path.basename(os.path.normpath(sf_dir)) or 'default'}"
-        f"-bpefts{n_merges}-{fp}"
-    )
-    out_dir = os.path.join(warehouse_root("bpe_fts_layout", root), key)
-    memo_key = (spark.sparkContext.applicationId, out_dir)
-    done = os.path.join(out_dir, "corpus_stats", "_SUCCESS")
-    # memo hits re-stat the completion marker (one driver stat — cheap)
-    # so an externally cleaned warehouse rebuilds instead of serving a
-    # handle whose files vanished (r11 ADVICE: the fts_layout/bm25 memos
-    # sweep vanished dirs; this one returned the stale handle). Stale
-    # keys are swept alongside, mirroring the _SCORED_PROBE_MEMO sweep.
-    if memo_key in _OPEN and os.path.exists(done):
-        return _OPEN[memo_key]
-    for k in list(_OPEN):
-        if k[0] != spark.sparkContext.applicationId or not os.path.isdir(
-                k[1]):
-            _OPEN.pop(k, None)
-    if not os.path.exists(done):
-        if os.path.exists(out_dir):
-            shutil.rmtree(out_dir)
+    def build(out_dir: str) -> None:
         merges = read_bpe_merges(
             spark, ensure_bpe_layout(spark, docs, sf_dir, root, n_merges))
         write_index_tables(bpe_fts_index(docs, merges), out_dir)
-    _OPEN[memo_key] = read_fts_layout(spark, out_dir)
-    return _OPEN[memo_key]
+
+    return open_fts_layout(spark, ensure_layout(
+        "bpe_fts_layout", sf_dir, f"bpefts{n_merges}",
+        layout_fingerprint(docs, "doc_id", "text"), build, FTS_DONE, root))
 
 
 # merge table stored INSIDE a segmented subword store: the store carries
@@ -159,38 +119,26 @@ def ensure_bpe_segment_layout(spark: SparkSession, docs: DataFrame,
     persisted inside the store (STORE_MERGES), so probes read the
     store's own analyzer. The segment machinery (append/fold/probe) is
     the word analyzer's, unchanged — only index_fn differs."""
-    import shutil
-
     from pyspark.sql import functions as F
 
-    from ..operators.bpe import bpe_fts_index, bpe_train
-    from .fingerprint import layout_fingerprint, warehouse_root
+    from ..operators.bpe import bpe_fts_index
     from .fts_layout import (SEG_SPLIT_MOD, SEG_SPLIT_REM,
                              append_fts_segment, write_fts_segments)
 
-    fp = layout_fingerprint(docs, "doc_id", "text")
-    key = (
-        f"{os.path.basename(os.path.normpath(sf_dir)) or 'default'}"
-        f"-bpeseg{n_merges}-{fp}"
-    )
-    out_dir = os.path.join(warehouse_root("bpe_segment_layout", root), key)
-    sentinel = os.path.join(out_dir, "_BPESEG_DONE")
-    if os.path.exists(sentinel):
-        return out_dir
-    if os.path.exists(out_dir):
-        shutil.rmtree(out_dir)
-    is_new = F.col("doc_id") % SEG_SPLIT_MOD == SEG_SPLIT_REM
-    base = docs.where(~is_new)
-    merges = bpe_train(base, n_merges, batch=BPE_TRAIN_BATCH)
-    mrows = sorted(merges.collect(), key=lambda r: r["rank"])
+    def build(out_dir: str) -> None:
+        is_new = F.col("doc_id") % SEG_SPLIT_MOD == SEG_SPLIT_REM
+        base = docs.where(~is_new)
+        merges = bpe_train(base, n_merges, batch=BPE_TRAIN_BATCH)
+        mrows = sorted(merges.collect(), key=lambda r: r["rank"])
 
-    def index_fn(d):  # the frozen-merges analyzer
-        return bpe_fts_index(d, mrows)
+        def index_fn(d):  # the frozen-merges analyzer
+            return bpe_fts_index(d, mrows)
 
-    write_fts_segments(base, out_dir, index_fn=index_fn)
-    write_store_merges(merges, out_dir)
-    append_fts_segment(spark, out_dir, docs.where(is_new),
-                       index_fn=index_fn)
-    with open(sentinel, "w"):
-        pass
-    return out_dir
+        write_fts_segments(base, out_dir, index_fn=index_fn)
+        write_store_merges(merges, out_dir)
+        append_fts_segment(spark, out_dir, docs.where(is_new),
+                           index_fn=index_fn)
+
+    return ensure_layout("bpe_segment_layout", sf_dir, f"bpeseg{n_merges}",
+                         layout_fingerprint(docs, "doc_id", "text"), build,
+                         "_BPESEG_DONE", root)

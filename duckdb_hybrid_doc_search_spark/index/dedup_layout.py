@@ -6,9 +6,9 @@ already-kept corpus. Its r7 form recomputed shingles + minhash signatures
 for the EXISTING corpus on every call — the docstring's own self-confessed
 100 TB gap (re-tokenizing 100 TB of kept text per arriving shard) and the
 r7 bench's one real regression. This module writes the existing side ONCE
-as an append-only layout, mirroring ``index/ivf_layout``'s contract
-(build-once cache keyed on a source fingerprint, completion sentinel
-written LAST, appends guarded against id overlap):
+as an append-only layout (built once per source fingerprint through
+``index/fingerprint.ensure_layout``, completion sentinel written LAST,
+appends guarded against id overlap):
 
 - ``fp/``    (doc_id, fp)        — md5 text fingerprints (exact tier)
 - ``bands/`` (doc_id, band, sig) — LSH band bucket keys (candidate tier)
@@ -36,6 +36,8 @@ import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from .fingerprint import ensure_layout, layout_fingerprint
 
 # Version token in the cache key: bump when signature semantics change
 # (MINHASH_NUM/BANDS, shingle rule, hash fn) so stale layouts rebuild.
@@ -276,35 +278,16 @@ def read_sigs(spark: SparkSession, out_dir: str) -> DataFrame:
     return spark.read.parquet(_tables(out_dir)["sigs"])
 
 
-def _layout_root(root: str | None, leaf: str) -> str:
-    from .fingerprint import warehouse_root
-
-    return warehouse_root(leaf, root)
-
-
-def _layout_key(docs: DataFrame, sf_dir: str) -> str:
-    from .fingerprint import layout_fingerprint
-
-    return (
-        f"{os.path.basename(os.path.normpath(sf_dir)) or 'default'}"
-        f"-{LAYOUT_FORMAT}"
-        f"-{layout_fingerprint(docs, 'doc_id', 'text')}"
-    )
-
-
 def ensure_dedup_layout(spark: SparkSession, existing: DataFrame,
                         sf_dir: str, root: str | None = None) -> str:
     """Build (once) and return the signature-store dir for `existing`
-    (the kept-corpus side). Cache key = sf_dir basename + format version
-    + source fingerprint (``index/fingerprint``) so regenerated testdata
-    rebuilds instead of probing stale signatures."""
-    out_dir = os.path.join(_layout_root(root, "dedup_sig_layout"),
-                           _layout_key(existing, sf_dir))
-    if not os.path.exists(os.path.join(out_dir, LAYOUT_DONE)):
-        if os.path.exists(out_dir):  # partial prior attempt: start clean
-            shutil.rmtree(out_dir)
-        write_dedup_signatures(existing, out_dir)
-    return out_dir
+    (the kept-corpus side), keyed on the source fingerprint so
+    regenerated testdata rebuilds instead of probing stale signatures."""
+    return ensure_layout(
+        "dedup_sig_layout", sf_dir, LAYOUT_FORMAT,
+        layout_fingerprint(existing, "doc_id", "text"),
+        lambda out_dir: write_dedup_signatures(existing, out_dir),
+        LAYOUT_DONE, root)
 
 
 def ensure_dedup_append_layout(spark: SparkSession, existing: DataFrame,
@@ -321,16 +304,12 @@ def ensure_dedup_append_layout(spark: SparkSession, existing: DataFrame,
     build-once cache must never be pointed at it), with an
     ``_APPEND_DONE`` sentinel marking the completed build+append
     sequence."""
-    out_dir = os.path.join(_layout_root(root, "dedup_sig_append_layout"),
-                           _layout_key(existing, sf_dir))
-    sentinel = os.path.join(out_dir, APPEND_DONE)
-    if os.path.exists(sentinel):
-        return out_dir
-    if os.path.exists(out_dir):  # partial prior attempt: start clean
-        shutil.rmtree(out_dir)
-    is_new = F.col("doc_id") % APPEND_SPLIT_MOD == APPEND_SPLIT_REM
-    write_dedup_signatures(existing.where(~is_new), out_dir)
-    append_dedup_signatures(spark, out_dir, existing.where(is_new))
-    with open(sentinel, "w"):
-        pass
-    return out_dir
+
+    def build(out_dir: str) -> None:
+        is_new = F.col("doc_id") % APPEND_SPLIT_MOD == APPEND_SPLIT_REM
+        write_dedup_signatures(existing.where(~is_new), out_dir)
+        append_dedup_signatures(spark, out_dir, existing.where(is_new))
+
+    return ensure_layout("dedup_sig_append_layout", sf_dir, LAYOUT_FORMAT,
+                         layout_fingerprint(existing, "doc_id", "text"),
+                         build, APPEND_DONE, root)

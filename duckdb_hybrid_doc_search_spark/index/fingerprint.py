@@ -1,6 +1,21 @@
-"""Cheap staleness fingerprints for written index layouts.
+"""The written-layout cache: one directory name, one crash rule, one
+warehouse root and one sibling sweep, plus the staleness fingerprints
+the directory names carry.
 
-Two tiers, used by ``fts_layout`` / ``ivf_layout`` cache keys:
+Every derived layout the engine writes (FTS, IVF, IVF-PQ, SQ8, dedup
+signatures, BPE, segment stores, the ORC copy, the layout-metrics
+scratch tables) is built once per corpus fingerprint and then probed
+many times, through ``ensure_layout``:
+
+- the directory is ``<warehouse root>/<sf>-<tag>-<fp>`` (``layout_name``);
+- a directory holding its done marker is returned as it is, with no
+  other I/O and no Spark job;
+- a directory without its marker is a crashed attempt: it is removed and
+  built again, and the marker is written if the build did not write it.
+
+``sweep_siblings`` removes older generations of a layout after a build.
+
+The fingerprints come in two tiers:
 
 1. ``source_file_fingerprint`` — driver-side ``os.stat`` over the plan's
    input files (path, size, mtime). ZERO Spark jobs, so a warm probe of a
@@ -14,13 +29,16 @@ Two tiers, used by ``fts_layout`` / ``ivf_layout`` cache keys:
 
 The file tier hashes FILES, not plans: two different projections of the
 same parquet get the same fingerprint. Layout caches therefore also key on
-a caller-supplied ``name`` that identifies the logical corpus.
+a caller-supplied tag that identifies the logical corpus.
 """
 
 from __future__ import annotations
 
 import hashlib
 import os
+import re
+import shutil
+from collections.abc import Callable
 from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame
@@ -32,15 +50,75 @@ FileSig = tuple[tuple[str, int, int], ...]
 
 def warehouse_root(leaf: str, root: str | None = None) -> str:
     """Default layout root: ``<repo>/spark-warehouse/<leaf>``, unless
-    the caller supplied an explicit ``root``. One definition for every
-    written layout (fts/ivf/ivfpq/sq8/dedup) — the repo-root derivation
-    must change in exactly one place."""
+    the caller supplied an explicit ``root``. The one definition for
+    every written layout — the repo-root derivation must change in
+    exactly one place. Leaves: ``fts_layout``, ``fts_segment_layout``
+    (also the streaming base stores), ``fts_folded_layout``,
+    ``bpe_layout``, ``bpe_fts_layout``, ``bpe_segment_layout``,
+    ``ivf_layout``, ``ivf_trained_layout``, ``ivf_multiprobe_layout``,
+    ``ivf_multiprobe_whitened_layout``, ``ivf_multiprobe_append_layout``,
+    ``ivf_append_layout``, ``ivf_stream_base``, ``ivfpq_layout``,
+    ``ivfpq_append_layout``, ``sq8_layout``, ``dedup_sig_layout``,
+    ``dedup_sig_append_layout``, ``orc_docs`` and ``layout_metrics``."""
     if root is not None:
         return root
     repo_dir = os.path.dirname(os.path.dirname(
         os.path.dirname(os.path.abspath(__file__))
     ))
     return os.path.join(repo_dir, "spark-warehouse", leaf)
+
+
+def layout_name(sf_dir: str, tag: str, fp: str) -> str:
+    """Directory name of a written layout: ``<sf>-<tag>-<fp>``, where
+    ``<sf>`` is the basename of ``sf_dir`` (``default`` when it has
+    none). With ``fp=""`` it is the stem every generation of the layout
+    shares, which is what ``sweep_siblings`` patterns match."""
+    sf = os.path.basename(os.path.normpath(sf_dir)) or "default"
+    return f"{sf}-{tag}-{fp}"
+
+
+def ensure_layout(leaf: str, sf_dir: str, tag: str, fp: str,
+                  build: Callable[[str], None], done: str,
+                  root: str | None = None) -> str:
+    """Build (once per fingerprint) and return the layout directory.
+
+    ``done`` is the completion marker, relative to the directory; the
+    writers land it last, so its presence means a finished build. A warm
+    call is one ``os.stat``. Without the marker, any leftover directory
+    is a crashed attempt: it is removed, ``build(out_dir)`` runs, and the
+    marker is written if ``build`` did not write it. A ``build`` that
+    raises leaves no marker, so the next call builds again."""
+    out_dir = os.path.join(warehouse_root(leaf, root),
+                           layout_name(sf_dir, tag, fp))
+    marker = os.path.join(out_dir, done)
+    if os.path.exists(marker):
+        return out_dir
+    if os.path.exists(out_dir):
+        shutil.rmtree(out_dir)
+    build(out_dir)
+    if not os.path.exists(marker):
+        os.makedirs(os.path.dirname(marker), exist_ok=True)
+        with open(marker, "w"):
+            pass
+    return out_dir
+
+
+def sweep_siblings(out_dir: str, pattern: str) -> None:
+    """Remove every directory next to ``out_dir`` whose name matches
+    ``pattern`` (``re.match``), except ``out_dir`` itself: the older
+    generations of a layout, which each corpus regeneration would
+    otherwise strand as a full dead copy. Callers anchor the pattern on
+    the layout's full stem (``layout_name(sf_dir, tag, "")``), so a
+    distinct layout whose name merely extends the stem survives."""
+    parent, keep = os.path.split(out_dir.rstrip("/"))
+    try:
+        names = os.listdir(parent)
+    except OSError:
+        return
+    pat = re.compile(pattern)
+    for name in names:
+        if name != keep and pat.match(name):
+            shutil.rmtree(os.path.join(parent, name), ignore_errors=True)
 
 
 def source_file_stats(df: DataFrame) -> FileSig | None:

@@ -27,12 +27,16 @@ regenerated testdata rebuilds instead of silently probing a stale index.
 from __future__ import annotations
 
 import os
+import re
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .fingerprint import sig_fingerprint, source_file_stats, stat_sig
+from .fingerprint import (content_fingerprint, ensure_layout,
+                          layout_fingerprint, layout_name, sig_fingerprint,
+                          source_file_stats, stat_sig, sweep_siblings,
+                          warehouse_root)
 
 # One range partition per ~this many postings rows at build time; at local
 # test scale this yields a handful of term-range files, on a cluster the
@@ -46,24 +50,8 @@ _TABLES = ("postings", "docfreq", "docstats", "corpus_stats",
 # the cache key, so layouts written by older code are rebuilt, not misread.
 _LAYOUT_VERSION = 2
 
-
-def _layout_root(root: str | None) -> str:
-    from .fingerprint import warehouse_root
-
-    return warehouse_root("fts_layout", root)
-
-
-def content_fingerprint(docs: DataFrame, id_col: str = "doc_id",
-                        text_col: str = "text") -> str:
-    """Order-independent content hash of (id, text): count + sum(xxhash64).
-
-    Folds the VALUES into the key (not just ids/counts), so edited text
-    with stable ids still rebuilds — the stale-layout failure mode flagged
-    for the IVF layout's id-only fingerprint.
-    """
-    from .fingerprint import content_fingerprint as _cf
-
-    return _cf(docs, id_col, text_col)
+# Completion marker of a one-shot layout: corpus_stats is written last.
+FTS_DONE = os.path.join("corpus_stats", "_SUCCESS")
 
 
 def write_fts_layout(docs: DataFrame, out_dir: str, id_col: str = "doc_id",
@@ -121,11 +109,35 @@ def read_fts_layout(spark: SparkSession, out_dir: str) -> dict[str, DataFrame]:
     }
 
 
-# Opened-layout memo: repeated probes of the same written layout reuse the
-# resolved DataFrames (no per-probe parquet schema resolution). Keyed by
-# Spark application id so a restarted session never sees stale handles;
-# stale content is impossible because the out_dir embeds the fingerprint.
-_OPEN: dict[tuple[str, str], dict[str, DataFrame]] = {}
+# Opened-layout memo: (appId, out_dir) -> (marker mtime, index dict).
+# Repeated probes of the same written layout reuse the resolved
+# DataFrames (no per-probe parquet schema resolution). Keyed by Spark
+# application id so a restarted session never sees stale handles.
+_OPEN: dict[tuple[str, str], tuple[int, dict[str, DataFrame]]] = {}
+
+
+def open_fts_layout(spark: SparkSession,
+                    out_dir: str) -> dict[str, DataFrame]:
+    """``read_fts_layout`` through the opened-layout memo, for every
+    one-shot index layout (word and BPE analyzers). An entry is a hit
+    only while the completion marker it was opened under still exists:
+    a deleted layout is rebuilt by ``ensure_layout`` under the SAME
+    directory name before this runs, so the marker's mtime, not just
+    its presence, tells a rebuilt layout from the one the handles read.
+    Entries from other Spark applications or for deleted directories
+    are dropped when a new entry is stored."""
+    app_id = spark.sparkContext.applicationId
+    stamp = os.stat(os.path.join(out_dir, FTS_DONE)).st_mtime_ns
+    hit = _OPEN.get((app_id, out_dir))
+    if hit is not None and hit[0] == stamp:
+        return hit[1]
+    for k in list(_OPEN):
+        if k[0] != app_id or not os.path.isdir(k[1]):
+            del _OPEN[k]
+    index = read_fts_layout(spark, out_dir)
+    _OPEN[(app_id, out_dir)] = (stamp, index)
+    return index
+
 
 # Warm-probe freshness memo:
 # (appId, sf_dir, name, layout_root) -> (out_dir, file sig, dir sig).
@@ -184,19 +196,17 @@ def ensure_fts_layout(spark: SparkSession,
     may read arbitrary files (e.g. a regenerated copy at a new path), so
     it always takes the full fingerprint path.
     """
-    app_id = spark.sparkContext.applicationId
-    fast_key = (app_id, os.path.abspath(sf_dir), name, _layout_root(root))
+    fast_key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir),
+                name, warehouse_root("fts_layout", root))
     fresh = _FRESH.get(fast_key) if callable(docs) else None
     if fresh is not None:
         out_dir, sig, dsig = fresh
-        memo_key = (app_id, out_dir)
-        if memo_key in _OPEN:
-            try:
-                if (sig and stat_sig([p for p, _, _ in sig]) == sig
-                        and _dir_sig(sig) == dsig):
-                    return _OPEN[memo_key]
-            except OSError:
-                pass  # source files moved/deleted: fall through, rebuild
+        try:
+            if (stat_sig([p for p, _, _ in sig]) == sig
+                    and _dir_sig(sig) == dsig):
+                return open_fts_layout(spark, out_dir)
+        except OSError:
+            pass  # source files or the layout moved/deleted: rebuild
         _FRESH.pop(fast_key, None)
     was_thunk = callable(docs)
     if was_thunk:
@@ -205,55 +215,23 @@ def ensure_fts_layout(spark: SparkSession,
     fp = sig_fingerprint(sig) if sig else content_fingerprint(
         docs, id_col, text_col
     )
-    key = (
-        f"{os.path.basename(os.path.normpath(sf_dir)) or 'default'}"
-        f"-{name}-v{_LAYOUT_VERSION}-{fp}"
-    )
-    out_dir = os.path.join(_layout_root(root), key)
-    memo_key = (app_id, out_dir)
-    if memo_key not in _OPEN:
-        if not os.path.exists(
-            os.path.join(out_dir, "corpus_stats", "_SUCCESS")
-        ):
-            write_fts_layout(docs, out_dir, id_col, text_col)
-            _gc_stale_siblings(out_dir)
-        _OPEN[memo_key] = read_fts_layout(spark, out_dir)
+
+    def build(out_dir: str) -> None:
+        write_fts_layout(docs, out_dir, id_col, text_col)
+        # every format version of this corpus, never a distinct corpus
+        # whose name merely extends this one (e.g. "part" vs "part-v2docs")
+        sweep_siblings(out_dir,
+                       re.escape(layout_name(sf_dir, name, "")) + r"v\d+-")
+
+    out_dir = ensure_layout("fts_layout", sf_dir,
+                            f"{name}-v{_LAYOUT_VERSION}", fp, build,
+                            FTS_DONE, root)
     if sig and was_thunk:
         try:
             _FRESH[fast_key] = (out_dir, sig, _dir_sig(sig))
         except OSError:
             pass  # dirs raced away: no fast path, correctness unaffected
-    return _OPEN[memo_key]
-
-
-def _gc_stale_siblings(out_dir: str) -> None:
-    """After a successful build, drop sibling layouts of the SAME corpus
-    (same `{sf}-{name}-v` prefix, different fingerprint) — each testdata
-    regeneration otherwise strands a full dead copy of the index. Only
-    ever deletes under the layout root, never current-fingerprint dirs."""
-    import re
-    import shutil
-
-    root, key = os.path.split(out_dir.rstrip("/"))
-    # key = "{sf}-{name}-v{V}-{fp}": match the FULL versioned form
-    # `{sf}-{name}-v<digits>-` (any format version) — a bare prefix test
-    # would also capture a distinct corpus whose name merely extends this
-    # one (e.g. name "part" vs a future "part-v2docs") and delete its
-    # live layout
-    stem = key.rsplit(f"-v{_LAYOUT_VERSION}-", 1)[0]
-    pat = re.compile(rf"^{re.escape(stem)}-v\d+-")
-    try:
-        siblings = os.listdir(root)
-    except OSError:
-        return
-    for name in siblings:
-        if name != key and pat.match(name):
-            dead = os.path.join(root, name)
-            shutil.rmtree(dead, ignore_errors=True)
-            for mk in [k for k in _OPEN if k[1] == dead]:
-                del _OPEN[mk]
-            for fk in [k for k, v in _FRESH.items() if v[0] == dead]:
-                del _FRESH[fk]
+    return open_fts_layout(spark, out_dir)
 
 
 # --- segmented (append-able) FTS layout --------------------------------------
@@ -650,31 +628,17 @@ def ensure_fts_segment_layout(spark: SparkSession, docs: DataFrame,
     Probing it is how the registered ``bm25_incremental_layout_probe``
     earns a driver row for the append path — per-doc-deterministic
     tokenization means base + append must equal a one-shot build, so
-    the probe shares bm25_topk's full-corpus oracle. Cache key = sf
-    basename + format version + source fingerprint (file stats for
-    file-backed corpora — no per-probe corpus scan, same fast path as
-    the other ensure_* layouts; content hash otherwise)."""
-    from .fingerprint import layout_fingerprint, warehouse_root
+    the probe shares bm25_topk's full-corpus oracle."""
 
-    fp = layout_fingerprint(docs, "doc_id", "text")
-    key = (
-        f"{os.path.basename(os.path.normpath(sf_dir)) or 'default'}"
-        f"-seg-v{_LAYOUT_VERSION}-{fp}"
-    )
-    out_dir = os.path.join(warehouse_root("fts_segment_layout", root), key)
-    sentinel = os.path.join(out_dir, SEG_APPEND_DONE)
-    if os.path.exists(sentinel):
-        return out_dir
-    if os.path.exists(out_dir):
-        import shutil
+    def build(out_dir: str) -> None:
+        is_new = F.col("doc_id") % SEG_SPLIT_MOD == SEG_SPLIT_REM
+        write_fts_segments(docs.where(~is_new), out_dir)
+        append_fts_segment(spark, out_dir, docs.where(is_new))
 
-        shutil.rmtree(out_dir)
-    is_new = F.col("doc_id") % SEG_SPLIT_MOD == SEG_SPLIT_REM
-    write_fts_segments(docs.where(~is_new), out_dir)
-    append_fts_segment(spark, out_dir, docs.where(is_new))
-    with open(sentinel, "w"):
-        pass
-    return out_dir
+    return ensure_layout("fts_segment_layout", sf_dir,
+                         f"seg-v{_LAYOUT_VERSION}",
+                         layout_fingerprint(docs, "doc_id", "text"), build,
+                         SEG_APPEND_DONE, root)
 
 
 def ensure_fts_folded_layout(spark: SparkSession, docs: DataFrame,
@@ -689,26 +653,15 @@ def ensure_fts_folded_layout(spark: SparkSession, docs: DataFrame,
     shares bm25_topk's full-corpus oracle, and the store's probe plan is
     the one-shot layout's join-free term-pruned scan (the r9 VERDICT #7
     question, answered in the affirmative by construction)."""
-    from .fingerprint import layout_fingerprint, warehouse_root
 
-    fp = layout_fingerprint(docs, "doc_id", "text")
-    key = (
-        f"{os.path.basename(os.path.normpath(sf_dir)) or 'default'}"
-        f"-fold-v{_LAYOUT_VERSION}-{fp}"
-    )
-    out_dir = os.path.join(warehouse_root("fts_folded_layout", root), key)
-    sentinel = os.path.join(out_dir, SEG_FOLD_DONE)
-    if os.path.exists(sentinel):
-        return out_dir
-    if os.path.exists(out_dir):
-        import shutil
+    def build(out_dir: str) -> None:
+        mod = F.col("doc_id") % SEG_SPLIT_MOD
+        write_fts_segments(docs.where(~mod.isin(SEG_SPLIT_REM, 5)), out_dir)
+        append_fts_segment(spark, out_dir, docs.where(mod == SEG_SPLIT_REM))
+        append_fts_segment(spark, out_dir, docs.where(mod == 5))
+        fold_fts_segments(spark, out_dir)
 
-        shutil.rmtree(out_dir)
-    mod = F.col("doc_id") % SEG_SPLIT_MOD
-    write_fts_segments(docs.where(~mod.isin(SEG_SPLIT_REM, 5)), out_dir)
-    append_fts_segment(spark, out_dir, docs.where(mod == SEG_SPLIT_REM))
-    append_fts_segment(spark, out_dir, docs.where(mod == 5))
-    fold_fts_segments(spark, out_dir)
-    with open(sentinel, "w"):
-        pass
-    return out_dir
+    return ensure_layout("fts_folded_layout", sf_dir,
+                         f"fold-v{_LAYOUT_VERSION}",
+                         layout_fingerprint(docs, "doc_id", "text"), build,
+                         SEG_FOLD_DONE, root)

@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 from ..functions import topk
 from ..operators.dedup import DEDUP_IVF_NPROBE
 from ..operators.knn import NPROBE, centroid_pred, derive_nlist, ivf_assign
+from .fingerprint import ensure_layout, layout_fingerprint
 
 # Encode-semantics version token in the cache key (see ivfpq_layout).
 LAYOUT_FORMAT = "v3"  # v3: nlist derived from corpus count at build
@@ -188,22 +189,10 @@ def ensure_ivf_layout(spark: SparkSession, emb: DataFrame,
     of silently probing stale cells. Rooted at the repo directory, not
     the process CWD.
     """
-    from .fingerprint import layout_fingerprint, warehouse_root
-
-    root = warehouse_root("ivf_layout", root)
-    key = (
-        f"{os.path.basename(os.path.normpath(sf_dir)) or 'default'}"
-        f"-{LAYOUT_FORMAT}"
-        f"-{layout_fingerprint(emb, 'vec_id', 'embedding')}"
-    )
-    out_dir = os.path.join(root, key)
-    if not os.path.exists(os.path.join(out_dir, LAYOUT_DONE)):
-        import shutil
-
-        if os.path.exists(out_dir):  # partial prior attempt: start clean
-            shutil.rmtree(out_dir)
-        write_ivf_partitioned(emb, out_dir)
-    return out_dir
+    return ensure_layout("ivf_layout", sf_dir, LAYOUT_FORMAT,
+                         layout_fingerprint(emb, "vec_id", "embedding"),
+                         lambda out_dir: write_ivf_partitioned(emb, out_dir),
+                         LAYOUT_DONE, root)
 
 
 def ensure_ivf_trained_layout(spark: SparkSession, emb: DataFrame,
@@ -212,26 +201,15 @@ def ensure_ivf_trained_layout(spark: SparkSession, emb: DataFrame,
     sf_dir — the production-shaped path for real (clustered,
     anisotropic) embedding distributions, where Lloyd centroids beat the
     id-stride sample at equal nlist (r10 VERDICT #4: the seam existed
-    but no written layout persisted trained centroids). Same cache-key
-    discipline as ensure_ivf_layout; training cost is paid once at
-    write time and the trained set is frozen in the `_centroids` side
-    table, so appends and probes never retrain."""
-    from .fingerprint import layout_fingerprint, warehouse_root
-
-    root = warehouse_root("ivf_trained_layout", root)
-    key = (
-        f"{os.path.basename(os.path.normpath(sf_dir)) or 'default'}"
-        f"-{LAYOUT_FORMAT}-kmeans"
-        f"-{layout_fingerprint(emb, 'vec_id', 'embedding')}"
-    )
-    out_dir = os.path.join(root, key)
-    if not os.path.exists(os.path.join(out_dir, LAYOUT_DONE)):
-        import shutil
-
-        if os.path.exists(out_dir):  # partial prior attempt: start clean
-            shutil.rmtree(out_dir)
-        write_ivf_partitioned(emb, out_dir, centroids="kmeans")
-    return out_dir
+    but no written layout persisted trained centroids). Training cost
+    is paid once at write time and the trained set is frozen in the
+    `_centroids` side table, so appends and probes never retrain."""
+    return ensure_layout(
+        "ivf_trained_layout", sf_dir, f"{LAYOUT_FORMAT}-kmeans",
+        layout_fingerprint(emb, "vec_id", "embedding"),
+        lambda out_dir: write_ivf_partitioned(emb, out_dir,
+                                              centroids="kmeans"),
+        LAYOUT_DONE, root)
 
 
 def write_ivf_multiprobe(emb: DataFrame, out_dir: str,
@@ -272,25 +250,14 @@ def write_ivf_multiprobe(emb: DataFrame, out_dir: str,
 def ensure_ivf_multiprobe_layout(spark: SparkSession, emb: DataFrame,
                                  sf_dir: str, root: str | None = None,
                                  p: int = DEDUP_IVF_NPROBE) -> str:
-    """Build (once) the multi-probe dedup assignment layout for sf_dir —
-    same cache-key discipline as ensure_ivf_layout, keyed additionally
-    by ``p`` (a different probe width is a different artifact)."""
-    from .fingerprint import layout_fingerprint, warehouse_root
-
-    root = warehouse_root("ivf_multiprobe_layout", root)
-    key = (
-        f"{os.path.basename(os.path.normpath(sf_dir)) or 'default'}"
-        f"-{LAYOUT_FORMAT}-p{p}"
-        f"-{layout_fingerprint(emb, 'vec_id', 'embedding')}"
-    )
-    out_dir = os.path.join(root, key)
-    if not os.path.exists(os.path.join(out_dir, LAYOUT_DONE)):
-        import shutil
-
-        if os.path.exists(out_dir):  # partial prior attempt: start clean
-            shutil.rmtree(out_dir)
-        write_ivf_multiprobe(emb, out_dir, p=p)
-    return out_dir
+    """Build (once) the multi-probe dedup assignment layout for sf_dir,
+    keyed by ``p`` too (a different probe width is a different
+    artifact)."""
+    return ensure_layout(
+        "ivf_multiprobe_layout", sf_dir, f"{LAYOUT_FORMAT}-p{p}",
+        layout_fingerprint(emb, "vec_id", "embedding"),
+        lambda out_dir: write_ivf_multiprobe(emb, out_dir, p=p),
+        LAYOUT_DONE, root)
 
 
 def ensure_ivf_multiprobe_whitened_layout(spark: SparkSession,
@@ -308,27 +275,19 @@ def ensure_ivf_multiprobe_whitened_layout(spark: SparkSession,
     so a future append whitens arriving vectors against the build-time
     statistics instead of silently re-deriving drifted ones."""
     from ..operators.dedup import apply_whitening, whiten_stats
-    from .fingerprint import layout_fingerprint, warehouse_root
 
-    root = warehouse_root("ivf_multiprobe_whitened_layout", root)
-    key = (
-        f"{os.path.basename(os.path.normpath(sf_dir)) or 'default'}"
-        f"-{LAYOUT_FORMAT}-p{p}"
-        f"-{layout_fingerprint(emb, 'vec_id', 'embedding')}"
-    )
-    out_dir = os.path.join(root, key)
-    if not os.path.exists(os.path.join(out_dir, LAYOUT_DONE)):
-        import shutil
-
-        if os.path.exists(out_dir):
-            shutil.rmtree(out_dir)
+    def build(out_dir: str) -> None:
         mu, sd = whiten_stats(emb)
         z = apply_whitening(emb, mu, sd)
         write_ivf_multiprobe(z, out_dir, p=p,
                              extra_meta={"whitened": True,
                                          "whiten_mu": mu,
                                          "whiten_sd": sd})
-    return out_dir
+
+    return ensure_layout("ivf_multiprobe_whitened_layout", sf_dir,
+                         f"{LAYOUT_FORMAT}-p{p}",
+                         layout_fingerprint(emb, "vec_id", "embedding"),
+                         build, LAYOUT_DONE, root)
 
 
 def append_multiprobe_vectors(spark: SparkSession, out_dir: str,
@@ -444,31 +403,19 @@ def ensure_ivf_multiprobe_append_layout(spark: SparkSession,
     ``dedup_embedding_ivf_append_probe`` query earns its driver row:
     frozen-centroid append equivalence means the dedup pair set must
     hash-match the one-shot oracle over the full table."""
-    import shutil
 
-    from .fingerprint import layout_fingerprint, warehouse_root
+    def build(out_dir: str) -> None:
+        nlist = derive_nlist(emb.count())
+        is_new = (~centroid_pred("vec_id", nlist)) & (
+            F.col("vec_id") % APPEND_SPLIT_MOD == APPEND_SPLIT_REM
+        )
+        write_ivf_multiprobe(emb.where(~is_new), out_dir, nlist=nlist, p=p)
+        append_multiprobe_vectors(spark, out_dir, emb.where(is_new))
 
-    root = warehouse_root("ivf_multiprobe_append_layout", root)
-    key = (
-        f"{os.path.basename(os.path.normpath(sf_dir)) or 'default'}"
-        f"-{LAYOUT_FORMAT}-p{p}"
-        f"-{layout_fingerprint(emb, 'vec_id', 'embedding')}"
-    )
-    out_dir = os.path.join(root, key)
-    sentinel = os.path.join(out_dir, "_APPEND_DONE")
-    if os.path.exists(sentinel):
-        return out_dir
-    if os.path.exists(out_dir):  # partial prior attempt: start clean
-        shutil.rmtree(out_dir)
-    nlist = derive_nlist(emb.count())
-    is_new = (~centroid_pred("vec_id", nlist)) & (
-        F.col("vec_id") % APPEND_SPLIT_MOD == APPEND_SPLIT_REM
-    )
-    write_ivf_multiprobe(emb.where(~is_new), out_dir, nlist=nlist, p=p)
-    append_multiprobe_vectors(spark, out_dir, emb.where(is_new))
-    with open(sentinel, "w"):
-        pass
-    return out_dir
+    return ensure_layout("ivf_multiprobe_append_layout", sf_dir,
+                         f"{LAYOUT_FORMAT}-p{p}",
+                         layout_fingerprint(emb, "vec_id", "embedding"),
+                         build, "_APPEND_DONE", root)
 
 
 def read_layout_centroids(spark: SparkSession, out_dir: str) -> DataFrame:
@@ -552,34 +499,21 @@ def ensure_ivf_append_layout(spark: SparkSession, emb: DataFrame,
     sentinel marks the completed build+append sequence and the dir key
     carries the source fingerprint so regenerated data rebuilds.
     """
-    import shutil
 
-    from .fingerprint import layout_fingerprint, warehouse_root
+    def build(out_dir: str) -> None:
+        # nlist from the FULL corpus count, not the 80% base — the append
+        # sequence must end at the exact state a one-shot build over the
+        # full table produces, and that build derives nlist from N
+        nlist = derive_nlist(emb.count())
+        is_new = (~centroid_pred("vec_id", nlist)) & (
+            F.col("vec_id") % APPEND_SPLIT_MOD == APPEND_SPLIT_REM
+        )
+        write_ivf_partitioned(emb.where(~is_new), out_dir, nlist=nlist)
+        append_ivf_vectors(spark, out_dir, emb.where(is_new))
 
-    root = warehouse_root("ivf_append_layout", root)
-    key = (
-        f"{os.path.basename(os.path.normpath(sf_dir)) or 'default'}"
-        f"-{LAYOUT_FORMAT}"
-        f"-{layout_fingerprint(emb, 'vec_id', 'embedding')}"
-    )
-    out_dir = os.path.join(root, key)
-    sentinel = os.path.join(out_dir, "_APPEND_DONE")
-    if os.path.exists(sentinel):
-        return out_dir
-    if os.path.exists(out_dir):  # partial prior attempt: start clean
-        shutil.rmtree(out_dir)
-    # nlist from the FULL corpus count, not the 80% base — the append
-    # sequence must end at the exact state a one-shot build over the
-    # full table produces, and that build derives nlist from N
-    nlist = derive_nlist(emb.count())
-    is_new = (~centroid_pred("vec_id", nlist)) & (
-        F.col("vec_id") % APPEND_SPLIT_MOD == APPEND_SPLIT_REM
-    )
-    write_ivf_partitioned(emb.where(~is_new), out_dir, nlist=nlist)
-    append_ivf_vectors(spark, out_dir, emb.where(is_new))
-    with open(sentinel, "w"):
-        pass
-    return out_dir
+    return ensure_layout("ivf_append_layout", sf_dir, LAYOUT_FORMAT,
+                         layout_fingerprint(emb, "vec_id", "embedding"),
+                         build, "_APPEND_DONE", root)
 
 
 def probe_cells(spark: SparkSession, out_dir: str,

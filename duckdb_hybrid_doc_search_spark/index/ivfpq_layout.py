@@ -25,6 +25,7 @@ from ..config import SCORE_ROUND
 from ..functions import vector as V
 from ..operators.knn import (NPROBE, PQ_DIM, PQ_M, _pq_long, derive_nlist,
                              ivf_assign, pq_codebook, pq_encode)
+from .fingerprint import ensure_layout, layout_fingerprint
 
 
 # Bump when the encode semantics change (codebook rule, code layout …):
@@ -80,26 +81,11 @@ def write_ivfpq_layout(emb: DataFrame, out_dir: str,
 
 def ensure_ivfpq_layout(spark: SparkSession, emb: DataFrame,
                         sf_dir: str, root: str | None = None) -> str:
-    """Build (once per content) and return the layout dir — same
-    fingerprint-keyed caching contract as ensure_ivf_layout."""
-    from .fingerprint import layout_fingerprint
-
-    from .fingerprint import warehouse_root
-
-    root = warehouse_root("ivfpq_layout", root)
-    key = (
-        f"{os.path.basename(os.path.normpath(sf_dir)) or 'default'}"
-        f"-{LAYOUT_FORMAT}"
-        f"-{layout_fingerprint(emb, 'vec_id', 'embedding')}"
-    )
-    out_dir = os.path.join(root, key)
-    if not os.path.exists(os.path.join(out_dir, LAYOUT_DONE)):
-        import shutil
-
-        if os.path.exists(out_dir):  # partial prior attempt: start clean
-            shutil.rmtree(out_dir)
-        write_ivfpq_layout(emb, out_dir)
-    return out_dir
+    """Build (once per content) and return the layout dir."""
+    return ensure_layout("ivfpq_layout", sf_dir, LAYOUT_FORMAT,
+                         layout_fingerprint(emb, "vec_id", "embedding"),
+                         lambda out_dir: write_ivfpq_layout(emb, out_dir),
+                         LAYOUT_DONE, root)
 
 
 def ivfpq_layout_topk(spark: SparkSession, out_dir: str, emb: DataFrame,
@@ -249,39 +235,25 @@ def ensure_ivfpq_append_layout(spark: SparkSession, emb: DataFrame,
     so it must never share the build-once cache); `_APPEND_DONE` marks
     the completed build+append sequence.
     """
-    import shutil
-
     from ..operators.knn import centroid_pred, pq_sample_pred
-    from .fingerprint import layout_fingerprint
 
-    from .fingerprint import warehouse_root
+    def build(out_dir: str) -> None:
+        # every centroid AND codebook slot must be in the BASE build so
+        # the frozen side tables equal the full-table derivations — that
+        # is what makes the appended layout probe-identical to a one-shot
+        # build. nlist likewise comes from the FULL corpus count, not the
+        # 80% base
+        nlist = derive_nlist(emb.count())
+        is_new = (
+            (~centroid_pred("vec_id", nlist)) & (~pq_sample_pred("vec_id"))
+            & (F.col("vec_id") % APPEND_SPLIT_MOD == APPEND_SPLIT_REM)
+        )
+        write_ivfpq_layout(emb.where(~is_new), out_dir, nlist=nlist)
+        append_ivfpq_vectors(spark, out_dir, emb.where(is_new))
 
-    root = warehouse_root("ivfpq_append_layout", root)
-    key = (
-        f"{os.path.basename(os.path.normpath(sf_dir)) or 'default'}"
-        f"-{LAYOUT_FORMAT}"
-        f"-{layout_fingerprint(emb, 'vec_id', 'embedding')}"
-    )
-    out_dir = os.path.join(root, key)
-    sentinel = os.path.join(out_dir, "_APPEND_DONE")
-    if os.path.exists(sentinel):
-        return out_dir
-    if os.path.exists(out_dir):  # partial prior attempt: start clean
-        shutil.rmtree(out_dir)
-    # every centroid AND codebook slot must be in the BASE build so the
-    # frozen side tables equal the full-table derivations — that is what
-    # makes the appended layout probe-identical to a one-shot build.
-    # nlist likewise comes from the FULL corpus count, not the 80% base
-    nlist = derive_nlist(emb.count())
-    is_new = (
-        (~centroid_pred("vec_id", nlist)) & (~pq_sample_pred("vec_id"))
-        & (F.col("vec_id") % APPEND_SPLIT_MOD == APPEND_SPLIT_REM)
-    )
-    write_ivfpq_layout(emb.where(~is_new), out_dir, nlist=nlist)
-    append_ivfpq_vectors(spark, out_dir, emb.where(is_new))
-    with open(sentinel, "w"):
-        pass
-    return out_dir
+    return ensure_layout("ivfpq_append_layout", sf_dir, LAYOUT_FORMAT,
+                         layout_fingerprint(emb, "vec_id", "embedding"),
+                         build, "_APPEND_DONE", root)
 
 
 def append_ivfpq_vectors(spark: SparkSession, out_dir: str,

@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 from ..config import SCORE_ROUND
 from ..functions import vector as V
 from ..operators.knn import SQ_LEVELS, _to_double, sq_stats
+from .fingerprint import ensure_layout, layout_fingerprint
 
 
 # Encode-semantics version token in the cache key (see ivfpq_layout).
@@ -104,26 +105,11 @@ def write_sq8_layout(emb: DataFrame, out_dir: str,
 
 def ensure_sq8_layout(spark: SparkSession, emb: DataFrame,
                       sf_dir: str, root: str | None = None) -> str:
-    """Build (once per content) and return the layout dir — same
-    fingerprint-keyed caching contract as ensure_ivfpq_layout."""
-    from .fingerprint import layout_fingerprint
-
-    from .fingerprint import warehouse_root
-
-    root = warehouse_root("sq8_layout", root)
-    key = (
-        f"{os.path.basename(os.path.normpath(sf_dir)) or 'default'}"
-        f"-{LAYOUT_FORMAT}"
-        f"-{layout_fingerprint(emb, 'vec_id', 'embedding')}"
-    )
-    out_dir = os.path.join(root, key)
-    if not os.path.exists(os.path.join(out_dir, LAYOUT_DONE)):
-        import shutil
-
-        if os.path.exists(out_dir):  # partial prior attempt: start clean
-            shutil.rmtree(out_dir)
-        write_sq8_layout(emb, out_dir)
-    return out_dir
+    """Build (once per content) and return the layout dir."""
+    return ensure_layout("sq8_layout", sf_dir, LAYOUT_FORMAT,
+                         layout_fingerprint(emb, "vec_id", "embedding"),
+                         lambda out_dir: write_sq8_layout(emb, out_dir),
+                         LAYOUT_DONE, root)
 
 
 def sq8_layout_topk(spark: SparkSession, out_dir: str, emb: DataFrame,

@@ -11,12 +11,15 @@ boxes, fingerprint-cached builds.
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..index.catalog import load_table
-from ..index.fingerprint import layout_fingerprint
+from ..index.fingerprint import (ensure_layout, layout_fingerprint,
+                                 layout_name, sweep_siblings,
+                                 warehouse_root)
 from ..index.maintenance import (Z_BITS, compact_parquet_dir,
                                  skipped_files, write_sorted_buckets,
                                  write_zordered_buckets)
@@ -93,29 +96,23 @@ SELECT
 """.strip()
 
 
-def _scratch_root() -> str:
-    repo = os.path.dirname(os.path.dirname(os.path.dirname(
-        os.path.abspath(__file__)
-    )))
-    return os.path.join(repo, "spark-warehouse", "layout_metrics")
-
-
-def _gc_stale_siblings(stem: str, keep: str) -> None:
-    """After building a fingerprint-keyed scratch layout, drop older
-    generations of the SAME `{sf}-{kind}-` stem (r4 ADVICE: scratch grew
-    unboundedly across corpus regenerations). The trailing '-' in the
-    match keeps a distinct kind whose name merely extends this stem
+def _metrics_layout(sf_dir: str, kind: str, fp: str, write,
+                    *old_kinds: str) -> str:
+    """Build (once per corpus fingerprint) the ``{sf}-{kind}-{fp}``
+    scratch layout with ``write(out_dir)``, then drop older generations
+    of the SAME ``{sf}-{kind}-`` stem (r4 ADVICE: scratch grew
+    unboundedly across corpus regenerations), and of the stems in
+    ``old_kinds`` that a renamed kind left behind. The trailing '-' in
+    the match keeps a distinct kind whose name merely extends this stem
     (e.g. 'sortb' vs a future 'sortb2') out of the sweep."""
-    import re
-    import shutil
 
-    root = _scratch_root()
-    if not os.path.isdir(root):
-        return
-    pat = re.compile(rf"^{re.escape(stem)}-")
-    for d in os.listdir(root):
-        if d != keep and pat.match(d):
-            shutil.rmtree(os.path.join(root, d), ignore_errors=True)
+    def build(out_dir: str) -> None:
+        write(out_dir)
+        for k in (kind, *old_kinds):
+            sweep_siblings(out_dir, re.escape(layout_name(sf_dir, k, "")))
+
+    return ensure_layout("layout_metrics", sf_dir, kind, fp, build,
+                         "_SUCCESS")
 
 
 @register("lineitem_zorder_prune_stats", oracle=_dd_zorder_oracle(),
@@ -139,16 +136,13 @@ def lineitem_zorder_prune_stats(spark: SparkSession,
         "l_partkey", "l_suppkey", "l_quantity"
     )
     fp = layout_fingerprint(li, "l_partkey", "l_suppkey")
-    sf = os.path.basename(os.path.normpath(sf_dir)) or "default"
-    zdir = os.path.join(_scratch_root(), f"{sf}-zorderd-{fp}")
-    sdir = os.path.join(_scratch_root(), f"{sf}-sortbd-{fp}")
-    if not os.path.exists(os.path.join(zdir, "_SUCCESS")):
-        write_zordered_buckets(li, zdir, "l_partkey", "l_suppkey",
-                               ZO_FILES)
-        _gc_stale_siblings(f"{sf}-zorderd", os.path.basename(zdir))
-    if not os.path.exists(os.path.join(sdir, "_SUCCESS")):
-        write_sorted_buckets(li, sdir, "l_suppkey", ZO_FILES)
-        _gc_stale_siblings(f"{sf}-sortbd", os.path.basename(sdir))
+    zdir = _metrics_layout(
+        sf_dir, "zorderd", fp,
+        lambda path: write_zordered_buckets(li, path, "l_partkey",
+                                            "l_suppkey", ZO_FILES))
+    sdir = _metrics_layout(
+        sf_dir, "sortbd", fp,
+        lambda path: write_sorted_buckets(li, path, "l_suppkey", ZO_FILES))
     zn, zskip_p = skipped_files(zdir, "l_partkey", "l_suppkey",
                                 ZO_PART_BOX, UNBOUNDED)
     _, zskip_s = skipped_files(zdir, "l_partkey", "l_suppkey",
@@ -189,7 +183,7 @@ def lineitem_compaction_stats(spark: SparkSession,
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_extendedprice"
     )
-    frag = os.path.join(_scratch_root(), "compact_scratch")
+    frag = os.path.join(warehouse_root("layout_metrics"), "compact_scratch")
     li.repartition(40).write.mode("overwrite").parquet(frag)
     n_rows = spark.read.parquet(frag).count()
     stats = compact_parquet_dir(spark, frag, target_bytes=1 << 30)
@@ -243,24 +237,21 @@ def corpus_write_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
     Output: shard, n_docs, n_files, total_chars.
     """
     docs = load_table(spark, sf_dir, "documents")
-    fp = layout_fingerprint(docs, "doc_id", "text")
-    sf = os.path.basename(os.path.normpath(sf_dir)) or "default"
-    out = os.path.join(_scratch_root(), f"{sf}-shards-{fp}")
     shard = F.pmod(
         F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 15),
                16, 10).cast("long"),
         F.lit(N_SHARDS),
     ).alias("shard")
-    if not os.path.exists(os.path.join(out, "_SUCCESS")):
-        (
+    out = _metrics_layout(
+        sf_dir, "shards", layout_fingerprint(docs, "doc_id", "text"),
+        lambda path: (
             docs.select("doc_id", "text", "lang", "source", "n_chars", shard)
             .repartition("shard")
             .write.mode("overwrite")
             .option("maxRecordsPerFile", SHARD_MAX_RECORDS)
             .partitionBy("shard")
-            .parquet(out)
-        )
-        _gc_stale_siblings(f"{sf}-shards", os.path.basename(out))
+            .parquet(path)
+        ))
     written = spark.read.parquet(out)
     files = written.select(
         "shard", F.input_file_name().alias("f")
@@ -313,22 +304,17 @@ def orders_partition_prune_stats(spark: SparkSession,
     should have skipped, and the hash flips."""
     orders = load_table(spark, sf_dir, "orders")
     withy = orders.withColumn("o_year", F.year("o_orderdate"))
-    fp = layout_fingerprint(orders, "o_orderkey")
-    sf = os.path.basename(os.path.normpath(sf_dir)) or "default"
     # "opart1" (one file per year dir): the r9 repartition("o_year")
     # changed the written shape, so the cache key must not collide with
-    # the pre-r9 multi-file layout
-    outdir = os.path.join(_scratch_root(), f"{sf}-opart1-{fp}")
-    if not os.path.exists(os.path.join(outdir, "_SUCCESS")):
-        (
+    # the pre-r9 multi-file layout; its generations under the OLD stem
+    # ("{sf}-opart-") are swept too (r9 review finding)
+    outdir = _metrics_layout(
+        sf_dir, "opart1", layout_fingerprint(orders, "o_orderkey"),
+        lambda path: (
             withy.repartition("o_year")
-            .write.partitionBy("o_year").mode("overwrite").parquet(outdir)
-        )
-        _gc_stale_siblings(f"{sf}-opart1", os.path.basename(outdir))
-        # also reap pre-r9 multi-file generations under the OLD stem
-        # ("{sf}-opart-"): the stem rename orphaned them from the
-        # normal sweep (r9 review finding)
-        _gc_stale_siblings(f"{sf}-opart", os.path.basename(outdir))
+            .write.partitionBy("o_year").mode("overwrite").parquet(path)
+        ),
+        "opart")
 
     part_dirs = [d for d in os.listdir(outdir) if d.startswith("o_year=")]
     files_total = sum(

@@ -87,6 +87,19 @@ RECHECK: dict[str, int] = dict.fromkeys([
     "hybrid_search_filtered", "hybrid_search_fused",
     "hybrid_search_ivf_fused", "hybrid_search_reranked", "part_name_bm25",
     "search_snippets", "streaming_fts_segment_append",
+    # ... and every written layout moved behind one cache
+    # (index/fingerprint.ensure_layout) and one opened-layout memo
+    # (fts_layout.open_fts_layout): the queries that reach them
+    "ann_sq8_layout_probe", "bm25_bpe_incremental_layout_probe",
+    "bm25_bpe_layout_probe", "bm25_bpe_topk", "corpus_pack_bpe_budget",
+    "corpus_write_shards", "dedup_embedding_ivf",
+    "dedup_embedding_ivf_append_probe", "dedup_embedding_ivf_whitened",
+    "dedup_incremental_batch", "dedup_incremental_layout_probe",
+    "lineitem_compaction_stats", "lineitem_zorder_prune_stats",
+    "orc_documents_scan", "orders_partition_prune_stats", "search_facets",
+    "search_more_like_this", "search_prefix_completions",
+    "streaming_incremental_dedup", "streaming_ingest_pipeline",
+    "text_bpe_encode_stats",
 ], 16)
 
 

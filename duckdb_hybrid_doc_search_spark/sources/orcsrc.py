@@ -3,58 +3,40 @@ format (ref reads markdown/duckdb only; corpus interchange at scale also
 arrives as ORC from Hive-era pipelines).
 
 The scan query materializes an ORC copy of the documents table once per
-source generation (cache keyed on the source parquet's mtime+size, like
-index/fts_layout.py) and then verifies the round-trip: every row's text
-must hash identically to the parquet original — the property that makes
-a format migration trustworthy. ORC files are splittable and carry their
-schema, so the read side needs no inference pass.
+source generation (cache keyed on the source parquet's mtime+size) and
+then verifies the round-trip: every row's text must hash identically to
+the parquet original — the property that makes a format migration
+trustworthy. ORC files are splittable and carry their schema, so the
+read side needs no inference pass.
 """
 
 from __future__ import annotations
 
 import os
 import re
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
+
+from ..index.fingerprint import ensure_layout, layout_name, sweep_siblings
 
 _ORC_VERSION = 1
 
 
-def _orc_root(root: str | None) -> str:
-    if root is not None:
-        return root
-    repo_dir = os.path.dirname(os.path.dirname(
-        os.path.dirname(os.path.abspath(__file__))
-    ))
-    return os.path.join(repo_dir, "spark-warehouse", "orc_docs")
-
-
-def _gc_stale_siblings(base: str, stem: str, keep: str) -> None:
-    """Drop older generations of THIS corpus only: siblings must match
-    the full versioned prefix (re.escape'd), so a distinct corpus whose
-    name merely extends the stem is never collected."""
-    if not os.path.isdir(base):
-        return
-    pat = re.compile(rf"^{re.escape(stem)}-v{_ORC_VERSION}-")
-    for d in os.listdir(base):
-        if d != keep and pat.match(d):
-            shutil.rmtree(os.path.join(base, d), ignore_errors=True)
-
-
 def ensure_orc_documents(spark: SparkSession, sf_dir: str,
                          root: str | None = None) -> str:
-    """Write (once per source generation) and return the ORC copy path."""
+    """Write (once per source generation) and return the ORC copy path;
+    older generations of the same corpus are swept after a write."""
     src = os.path.join(sf_dir, "documents.parquet")
     st = os.stat(src)
-    stem = os.path.basename(os.path.normpath(sf_dir)) + "-documents"
-    key = f"{stem}-v{_ORC_VERSION}-{st.st_mtime_ns}-{st.st_size}"
-    base = _orc_root(root)
-    out = os.path.join(base, key)
-    if not os.path.exists(os.path.join(out, "_SUCCESS")):
-        spark.read.parquet(src).write.mode("overwrite").orc(out)
-        _gc_stale_siblings(base, stem, key)
-    return out
+    tag = f"documents-v{_ORC_VERSION}"
+
+    def build(out_dir: str) -> None:
+        spark.read.parquet(src).write.mode("overwrite").orc(out_dir)
+        sweep_siblings(out_dir, re.escape(layout_name(sf_dir, tag, "")))
+
+    return ensure_layout("orc_docs", sf_dir, tag,
+                         f"{st.st_mtime_ns}-{st.st_size}", build, "_SUCCESS",
+                         root)
 
 
 def read_orc_docs(spark: SparkSession, path: str) -> DataFrame:

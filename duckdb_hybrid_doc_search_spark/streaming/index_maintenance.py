@@ -81,24 +81,15 @@ def ensure_fts_base_store(spark: SparkSession, docs: DataFrame,
     identically — callers slicing the corpus differently (the SEG_SPLIT
     append loop vs the ingestion pipeline's BATCH_MOD split) must pass
     distinct names or they silently share one cached store."""
-    import os
-    import shutil
-
-    from ..index.fingerprint import layout_fingerprint, warehouse_root
+    from ..index.fingerprint import ensure_layout, layout_fingerprint
     from ..index.fts_layout import (_LAYOUT_VERSION, SEG_DONE,
                                     write_fts_segments)
 
-    fp = layout_fingerprint(docs, "doc_id", "text")
-    key = (
-        f"{os.path.basename(os.path.normpath(sf_dir)) or 'default'}"
-        f"-{name}-v{_LAYOUT_VERSION}-{fp}"
-    )
-    out_dir = os.path.join(warehouse_root("fts_segment_layout", root), key)
-    if not os.path.exists(os.path.join(out_dir, SEG_DONE)):
-        if os.path.exists(out_dir):
-            shutil.rmtree(out_dir)
-        write_fts_segments(docs, out_dir)
-    return out_dir
+    return ensure_layout("fts_segment_layout", sf_dir,
+                         f"{name}-v{_LAYOUT_VERSION}",
+                         layout_fingerprint(docs, "doc_id", "text"),
+                         lambda out_dir: write_fts_segments(docs, out_dir),
+                         SEG_DONE, root)
 
 
 def run_streaming_fts_append(spark: SparkSession, sf_dir: str, query: str,
@@ -194,34 +185,29 @@ def ensure_ivf_stream_base(spark: SparkSession, sf_dir: str,
     state. Returns (dir, nlist). The key carries its own name — the
     file-stat fingerprint hashes FILES, not plans, so this slice needs a
     distinct stem from any other cut of the same parquet."""
-    import os
-    import shutil
-
     from pyspark.sql import functions as F
 
-    from ..index.fingerprint import layout_fingerprint, warehouse_root
+    from ..index.fingerprint import ensure_layout, layout_fingerprint
     from ..index.ivf_layout import (APPEND_SPLIT_MOD, APPEND_SPLIT_REM,
                                     LAYOUT_DONE, LAYOUT_FORMAT,
                                     read_layout_meta, write_ivf_partitioned)
     from ..operators.knn import centroid_pred, derive_nlist
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    key = (
-        f"{os.path.basename(os.path.normpath(sf_dir)) or 'default'}"
-        f"-ivfstreambase-{LAYOUT_FORMAT}"
-        f"-{layout_fingerprint(emb, 'vec_id', 'embedding')}"
-    )
-    out_dir = os.path.join(warehouse_root("ivf_stream_base", root), key)
-    if os.path.exists(os.path.join(out_dir, LAYOUT_DONE)):
-        return out_dir, read_layout_meta(out_dir)["nlist"]
-    if os.path.exists(out_dir):
-        shutil.rmtree(out_dir)
-    nlist = derive_nlist(emb.count())
-    is_new = (~centroid_pred("vec_id", nlist)) & (
-        F.col("vec_id") % APPEND_SPLIT_MOD == APPEND_SPLIT_REM
-    )
-    write_ivf_partitioned(emb.where(~is_new), out_dir, nlist=nlist)
-    return out_dir, nlist
+
+    def build(out_dir: str) -> None:
+        nlist = derive_nlist(emb.count())
+        is_new = (~centroid_pred("vec_id", nlist)) & (
+            F.col("vec_id") % APPEND_SPLIT_MOD == APPEND_SPLIT_REM
+        )
+        write_ivf_partitioned(emb.where(~is_new), out_dir, nlist=nlist)
+
+    out_dir = ensure_layout("ivf_stream_base", sf_dir,
+                            f"ivfstreambase-{LAYOUT_FORMAT}",
+                            layout_fingerprint(emb, "vec_id", "embedding"),
+                            build, LAYOUT_DONE, root)
+    # the build's nlist, frozen in the layout meta
+    return out_dir, read_layout_meta(out_dir)["nlist"]
 
 
 def run_streaming_ivf_append(spark: SparkSession, sf_dir: str,

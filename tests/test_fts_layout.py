@@ -11,9 +11,10 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from duckdb_hybrid_doc_search_spark.index.catalog import load_table
+from duckdb_hybrid_doc_search_spark.index.fingerprint import (
+    content_fingerprint)
 from duckdb_hybrid_doc_search_spark.index.fts_layout import (
-    content_fingerprint, ensure_fts_layout, read_fts_layout,
-    write_fts_layout)
+    ensure_fts_layout, read_fts_layout, write_fts_layout)
 from duckdb_hybrid_doc_search_spark.operators import bm25
 
 QUERY = "spark vector join fast merge"
@@ -82,9 +83,10 @@ def test_file_fingerprint_no_spark_jobs_and_tracks_mtime(spark, sf_dir,
 
 def test_layout_fingerprint_tracks_content(spark, sf_dir):
     docs = load_table(spark, sf_dir, "documents")
-    fp1 = content_fingerprint(docs)
+    fp1 = content_fingerprint(docs, "doc_id", "text")
     fp2 = content_fingerprint(
-        docs.withColumn("text", F.concat(F.col("text"), F.lit("x")))
+        docs.withColumn("text", F.concat(F.col("text"), F.lit("x"))),
+        "doc_id", "text",
     )
     assert fp1 != fp2  # same ids, same count, different text -> rebuild
 
@@ -197,6 +199,33 @@ def test_warm_probe_fast_path_skips_thunk(spark, sf_dir, tmp_path):
     os.utime(victim, ns=(st.st_atime_ns, st.st_mtime_ns + 1))
     ensure_fts_layout(spark, docs_thunk, str(data_dir), root=layout_root)
     assert calls["n"] == 2
+
+
+def test_deleted_layout_rebuilt_not_served_stale(spark, sf_dir, tmp_path):
+    """A layout deleted under a live session is rebuilt by the next
+    ensure call, thunk or DataFrame form, and probes the same rows: the
+    opened-layout memo must not hand out handles to files that are
+    gone."""
+    import os
+    import shutil
+
+    docs = load_table(spark, sf_dir, "documents")
+    root = str(tmp_path / "layouts")
+
+    def probe(idx):
+        return [tuple(r) for r in
+                bm25.bm25_topk_terms(idx, ["the"], 3).collect()]
+
+    want = probe(ensure_fts_layout(spark, lambda: docs, sf_dir, root=root))
+    assert len(want) == 3
+    (key,) = os.listdir(root)
+    for form in (lambda: docs, docs):
+        shutil.rmtree(os.path.join(root, key))
+        idx = ensure_fts_layout(spark, form, sf_dir, root=root)
+        assert os.listdir(root) == [key]
+        assert os.path.exists(
+            os.path.join(root, key, "corpus_stats", "_SUCCESS"))
+        assert probe(idx) == want
 
 
 # --- segmented (append-able) FTS store ---------------------------------------

@@ -350,12 +350,13 @@ def test_partition_prune_probe_has_partition_filters(spark, sf_dir):
     lq.orders_partition_prune_stats(spark, sf_dir).collect()
     from duckdb_hybrid_doc_search_spark.index.catalog import load_table
     from duckdb_hybrid_doc_search_spark.index.fingerprint import (
-        layout_fingerprint,
+        layout_fingerprint, warehouse_root,
     )
     orders = load_table(spark, sf_dir, "orders")
     fp = layout_fingerprint(orders, "o_orderkey")
     sf = os.path.basename(os.path.normpath(sf_dir)) or "default"
-    outdir = os.path.join(lq._scratch_root(), f"{sf}-opart1-{fp}")
+    outdir = os.path.join(warehouse_root("layout_metrics"),
+                          f"{sf}-opart1-{fp}")
     lo, hi = lq.PRUNE_YEARS
     pruned = spark.read.parquet(outdir).where(
         (F.col("o_year") >= lo) & (F.col("o_year") <= hi)
