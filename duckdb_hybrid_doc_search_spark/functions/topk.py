@@ -58,11 +58,15 @@ def matrix(vectors: Iterable[Sequence[float]]) -> np.ndarray:
     return np.array(list(vectors), dtype=np.float64)
 
 
-def cosine(X: np.ndarray, Q: np.ndarray) -> np.ndarray:
-    """(n, q) cosine similarity of the rows of X against the rows of Q."""
+def cosine(X: np.ndarray, Q: np.ndarray,
+           xnorm: np.ndarray | None = None) -> np.ndarray:
+    """(n, q) cosine similarity of the rows of X against the rows of Q.
+    ``xnorm``, X's row norms ``np.sqrt((X * X).sum(axis=1))``, may be
+    passed in when X is scored many times; the result is the same."""
+    if xnorm is None:
+        xnorm = np.sqrt((X * X).sum(axis=1))
     return (X @ Q.T) / (
-        np.sqrt((X * X).sum(axis=1))[:, None]
-        * np.sqrt((Q * Q).sum(axis=1))[None, :]
+        xnorm[:, None] * np.sqrt((Q * Q).sum(axis=1))[None, :]
     )
 
 
@@ -92,13 +96,24 @@ def local_topk(S: np.ndarray, ids: np.ndarray, k: int, desc: bool,
     """(query column, row) index pairs of each query column's top-k rows
     of the score block ``S`` (n, q), by score then ``ids`` ascending,
     NaN last.
-    ``keep`` (n, q) restricts each query to the rows marked True."""
+    ``keep`` (n, q) restricts each query to the rows marked True.
+
+    Only the rows whose key ties or beats the column's k-th key (found in
+    O(n) by ``np.partition``, which also sorts NaN last) are ordered;
+    with fewer than k non-NaN keys the k-th key is NaN and every row is.
+    """
     key = -S if desc else S
+    every = np.arange(len(ids))
     qi, ci = [], []
     for j in range(S.shape[1]):
-        rows = slice(None) if keep is None else np.flatnonzero(keep[:, j])
-        order = np.lexsort((ids[rows], key[rows, j]))[:k]
-        sel = order if keep is None else rows[order]
+        rows = every if keep is None else np.flatnonzero(keep[:, j])
+        col = key[rows, j]
+        if 0 < k < len(rows):
+            kth = np.partition(col, k - 1)[k - 1]
+            if not np.isnan(kth):
+                near = np.flatnonzero(col <= kth)
+                rows, col = rows[near], col[near]
+        sel = rows[np.lexsort((ids[rows], col))[:k]]
         qi.append(np.full(len(sel), j, dtype=np.int64))
         ci.append(sel)
     return np.concatenate(qi), np.concatenate(ci)

@@ -28,7 +28,8 @@ import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 
-from ..config import SCORE_ROUND, SCORE_THRESHOLD, TOP_K_DEFAULT
+from ..config import (RERANK_TRUNCATE_CHARS, SCORE_ROUND, SCORE_THRESHOLD,
+                      TOP_K_DEFAULT)
 from ..functions import topk
 from ..functions.fusion import fuse_value
 from ..models.embedder import hash_embed_text
@@ -36,7 +37,7 @@ from ..models.reranker import cross_encoder_scores
 from ..models.tokenizer import tokenize_query
 from ..operators.bm25 import okapi_contrib
 from ..operators.chunker_core import add_path_prefix, trim_path_prefix
-from ..utils import round_half_up
+from ..utils import round_half_up_array
 
 RESULT_FIELDS = ("doc_id", "file_path", "header_path", "line_start",
                  "line_end", "content", "score", "fts_score", "vss_score")
@@ -44,8 +45,9 @@ DISPLAY_FIELDS = RESULT_FIELDS[:6]
 
 # Largest index, in on-disk bytes of the tables the snapshot reads, that
 # an engine opens. On the 1031-chunk bench index (64-dim embeddings) the
-# snapshot held 2.4 bytes of driver memory per on-disk byte (2.41 MB for
-# 1.00 MB), so the bound is ~600 MB of driver memory.
+# snapshot, rerank term ids included, held 2.7 bytes of driver memory per
+# on-disk byte (2.61 MB for 0.98 MB: tracemalloc plus Arrow's allocator),
+# so the bound is ~700 MB of driver memory.
 MAX_SNAPSHOT_BYTES = 256 * 1024 * 1024
 
 
@@ -57,19 +59,36 @@ def _disk_bytes(path: str) -> int:
 
 class _Snapshot:
     """The serving copy of one index, read-only after construction (MCP
-    HTTP requests share it across threads): the documents sorted by
-    doc_id, so array position is the tie-break order; their display
-    fields; the float64 (n, d) embedding matrix in that order; and the
-    BM25 contributions as a term-sorted CSR — term ``t``'s postings are
-    ``pos[off[t]:off[t+1]]`` (doc positions) and ``contrib[...]``."""
+    HTTP requests share it across threads), holding every per-document
+    value a search reads so that a search does only per-query work:
+
+    - the documents sorted by doc_id, so array position is the tie-break
+      order; their display fields, and ``pos_of`` (doc_id -> position);
+    - the float64 (n, d) embedding matrix in that order and its row
+      norms ``xnorm``;
+    - the BM25 contributions as a term-sorted CSR — term ``t``'s postings
+      are ``pos[off[t]:off[t+1]]`` (doc positions) and ``contrib[...]``;
+    - for the overlap reranker, the sorted distinct term ids of each
+      document's ``content[:RERANK_TRUNCATE_CHARS]`` under the index's
+      tokenizer, ``rr_ids[rr_off[p]:rr_off[p+1]]`` (int32). ``term_ix``
+      numbers the posting terms first (ids below ``nterms``), then any
+      token found only in a truncated content, such as a word cut at the
+      truncation point.
+
+    On the 1031-chunk bench index the rerank term ids, row norms and
+    ``pos_of`` take ~0.02 s of tokenizing at open and 0.18 MB of driver
+    memory (2.61 MB for the whole snapshot). Opening took a median 0.81 s
+    against 0.72 s without them, within the spread of repeated opens
+    (4-core VM)."""
 
     def __init__(self, documents: DataFrame, embeddings: DataFrame,
-                 postings: DataFrame):
+                 postings: DataFrame, tokenizer: str):
         docs = documents.select(*DISPLAY_FIELDS).toArrow()
         docs = docs.take(pc.sort_indices(docs["doc_id"]))
         ids = docs["doc_id"]
         self.fields = {c: docs[c].to_pylist() for c in DISPLAY_FIELDS}
         self.n = len(ids)
+        self.pos_of = {d: p for p, d in enumerate(self.fields["doc_id"])}
 
         emb = embeddings.select("doc_id", "embedding").toArrow()
         emb = emb.take(pc.sort_indices(emb["doc_id"]))
@@ -78,6 +97,7 @@ class _Snapshot:
                              "embeddings hold different doc_ids")
         flat = pc.list_flatten(emb["embedding"]).to_numpy()
         self.X = flat.astype(np.float64).reshape(self.n, -1 if self.n else 0)
+        self.xnorm = np.sqrt((self.X * self.X).sum(axis=1))
 
         post = postings.select(
             "term", "doc_id", okapi_contrib().alias("contrib")).toArrow()
@@ -89,9 +109,19 @@ class _Snapshot:
         # the first row of each term's run; none without postings
         starts = np.flatnonzero(np.r_[len(terms) > 0, terms[1:] != terms[:-1]])
         self.term_ix = {t: i for i, t in enumerate(terms[starts])}
+        self.nterms = len(starts)
         self.off = np.r_[starts, len(terms)]
         self.pos = post["pos"].to_numpy()
         self.contrib = post["contrib"].to_numpy()
+
+        rr_ids, rr_len = [], [0]
+        for text in self.fields["content"]:
+            toks = set(tokenize_query(text[:RERANK_TRUNCATE_CHARS], tokenizer))
+            rr_ids += sorted(self.term_ix.setdefault(t, len(self.term_ix))
+                             for t in toks)
+            rr_len.append(len(toks))
+        self.rr_ids = np.array(rr_ids, dtype=np.int32)
+        self.rr_off = np.cumsum(rr_len)
 
     def candidates(self, qterms: list[str], qvec: list[float], k: int
                    ) -> list[dict[str, Any]]:
@@ -100,28 +130,45 @@ class _Snapshot:
         fused — one row per candidate, at most 2k rows."""
         if not self.n:
             return []
-        terms = sorted({self.term_ix[t] for t in qterms if t in self.term_ix})
+        terms = sorted({i for i in map(self.term_ix.get, qterms)
+                        if i is not None and i < self.nterms})
         ix = np.concatenate([np.zeros(0, np.int64)] + [
             np.arange(self.off[t], self.off[t + 1]) for t in terms])
         raw = np.bincount(self.pos[ix], self.contrib[ix], minlength=self.n)
         hit = np.unique(self.pos[ix])
-        bm25 = np.array([round_half_up(x, SCORE_ROUND) for x in raw[hit]])
+        bm25 = round_half_up_array(raw[hit], SCORE_ROUND)
         _, top = topk.local_topk(bm25[:, None], hit, k, desc=True)
         fts = dict(zip(hit[top].tolist(), bm25[top].tolist()))
 
-        dist = np.round(1.0 - topk.cosine(self.X, topk.matrix([qvec])),
-                        SCORE_ROUND)
+        dist = np.round(
+            1.0 - topk.cosine(self.X, topk.matrix([qvec]), self.xnorm),
+            SCORE_ROUND)
         _, top = topk.local_topk(dist, np.arange(self.n), k, desc=False)
         vss = dict(zip(top.tolist(), dist[top, 0].tolist()))
 
-        rows = []
+        rows, fused = [], []
         for p in fts.keys() | vss.keys():
             f, v = fts.get(p), vss.get(p)
             row = {c: self.fields[c][p] for c in DISPLAY_FIELDS}
-            row.update(fts_score=f, vss_score=v,
-                       score=round_half_up(fuse_value(f, v), SCORE_ROUND))
+            row.update(fts_score=f, vss_score=v)
             rows.append(row)
+            fused.append(fuse_value(f, v))
+        for row, s in zip(rows, round_half_up_array(
+                np.array(fused, dtype=np.float64), SCORE_ROUND).tolist()):
+            row["score"] = s
         return rows
+
+    def overlap(self, qset: set[str], doc_ids: list[str]) -> np.ndarray:
+        """The overlap rerank score of each document of ``doc_ids``:
+        how many of the query terms ``qset`` (non-empty) its truncated
+        content holds, over ``len(qset)``. A term outside ``term_ix``
+        is in no document."""
+        mask = np.zeros(len(self.term_ix), dtype=bool)
+        mask[[self.term_ix[t] for t in qset if t in self.term_ix]] = True
+        off, ids = self.rr_off, self.rr_ids
+        hits = [np.count_nonzero(mask[ids[off[p]:off[p + 1]]])
+                for p in map(self.pos_of.__getitem__, doc_ids)]
+        return np.array(hits, dtype=np.float64) / len(qset)
 
 
 class DocSearchEngine:
@@ -166,7 +213,8 @@ class DocSearchEngine:
         self.embeddings = load("embeddings")
         self.index = {"postings_scored": load("postings_scored")}
         self._snap = _Snapshot(self.documents, self.embeddings,
-                               self.index["postings_scored"])
+                               self.index["postings_scored"],
+                               self.meta.get("tokenizer", "jp_heuristic"))
 
     def close(self) -> None:
         """Drop the snapshot."""
@@ -253,13 +301,10 @@ class DocSearchEngine:
             qset = set(qterms)
             if not qset:
                 return rows
-            tok = self.meta.get("tokenizer", "jp_heuristic")
-            scores = [
-                len(qset & set(tokenize_query(r["content"][:2048], tok)))
-                / len(qset)
-                for r in rows
-            ]
-        for r, s in zip(rows, scores):
+            scores = self._snap.overlap(qset, [r["doc_id"] for r in rows])
+        scores = round_half_up_array(np.asarray(scores, dtype=np.float64),
+                                     SCORE_ROUND)
+        for r, s in zip(rows, scores.tolist()):
             r["original_score"] = r["score"]
-            r["score"] = round_half_up(float(s), SCORE_ROUND)
+            r["score"] = s
         return rows

@@ -165,3 +165,44 @@ def test_no_topk_sort_outside_kernel():
                     if "lexsort" in f.read():
                         offenders.append(os.path.relpath(path, pkg))
     assert not offenders, f"np.lexsort outside functions/topk.py: {offenders}"
+
+
+def _check_local(S, ids, k, desc, keep):
+    qi, ci = topk.local_topk(S, ids, k, desc, keep)
+    got = [[] for _ in range(S.shape[1])]
+    for j, c in zip(qi, ci):
+        got[j].append((int(ids[c]), S[c, j]))
+    ref = _ref_topk(S, ids, k, desc, keep)
+    for j in range(S.shape[1]):
+        assert _same(got[j], ref[j]), (k, desc, j)
+
+
+@pytest.mark.parametrize("desc", [True, False])
+def test_local_topk_prefilter_keeps_every_tie_of_kth_key(desc):
+    """~2000 rows over 3 distinct scores: hundreds of rows tie the k-th
+    key, and the id order among them decides the cut."""
+    rng = np.random.default_rng(3)
+    n = 2000
+    S = rng.choice([0.25, -0.0, 0.75], size=(n, 3))
+    S[rng.random((n, 3)) < 0.01] = 0.0  # +0.0 ties -0.0
+    ids = rng.permutation(n).astype(np.int64) * 7
+    partial = rng.random((n, 3)) < 0.4
+    for k in (1, 5, 100, 650, 1999, 2000, 2500):
+        for keep in (None, partial, np.zeros((n, 3), dtype=bool)):
+            _check_local(S, ids, k, desc, keep)
+
+
+@pytest.mark.parametrize("desc", [True, False])
+def test_local_topk_fewer_finite_keys_than_k(desc):
+    """Fewer than k non-NaN keys (the prefilter is skipped, NaN rows
+    fill the top-k), exactly k, and one more than k."""
+    rng = np.random.default_rng(5)
+    n, k = 300, 20
+    for finite in (0, 7, k - 1, k, k + 1):
+        S = np.full((n, 2), np.nan)
+        for j in range(2):
+            rows = rng.choice(n, finite, replace=False)
+            S[rows, j] = rng.choice([0.5, 1.0, -np.inf], size=finite)
+        ids = rng.permutation(n).astype(np.int64)
+        for keep in (None, rng.random((n, 2)) < 0.5):
+            _check_local(S, ids, k, desc, keep)
