@@ -12,6 +12,7 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
+import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -28,16 +29,14 @@ def fuse_scores(fts: Column, vss: Column) -> Column:
     )
 
 
-def fuse_value(fts: float | None, vss: float | None) -> float:
-    """:func:`fuse_scores` of one candidate on the driver (None = not
-    found by that branch), unrounded."""
-    if fts is not None and vss is not None:
-        return (fts + vss) / 2.0
-    if fts is not None:
-        return fts * FUSION_WEIGHT_SINGLE
-    if vss is not None:
-        return vss * FUSION_WEIGHT_SINGLE
-    return 0.0
+def fuse_values(fts: np.ndarray, vss: np.ndarray, has_fts: np.ndarray,
+                has_vss: np.ndarray) -> np.ndarray:
+    """:func:`fuse_scores` of candidate rows on the driver, unrounded:
+    ``has_fts`` / ``has_vss`` mark the rows each branch found, and the
+    value of a branch that did not find a row is ignored."""
+    return np.where(has_fts & has_vss, (fts + vss) / 2.0,
+                    np.where(has_fts, fts, np.where(has_vss, vss, 0.0))
+                    * FUSION_WEIGHT_SINGLE)
 
 
 def fuse(fts: DataFrame, vss: DataFrame, keys: str | Sequence[str]

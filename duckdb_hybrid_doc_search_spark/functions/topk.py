@@ -17,6 +17,9 @@ the local top-k of the batch it came from, so the union of the local
 top-k sets is a superset of the global top-k and the window over the
 Q x k x n_batches survivors selects exactly the rows a window over all
 N x Q pairs would.
+
+:func:`grouped_topk` ranks a list of (group, score, id) rows in the same
+order; the serving snapshot ranks its fused candidates with it.
 """
 
 from __future__ import annotations
@@ -65,9 +68,9 @@ def cosine(X: np.ndarray, Q: np.ndarray,
     passed in when X is scored many times; the result is the same."""
     if xnorm is None:
         xnorm = np.sqrt((X * X).sum(axis=1))
-    return (X @ Q.T) / (
-        xnorm[:, None] * np.sqrt((Q * Q).sum(axis=1))[None, :]
-    )
+    S = X @ Q.T
+    S /= xnorm[:, None] * np.sqrt((Q * Q).sum(axis=1))[None, :]
+    return S
 
 
 def rounded_cosine(X: np.ndarray, Q: np.ndarray) -> np.ndarray:
@@ -117,6 +120,17 @@ def local_topk(S: np.ndarray, ids: np.ndarray, k: int, desc: bool,
         qi.append(np.full(len(sel), j, dtype=np.int64))
         ci.append(sel)
     return np.concatenate(qi), np.concatenate(ci)
+
+
+def grouped_topk(group: np.ndarray, score: np.ndarray, ids: np.ndarray,
+                 k: int, desc: bool) -> np.ndarray:
+    """Positions of the top-k rows of each group of a row list (in any
+    order), group by group, each group's rows in :func:`local_topk`'s
+    order: score (descending or ascending), then ``ids`` ascending, NaN
+    last."""
+    order = np.lexsort((ids, -score if desc else score, group))
+    g = group[order]
+    return order[np.arange(len(g)) - g.searchsorted(g) < k]
 
 
 def scan_topk(corpus: DataFrame, k: int, schema: T.StructType | str,

@@ -45,7 +45,10 @@ def norm(a: Column, dim: int | None = None) -> Column:
 
 
 def cosine_similarity(a: Column, b: Column, dim: int | None = None) -> Column:
-    return dot(a, b, dim) / (norm(a, dim) * norm(b, dim))
+    """NULL when a norm is 0, as DuckDB's ``0.0 / 0.0`` is (dd twin
+    :func:`dd_cosine_similarity`), rather than ANSI mode's
+    DIVIDE_BY_ZERO."""
+    return F.try_divide(dot(a, b, dim), norm(a, dim) * norm(b, dim))
 
 
 def cosine_distance(a: Column, b: Column) -> Column:

@@ -35,7 +35,7 @@ def hash_embed_text(text: str, dim: int = TEST_EMBED_DIM) -> list[float]:
     rng = np.random.default_rng(seed)
     v = rng.standard_normal(dim)
     v /= np.linalg.norm(v)
-    return [float(x) for x in v.astype(np.float32)]
+    return v.astype(np.float32).tolist()
 
 
 def hash_embed_udf(dim: int = TEST_EMBED_DIM):

@@ -28,7 +28,8 @@ from ..functions import vector as V
 def cosine_distance_topk(embeddings: DataFrame, query_vec: Sequence[float],
                          k: int, id_col: str = "vec_id",
                          vec_col: str = "embedding") -> DataFrame:
-    """(doc_id, vss_score=cosine DISTANCE) ascending top-k — Q4 semantics."""
+    """(doc_id, vss_score=cosine DISTANCE) ascending top-k — Q4 semantics;
+    a zero-norm vector's NULL distance ranks last."""
     qv = V.lit_vector(query_vec)
     return (
         embeddings.select(
@@ -37,7 +38,7 @@ def cosine_distance_topk(embeddings: DataFrame, query_vec: Sequence[float],
                 "vss_score"
             ),
         )
-        .orderBy(F.asc("vss_score"), F.asc("doc_id"))
+        .orderBy(F.asc_nulls_last("vss_score"), F.asc("doc_id"))
         .limit(k)
     )
 

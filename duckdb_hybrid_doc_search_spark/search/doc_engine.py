@@ -13,7 +13,11 @@ the reference's long-lived read-only connection, cli.py:325): the display
 fields, the embedding matrix, and every posting's BM25 contribution,
 computed in the JVM by the one Okapi expression
 (operators/bm25.okapi_contrib). A search is then numpy on the driver and
-runs no Spark job. An index directory without postings_scored is refused;
+runs no Spark job. There is one scoring path: ``search_batch`` scores its
+queries together, block by block (one cosine GEMM, one BM25 bincount,
+one fusion, one rerank pass and one sort per block of at most
+BLOCK_BYTES-sized arrays), and ``search`` is a batch of one. An index
+directory without postings_scored is refused;
 rebuild it with `index`. Corpora too large for a driver snapshot are
 scored by the Spark plan of search/engine.hybrid_search_batch.
 """
@@ -21,7 +25,7 @@ scored by the Spark plan of search/engine.hybrid_search_batch.
 from __future__ import annotations
 
 import os
-from typing import Any
+from typing import Any, NamedTuple
 
 import numpy as np
 import pyarrow as pa
@@ -31,7 +35,7 @@ from pyspark.sql import DataFrame, SparkSession
 from ..config import (RERANK_TRUNCATE_CHARS, SCORE_ROUND, SCORE_THRESHOLD,
                       TOP_K_DEFAULT)
 from ..functions import topk
-from ..functions.fusion import fuse_value
+from ..functions.fusion import fuse_values
 from ..models.embedder import hash_embed_text
 from ..models.reranker import cross_encoder_scores
 from ..models.tokenizer import tokenize_query
@@ -49,6 +53,39 @@ DISPLAY_FIELDS = RESULT_FIELDS[:6]
 # on-disk byte (2.61 MB for 0.98 MB: tracemalloc plus Arrow's allocator),
 # so the bound is ~700 MB of driver memory.
 MAX_SNAPSHOT_BYTES = 256 * 1024 * 1024
+
+# Largest array, in bytes, a search builds for one block of its
+# queries: a batch is scored in blocks of max(1, BLOCK_BYTES // (8 m))
+# queries, m the larger of the document count n and the count of rerank
+# term ids (``rr_ids``), so that neither the (n, q) float64 score blocks
+# nor the rerank's gather of the candidates' term ids (at most all of
+# them per query) exceeds it, whatever the batch size. A block holds a
+# few such arrays at once: on the 1031-chunk bench index (28807 rerank
+# term ids, so 36 queries a block) a 1024-query search_batch with top_k
+# above n peaked at 30 MB of traced driver memory, its results included.
+BLOCK_BYTES = 8 * 1024 * 1024
+
+
+class _Candidates(NamedTuple):
+    """The fused candidate rows of a query block, in query then position
+    order: row i is document ``pos[i]`` for query ``qi[i]``, found by
+    the branches ``has_fts[i]`` / ``has_vss[i]`` with the scores
+    ``fts[i]`` / ``vss[i]`` (not read where not found) and fused to
+    ``score[i]``, which the ranking rounds (at SCORE_ROUND)."""
+    qi: np.ndarray
+    pos: np.ndarray
+    fts: np.ndarray
+    vss: np.ndarray
+    has_fts: np.ndarray
+    has_vss: np.ndarray
+    score: np.ndarray
+
+
+def _ranges(starts: np.ndarray, lens: np.ndarray) -> np.ndarray:
+    """The concatenated ``arange(s, s + l)`` of each ``(s, l)``."""
+    ends = lens.cumsum()
+    return (np.arange(ends[-1] if len(ends) else 0)
+            + (starts - ends + lens).repeat(lens))
 
 
 def _disk_bytes(path: str) -> int:
@@ -75,11 +112,17 @@ class _Snapshot:
       token found only in a truncated content, such as a word cut at the
       truncation point.
 
+    :meth:`score` and :meth:`overlap` are the one scoring path: each
+    takes a block of queries at once, so its numpy calls are per block,
+    not per query.
+
     On the 1031-chunk bench index the rerank term ids, row norms and
     ``pos_of`` take ~0.02 s of tokenizing at open and 0.18 MB of driver
     memory (2.61 MB for the whole snapshot). Opening took a median 0.81 s
     against 0.72 s without them, within the spread of repeated opens
-    (4-core VM)."""
+    (4-core VM). The range lengths ``tlen`` and ``rr_len`` and the
+    positions ``ids``, kept so that a search does not derive them, add
+    0.07 MB."""
 
     def __init__(self, documents: DataFrame, embeddings: DataFrame,
                  postings: DataFrame, tokenizer: str):
@@ -88,6 +131,7 @@ class _Snapshot:
         ids = docs["doc_id"]
         self.fields = {c: docs[c].to_pylist() for c in DISPLAY_FIELDS}
         self.n = len(ids)
+        self.ids = np.arange(self.n)
         self.pos_of = {d: p for p, d in enumerate(self.fields["doc_id"])}
 
         emb = embeddings.select("doc_id", "embedding").toArrow()
@@ -111,6 +155,7 @@ class _Snapshot:
         self.term_ix = {t: i for i, t in enumerate(terms[starts])}
         self.nterms = len(starts)
         self.off = np.r_[starts, len(terms)]
+        self.tlen = np.diff(self.off)
         self.pos = post["pos"].to_numpy()
         self.contrib = post["contrib"].to_numpy()
 
@@ -122,53 +167,74 @@ class _Snapshot:
             rr_len.append(len(toks))
         self.rr_ids = np.array(rr_ids, dtype=np.int32)
         self.rr_off = np.cumsum(rr_len)
+        self.rr_len = np.diff(self.rr_off)
 
-    def candidates(self, qterms: list[str], qvec: list[float], k: int
-                   ) -> list[dict[str, Any]]:
-        """Q3-Q9 of one query: the BM25 top-k (score descending) and
-        the cosine-distance top-k (ascending), ties to the lower doc_id,
-        fused — one row per candidate, at most 2k rows."""
-        if not self.n:
-            return []
-        terms = sorted({i for i in map(self.term_ix.get, qterms)
-                        if i is not None and i < self.nterms})
-        ix = np.concatenate([np.zeros(0, np.int64)] + [
-            np.arange(self.off[t], self.off[t + 1]) for t in terms])
-        raw = np.bincount(self.pos[ix], self.contrib[ix], minlength=self.n)
-        hit = np.unique(self.pos[ix])
-        bm25 = round_half_up_array(raw[hit], SCORE_ROUND)
-        _, top = topk.local_topk(bm25[:, None], hit, k, desc=True)
-        fts = dict(zip(hit[top].tolist(), bm25[top].tolist()))
+    def score(self, qterms: list[list[str]], Q: np.ndarray, k: int
+              ) -> _Candidates:
+        """Q3-Q8 of a block of queries — query ``j`` has the terms
+        ``qterms[j]`` and the vector ``Q[j]`` — scored together: the BM25
+        top-k (score descending) and the cosine-distance top-k
+        (ascending) of each query, ties to the lower doc_id, fused; at
+        most 2k rows per query. The (n, q) score blocks are dense, so
+        the caller bounds q (BLOCK_BYTES)."""
+        n, q = self.n, len(qterms)
+        dist = topk.cosine(self.X, Q, self.xnorm)
+        np.subtract(1.0, dist, out=dist)
+        dist.round(SCORE_ROUND, out=dist)
+        vq, vp = topk.local_topk(dist, self.ids, k, desc=False)
 
-        dist = np.round(
-            1.0 - topk.cosine(self.X, topk.matrix([qvec]), self.xnorm),
-            SCORE_ROUND)
-        _, top = topk.local_topk(dist, np.arange(self.n), k, desc=False)
-        vss = dict(zip(top.tolist(), dist[top, 0].tolist()))
+        # query j's distinct posting terms i, its postings keyed j * n +
+        # pos: one bincount sums each key's contributions in posting
+        # order, as a bincount of the one query does
+        base, t = [], []
+        for j, ts in enumerate(qterms):
+            for i in sorted({self.term_ix.get(w, -1) for w in ts}):
+                if 0 <= i < self.nterms:
+                    base.append(j * n)
+                    t.append(i)
+        lens = self.tlen[t]
+        ix = _ranges(self.off[t], lens)
+        key = np.array(base, dtype=np.int64).repeat(lens) + self.pos[ix]
+        bm25 = np.bincount(key, self.contrib[ix], minlength=q * n)
+        hit = np.zeros(q * n, dtype=bool)
+        hit[key] = True
+        bm25[hit] = round_half_up_array(bm25[hit], SCORE_ROUND)
+        bm25, hit = bm25.reshape(q, n), hit.reshape(q, n)
+        fq, fp = topk.local_topk(bm25.T, self.ids, k, desc=True, keep=hit.T)
 
-        rows, fused = [], []
-        for p in fts.keys() | vss.keys():
-            f, v = fts.get(p), vss.get(p)
-            row = {c: self.fields[c][p] for c in DISPLAY_FIELDS}
-            row.update(fts_score=f, vss_score=v)
-            rows.append(row)
-            fused.append(fuse_value(f, v))
-        for row, s in zip(rows, round_half_up_array(
-                np.array(fused, dtype=np.float64), SCORE_ROUND).tolist()):
-            row["score"] = s
-        return rows
+        has_fts = np.zeros((q, n), dtype=bool)
+        has_fts[fq, fp] = True
+        has_vss = np.zeros((q, n), dtype=bool)
+        has_vss[vq, vp] = True
+        at = (has_fts | has_vss).ravel().nonzero()[0]
+        qi, pos = np.divmod(at, n)
+        fts, vss = bm25.ravel()[at], dist[pos, qi]
+        has_fts, has_vss = has_fts.ravel()[at], has_vss.ravel()[at]
+        return _Candidates(qi, pos, fts, vss, has_fts, has_vss,
+                           fuse_values(fts, vss, has_fts, has_vss))
 
-    def overlap(self, qset: set[str], doc_ids: list[str]) -> np.ndarray:
-        """The overlap rerank score of each document of ``doc_ids``:
-        how many of the query terms ``qset`` (non-empty) its truncated
-        content holds, over ``len(qset)``. A term outside ``term_ix``
-        is in no document."""
-        mask = np.zeros(len(self.term_ix), dtype=bool)
-        mask[[self.term_ix[t] for t in qset if t in self.term_ix]] = True
-        off, ids = self.rr_off, self.rr_ids
-        hits = [np.count_nonzero(mask[ids[off[p]:off[p + 1]]])
-                for p in map(self.pos_of.__getitem__, doc_ids)]
-        return np.array(hits, dtype=np.float64) / len(qset)
+    def overlap(self, qterms: list[list[str]], c: _Candidates
+                ) -> np.ndarray:
+        """The overlap rerank score of each candidate row: how many of
+        its query's distinct terms the document's truncated content
+        holds, over their count. A term outside ``term_ix`` is in no
+        document. Rows of a query without terms score 0."""
+        nt = len(self.term_ix)
+        qsets = [set(t) for t in qterms]
+        # the sorted keys j * |term_ix| + id of query j's terms, then a
+        # key above every probe
+        keys = np.array(sorted(j * nt + self.term_ix[t]
+                               for j, ts in enumerate(qsets)
+                               for t in ts if t in self.term_ix)
+                        + [len(qsets) * nt], dtype=np.int64)
+        lens = self.rr_len[c.pos]
+        probe = ((c.qi * nt).repeat(lens)
+                 + self.rr_ids[_ranges(self.rr_off[c.pos], lens)])
+        found = keys[keys.searchsorted(probe)] == probe
+        hits = np.bincount(
+            np.arange(len(lens)).repeat(lens)[found], minlength=len(lens))
+        size = np.array([max(len(s), 1) for s in qsets], np.float64)
+        return hits / size[c.qi]
 
 
 class DocSearchEngine:
@@ -251,60 +317,109 @@ class DocSearchEngine:
                rerank: bool = True,
                add_prefix: str | None = None,
                remove_prefix: str | None = None) -> list[dict[str, Any]]:
-        qterms = self._query_terms(query)
-        rows = self._snap.candidates(qterms, self._embed_query(query), top_k)
-        return self._finish(query, qterms, rows, top_k, rerank, add_prefix,
-                            remove_prefix)
+        """``search_batch([query], ...)[0]``."""
+        return self.search_batch([query], top_k, rerank, add_prefix,
+                                 remove_prefix)[0]
 
     def search_batch(self, queries: list[str], top_k: int = TOP_K_DEFAULT,
                      rerank: bool = True,
                      add_prefix: str | None = None,
                      remove_prefix: str | None = None
                      ) -> list[list[dict[str, Any]]]:
-        """``[search(q, ...) for q in queries]``. Raises ValueError above
+        """The ranked results of each query, equal to searching them one
+        at a time. The one scoring path of the engine: the queries are
+        scored in blocks bounded by BLOCK_BYTES, each block by one pass
+        of the snapshot (``_Snapshot.score``), one rerank pass and one
+        sort. Raises ValueError for ``top_k < 1`` or above
         functions/topk.MAX_QUERIES queries, before scoring any."""
+        if top_k < 1:
+            raise ValueError(f"top_k must be at least 1, got {top_k}")
         if len(queries) > topk.MAX_QUERIES:
             raise ValueError(
                 f"search_batch takes at most MAX_QUERIES={topk.MAX_QUERIES}"
                 f" queries, got {len(queries)}; split the batch"
             )
-        return [self.search(q, top_k, rerank, add_prefix, remove_prefix)
-                for q in queries]
+        snap = self._snap
+        if not snap.n:
+            return [[] for _ in queries]
+        qterms = [self._query_terms(q) for q in queries]
+        Q = topk.matrix([self._embed_query(q) for q in queries])
+        step = max(1, BLOCK_BYTES // (8 * max(snap.n, len(snap.rr_ids))))
+        out = []
+        for b in range(0, len(queries), step):
+            blk = slice(b, b + step)
+            c = snap.score(qterms[blk], Q[blk], top_k)
+            out += self._rank(queries[blk], qterms[blk], c, top_k, rerank,
+                              add_prefix, remove_prefix)
+        return out
 
     def _finish(self, query: str, qterms: list[str],
                 rows: list[dict[str, Any]], top_k: int, rerank: bool,
                 add_prefix: str | None, remove_prefix: str | None
                 ) -> list[dict[str, Any]]:
-        """Q10-Q13 of one query on the driver: rerank, sort, threshold,
-        limit, then the path-prefix rewrite and the RESULT_FIELDS
-        projection."""
-        if rerank and rows:
-            rows = self._rerank(query, qterms, rows)
-        rows.sort(key=lambda r: (-r["score"], r["doc_id"]))
-        rows = [r for r in rows if r["score"] > SCORE_THRESHOLD][:top_k]
-        for r in rows:
-            p = trim_path_prefix(r["file_path"], remove_prefix)
-            r["file_path"] = add_path_prefix(p, add_prefix)
-        return [{k: r[k] for k in RESULT_FIELDS} for r in rows]
+        """:meth:`_rank` of one query over candidate rows given as
+        dicts, such as the rows of the Spark plan of the same search."""
+        val = lambda f: np.array([r[f] or 0.0 for r in rows])  # noqa: E731
+        has = lambda f: np.array([r[f] is not None for r in rows])  # noqa
+        pos = [self._snap.pos_of[r["doc_id"]] for r in rows]
+        c = _Candidates(np.zeros(len(rows), np.int64), np.array(pos, np.int64),
+                        val("fts_score"), val("vss_score"), has("fts_score"),
+                        has("vss_score"), val("score"))
+        return self._rank([query], [qterms], c, top_k, rerank, add_prefix,
+                          remove_prefix)[0]
 
-    def _rerank(self, query: str, qterms: list[str],
-                rows: list[dict[str, Any]]) -> list[dict[str, Any]]:
-        """Q11 with the reference's fallback ladder (searcher.py:261-310):
-        CrossEncoder if available, else deterministic token overlap; any
-        failure keeps the original fused scores."""
-        scores = None
+    def _rank(self, queries: list[str], qterms: list[list[str]],
+              c: _Candidates, top_k: int, rerank: bool,
+              add_prefix: str | None, remove_prefix: str | None
+              ) -> list[list[dict[str, Any]]]:
+        """Q9-Q13 of a query block on the driver: rerank, threshold,
+        then each query's top_k rows by score descending then doc_id
+        (position order), as the RESULT_FIELDS of their documents, file
+        paths rewritten by the path prefixes."""
+        score = c.score
+        if rerank and len(c.pos):
+            score = self._rerank(queries, qterms, c)
+        score = round_half_up_array(score, SCORE_ROUND)
+        above = (score > SCORE_THRESHOLD).nonzero()[0]
+        order = above[topk.grouped_topk(c.qi[above], score[above],
+                                        c.pos[above], top_k, desc=True)]
+        out: list[list[dict[str, Any]]] = [[] for _ in queries]
+        f = self._snap.fields
+        for j, p, s, fv, vv, hf, hv in zip(
+                *(a[order].tolist() for a in (c.qi, c.pos, score, c.fts,
+                                              c.vss, c.has_fts, c.has_vss))):
+            path = trim_path_prefix(f["file_path"][p], remove_prefix)
+            out[j].append({
+                "doc_id": f["doc_id"][p],
+                "file_path": add_path_prefix(path, add_prefix),
+                "header_path": f["header_path"][p],
+                "line_start": f["line_start"][p],
+                "line_end": f["line_end"][p],
+                "content": f["content"][p],
+                "score": s,
+                "fts_score": fv if hf else None,
+                "vss_score": vv if hv else None,
+            })
+        return out
+
+    def _rerank(self, queries: list[str], qterms: list[list[str]],
+                c: _Candidates) -> np.ndarray:
+        """Q11 of a query block with the reference's fallback ladder
+        (searcher.py:261-310), the new score of each candidate row:
+        CrossEncoder if available (one call per query), else
+        deterministic token overlap; the rows of a query that neither
+        scores (a failed CrossEncoder and no query terms) keep their
+        fused scores."""
+        scores = self._snap.overlap(qterms, c)  # FIXTURES.md §C
+        kept = np.array([not t for t in qterms], dtype=bool)
         if self.backend == "sentence-transformers":
-            scores = cross_encoder_scores(
-                query, [r["content"] for r in rows], self.model
-            )
-        if scores is None:  # deterministic overlap reranker (FIXTURES.md §C)
-            qset = set(qterms)
-            if not qset:
-                return rows
-            scores = self._snap.overlap(qset, [r["doc_id"] for r in rows])
-        scores = round_half_up_array(np.asarray(scores, dtype=np.float64),
-                                     SCORE_ROUND)
-        for r, s in zip(rows, scores.tolist()):
-            r["original_score"] = r["score"]
-            r["score"] = s
-        return rows
+            content = self._snap.fields["content"]
+            for j, q in enumerate(queries):
+                rows = np.flatnonzero(c.qi == j)
+                ce = cross_encoder_scores(
+                    q, [content[p] for p in c.pos[rows].tolist()],
+                    self.model) if len(rows) else None
+                if ce is not None:
+                    scores[rows] = ce
+                    kept[j] = False
+        return np.where(kept[c.qi], c.score, scores)

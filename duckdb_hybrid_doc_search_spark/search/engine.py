@@ -142,7 +142,7 @@ def ivf_vss_topk(spark, embeddings: DataFrame, sf_dir: str,
                 SCORE_ROUND,
             ).alias("vss_score"),
         )
-        .orderBy(F.asc("vss_score"), F.asc("doc_id"))
+        .orderBy(F.asc_nulls_last("vss_score"), F.asc("doc_id"))
         .limit(top_k)
     )
 

@@ -48,7 +48,7 @@ def test_batch_search_rejects_oversize_batch(engine, monkeypatch):
     def no_scoring(*args, **kwargs):
         raise AssertionError("scored a batch above MAX_QUERIES")
 
-    monkeypatch.setattr(doc_engine._Snapshot, "candidates", no_scoring)
+    monkeypatch.setattr(doc_engine._Snapshot, "score", no_scoring)
     with pytest.raises(ValueError, match="MAX_QUERIES"):
         engine.search_batch(["q"] * (topk.MAX_QUERIES + 1))
 

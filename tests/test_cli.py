@@ -52,6 +52,14 @@ def test_cli_search_top_k_bound_rejected(cli_index):
         cli.main(["search", "--db", cli_index, "-q", "x", "--top-k", "101"])
 
 
+@pytest.mark.parametrize("k", ["0", "-3"])
+def test_cli_search_top_k_below_one_rejected(cli_index, capsys, k):
+    with pytest.raises(SystemExit) as e:
+        cli.main(["search", "--db", cli_index, "-q", "x", "--top-k", k])
+    assert e.value.code == 2  # argparse's usage error, before any search
+    assert "--top-k" in capsys.readouterr().err
+
+
 def test_cli_version(capsys):
     rc = cli.main(["version"])
     assert rc == 0

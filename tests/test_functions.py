@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 from duckdb_hybrid_doc_search_spark.functions import hashing, text, vector
 from duckdb_hybrid_doc_search_spark.functions.fusion import fuse_scores
 from duckdb_hybrid_doc_search_spark.models.embedder import hash_embed_text
+from duckdb_hybrid_doc_search_spark.operators import knn
 
 SAMPLES = ["abc", "spark vector", "", "a--b__c 42", "ümlaut MIXED Case"]
 
@@ -65,6 +66,23 @@ def test_cosine_parity(spark):
         + vector.dd_cosine_distance(vector.dd_lit_vector(a), vector.dd_lit_vector(b))
     ).fetchone()[0]
     assert got == pytest.approx(want, abs=1e-12)
+
+
+@pytest.mark.parametrize("k", [1, 2, 3])
+def test_zero_norm_cosine_topk_is_null_last(spark, k):
+    """A zero-norm vector's cosine is NULL on both engines (not ANSI
+    mode's DIVIDE_BY_ZERO) and ranks last in the distance top-k."""
+    rows = [(1, [1.0, 0.0]), (2, [0.0, 0.0]), (3, [0.6, 0.8])]
+    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    got = [tuple(r) for r in
+           knn.cosine_distance_topk(emb, [1.0, 0.0], k).collect()]
+    con = duckdb.connect()
+    con.execute("CREATE TABLE embeddings (vec_id BIGINT, embedding FLOAT[])")
+    con.executemany("INSERT INTO embeddings VALUES (?, ?)", rows)
+    want = con.execute(
+        knn.dd_cosine_distance_topk_sql([1.0, 0.0], k)).fetchall()
+    assert got == want
+    assert (2, None) in got if k == 3 else (2, None) not in got
 
 
 def test_hash_embed_deterministic_unit():

@@ -167,6 +167,25 @@ def test_no_topk_sort_outside_kernel():
     assert not offenders, f"np.lexsort outside functions/topk.py: {offenders}"
 
 
+@pytest.mark.parametrize("desc", [True, False])
+def test_grouped_topk_orders_as_local_topk(desc):
+    """grouped_topk over a shuffled row list selects and orders what
+    local_topk does over the dense block of the same rows (``keep``
+    marks them): ties, +-0.0 and NaN included."""
+    rng = np.random.default_rng(5)
+    n, q = 300, 4
+    S = rng.choice([0.25, -0.0, 0.0, np.nan, 0.75], size=(n, q))
+    keep = rng.random((n, q)) < 0.3
+    ids = rng.permutation(n).astype(np.int64) * 3
+    gq, gr = keep.T.nonzero()
+    perm = rng.permutation(len(gq))
+    gq, gr = gq[perm], gr[perm]
+    for k in (1, 5, 100, 400):
+        qi, ci = topk.local_topk(S, ids, k, desc, keep)
+        sel = topk.grouped_topk(gq, S[gr, gq], ids[gr], k, desc)
+        assert (gq[sel] == qi).all() and (gr[sel] == ci).all(), k
+
+
 def _check_local(S, ids, k, desc, keep):
     qi, ci = topk.local_topk(S, ids, k, desc, keep)
     got = [[] for _ in range(S.shape[1])]
