@@ -1,8 +1,9 @@
 """The Arrow top-k kernel: per-query top-k of a streamed corpus.
 
 Every GEMM-shaped vector top-k in the engine — brute-force kNN, the kNN
-evaluation operators, PQ and IVF-PQ ADC scans, the written-IVF-layout
-probe and the batch hybrid VSS branch — runs through :func:`scan_topk`:
+evaluation operators, PQ and IVF-PQ ADC scans, the SQ8 scans (query-time
+and written layout), the written-IVF-layout probe and the batch hybrid
+VSS branch — runs through :func:`scan_topk`:
 the bounded query batch is collected to the driver
 (:func:`collect_queries`), each Arrow batch of the corpus is scored
 against every query at once by a site-supplied score block, each query
@@ -33,6 +34,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..config import SCORE_ROUND
+from ..utils import round_half_up_array
 
 # Largest query batch a top-k scan collects to the driver; every query's
 # scores for a whole Arrow batch are held at once. The largest registered
@@ -46,7 +48,12 @@ ScoreBlock = Callable[[pd.DataFrame], tuple[np.ndarray, np.ndarray | None]]
 def collect_queries(queries: DataFrame, key: str) -> list[Row]:
     """The query batch on the driver, sorted by ``key``. Raises
     ValueError rather than collect more than MAX_QUERIES rows."""
-    rows = queries.limit(MAX_QUERIES + 1).collect()
+    return check_queries(queries.limit(MAX_QUERIES + 1).collect(), key)
+
+
+def check_queries(rows: list[Row], key: str) -> list[Row]:
+    """A collected query batch sorted by ``key``; ValueError when it has
+    more than MAX_QUERIES rows."""
     if len(rows) > MAX_QUERIES:
         raise ValueError(
             f"top-k query batch has more than MAX_QUERIES={MAX_QUERIES} "
@@ -77,6 +84,23 @@ def rounded_cosine(X: np.ndarray, Q: np.ndarray) -> np.ndarray:
     """:func:`cosine` rounded at SCORE_ROUND — the value every cosine
     top-k orders by and its DuckDB oracle reproduces."""
     return np.round(cosine(X, Q), SCORE_ROUND)
+
+
+def rounded_l2sq(X: np.ndarray, Q: np.ndarray) -> np.ndarray:
+    """(n, q) squared L2 of the rows of X to the rows of Q, rounded at
+    SCORE_ROUND as Spark's ``F.round`` rounds: the dot identity
+    ``q·q - 2 q·x + x·x`` with each dot a left fold from 0.0 over the
+    dimensions, the float order of functions/vector.l2sq and its DuckDB
+    twin; half up (utils.round_half_up_array), and ``+ 0.0`` because
+    Spark rounds a small negative value to +0.0, not -0.0."""
+    qq, xx = np.zeros(len(Q)), np.zeros(len(X))
+    qx = np.zeros((len(X), len(Q)))
+    for i in range(X.shape[1]):
+        qq += Q[:, i] * Q[:, i]
+        qx += X[:, i, None] * Q[None, :, i]
+        xx += X[:, i] * X[:, i]
+    return round_half_up_array((qq[None, :] - 2.0 * qx) + xx[:, None],
+                               SCORE_ROUND) + 0.0
 
 
 def top_cells(Q: np.ndarray, C: np.ndarray, n: int) -> np.ndarray:

@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..operators.bpe import (BPE_MERGES, BPE_TRAIN_BATCH,
                              MERGES_SCHEMA, bpe_train)
+from .catalog import read_table
 from .fingerprint import ensure_layout, layout_fingerprint
 
 BPE_DONE = "_BPE_DONE"
@@ -46,8 +47,7 @@ def read_bpe_merges(spark: SparkSession, out_dir: str) -> list:
             f"no completed BPE layout at {out_dir}: build it first "
             "(write_bpe_merges)."
         )
-    df = spark.read.schema(MERGES_SCHEMA).parquet(
-        os.path.join(out_dir, "merges"))
+    df = read_table(spark, os.path.join(out_dir, "merges"), MERGES_SCHEMA)
     return sorted(df.collect(), key=lambda r: r["rank"])
 
 
@@ -101,8 +101,8 @@ def write_store_merges(merges: DataFrame, out_dir: str) -> None:
 
 def read_store_merges(spark: SparkSession, out_dir: str) -> list:
     """Rank-ordered frozen merges of a segmented subword store."""
-    df = spark.read.schema(MERGES_SCHEMA).parquet(
-        os.path.join(out_dir, STORE_MERGES))
+    df = read_table(spark, os.path.join(out_dir, STORE_MERGES),
+                    MERGES_SCHEMA)
     return sorted(df.collect(), key=lambda r: r["rank"])
 
 

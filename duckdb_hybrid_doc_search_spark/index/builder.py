@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..config import TEST_EMBED_DIM
+from .catalog import read_table
 from ..models.embedder import embed_udf
 from ..operators.bm25 import fts_tables, scored_postings
 from ..operators.chunker import chunk_documents, with_doc_ids
@@ -164,8 +165,8 @@ def index_incremental(
     settings = read_meta(out_dir)
     chunks = _chunks(spark, dirs, settings)
 
-    old_docs = spark.read.parquet(os.path.join(out_dir, "documents"))
-    old_emb = spark.read.parquet(os.path.join(out_dir, "embeddings"))
+    old_docs = read_table(spark, os.path.join(out_dir, "documents"))
+    old_emb = read_table(spark, os.path.join(out_dir, "embeddings"))
 
     ids = chunks.select("doc_id")
     kept_emb = old_emb.join(ids, "doc_id", "left_semi")

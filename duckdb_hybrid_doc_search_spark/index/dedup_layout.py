@@ -37,6 +37,7 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .catalog import read_table
 from .fingerprint import ensure_layout, layout_fingerprint
 
 # Version token in the cache key: bump when signature semantics change
@@ -209,7 +210,7 @@ def append_dedup_signatures(spark: SparkSession, out_dir: str,
             for f in glob.glob(os.path.join(path, f"append-{append_id}-*")):
                 os.remove(f)
         n_dup = (
-            spark.read.parquet(paths["fp"])
+            read_table(spark, paths["fp"])
             .select("doc_id")
             .join(F.broadcast(new_docs.select("doc_id")), "doc_id")
             .count()
@@ -267,15 +268,15 @@ def append_dedup_signatures(spark: SparkSession, out_dir: str,
 
 
 def read_fp(spark: SparkSession, out_dir: str) -> DataFrame:
-    return spark.read.parquet(_tables(out_dir)["fp"])
+    return read_table(spark, _tables(out_dir)["fp"])
 
 
 def read_bands(spark: SparkSession, out_dir: str) -> DataFrame:
-    return spark.read.parquet(_tables(out_dir)["bands"])
+    return read_table(spark, _tables(out_dir)["bands"])
 
 
 def read_sigs(spark: SparkSession, out_dir: str) -> DataFrame:
-    return spark.read.parquet(_tables(out_dir)["sigs"])
+    return read_table(spark, _tables(out_dir)["sigs"])
 
 
 def ensure_dedup_layout(spark: SparkSession, existing: DataFrame,

@@ -29,7 +29,8 @@ The fingerprints come in two tiers:
 
 The file tier hashes FILES, not plans: two different projections of the
 same parquet get the same fingerprint. Layout caches therefore also key on
-a caller-supplied tag that identifies the logical corpus.
+a caller-supplied tag that identifies the logical corpus; a layout over a
+slice of a corpus puts the slice predicate in it (``predicate_tag``).
 """
 
 from __future__ import annotations
@@ -41,7 +42,7 @@ import shutil
 from collections.abc import Callable
 from urllib.parse import unquote, urlparse
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
@@ -190,6 +191,13 @@ def content_fingerprint(df: DataFrame, *cols: str) -> str:
         F.sum(F.xxhash64(*hash_cols).cast("decimal(38,0)")).alias("h"),
     ).collect()[0]
     return f"c{row['n']}-{int(row['h'] or 0) & 0xFFFFFFFFFFFFFFFF:x}"
+
+
+def predicate_tag(pred: Column) -> str:
+    """Short tag of a row predicate's text, for the key of a layout
+    built over a slice of a corpus: the file tier above fingerprints the
+    files, so it cannot tell two slices of one parquet apart."""
+    return "s" + hashlib.sha256(str(pred).encode()).hexdigest()[:12]
 
 
 def layout_fingerprint(df: DataFrame, *cols: str) -> str:

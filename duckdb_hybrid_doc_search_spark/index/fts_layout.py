@@ -33,6 +33,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .catalog import read_table
 from .fingerprint import (content_fingerprint, ensure_layout,
                           layout_fingerprint, layout_name, sig_fingerprint,
                           source_file_stats, stat_sig, sweep_siblings,
@@ -105,7 +106,7 @@ def write_index_tables(index: dict[str, DataFrame], out_dir: str) -> None:
 def read_fts_layout(spark: SparkSession, out_dir: str) -> dict[str, DataFrame]:
     """The index dict every probe operator takes (operators/bm25)."""
     return {
-        t: spark.read.parquet(os.path.join(out_dir, t)) for t in _TABLES
+        t: read_table(spark, os.path.join(out_dir, t)) for t in _TABLES
     }
 
 
@@ -412,7 +413,7 @@ def append_fts_segment(spark: SparkSession, out_dir: str,
             for f in glob.glob(os.path.join(path, f"append-{append_id}-*")):
                 os.remove(f)
         dup_ids = (
-            spark.read.parquet(paths["docstats"])
+            read_table(spark, paths["docstats"])
             .select("doc_id")
             .join(F.broadcast(new_docs.select(
                 F.col(id_col).alias("doc_id"))), "doc_id")
@@ -589,7 +590,7 @@ def fold_fts_segments(spark: SparkSession, out_dir: str) -> None:
         from ..operators.bm25 import segment_fts_index
 
         idx = segment_fts_index(spark, out_dir)
-        segstats = spark.read.parquet(paths["segstats"]).agg(
+        segstats = read_table(spark, paths["segstats"]).agg(
             F.sum("n_docs").cast("long").alias("n_docs"),
             F.sum("sum_dl").cast("long").alias("sum_dl"),
         )

@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 from ..functions import topk
 from ..operators.dedup import DEDUP_IVF_NPROBE
 from ..operators.knn import NPROBE, centroid_pred, derive_nlist, ivf_assign
+from .catalog import read_table
 from .fingerprint import ensure_layout, layout_fingerprint
 
 # Encode-semantics version token in the cache key (see ivfpq_layout).
@@ -349,7 +350,7 @@ def append_multiprobe_vectors(spark: SparkSession, out_dir: str,
             "consistently with existing cell membership. Rebuild via "
             "write_ivf_multiprobe before appending."
         )
-    cent = spark.read.parquet(cdir)
+    cent = read_table(spark, cdir)
     assign = assign_to_centroids(
         new_emb.select(F.col("vec_id").alias("c_id"),
                        F.col("embedding").alias("c_vec")),
@@ -428,7 +429,7 @@ def read_layout_centroids(spark: SparkSession, out_dir: str) -> DataFrame:
             f"layout at {out_dir} has no _centroids side table — "
             "rebuild with write_ivf_partitioned before probing."
         )
-    return spark.read.parquet(cdir)
+    return read_table(spark, cdir)
 
 
 def ivf_frozen_layout_topk(spark: SparkSession, out_dir: str,
@@ -519,7 +520,7 @@ def ensure_ivf_append_layout(spark: SparkSession, emb: DataFrame,
 def probe_cells(spark: SparkSession, out_dir: str,
                 cells: list[int]) -> DataFrame:
     """Read ONLY the probed cell partitions (pruned scan)."""
-    return spark.read.parquet(out_dir).where(F.col("cell").isin(cells))
+    return read_table(spark, out_dir).where(F.col("cell").isin(cells))
 
 
 def ivf_partitioned_topk(spark: SparkSession, out_dir: str,
@@ -619,7 +620,7 @@ def append_ivf_vectors(spark: SparkSession, out_dir: str,
             "with existing cell membership (see docstring). Rebuild "
             "the layout (write_ivf_partitioned) before appending."
         )
-    cent = spark.read.parquet(cdir)
+    cent = read_table(spark, cdir)
     assign = assign_to_centroids(
         new_emb.select(F.col("vec_id").alias("c_id"),
                        F.col("embedding").alias("c_vec")),

@@ -25,6 +25,7 @@ from ..config import SCORE_ROUND
 from ..functions import vector as V
 from ..operators.knn import (NPROBE, PQ_DIM, PQ_M, _pq_long, derive_nlist,
                              ivf_assign, pq_codebook, pq_encode)
+from .catalog import read_table
 from .fingerprint import ensure_layout, layout_fingerprint
 
 
@@ -96,8 +97,8 @@ def ivfpq_layout_topk(spark: SparkSession, out_dir: str, emb: DataFrame,
     from the PRUNED partition scan of the written codes table and the
     LUT from the written codebook — the raw embeddings table supplies
     only the query vectors (the bounded side)."""
-    cent = spark.read.parquet(_side_dir(out_dir, "centroids"))
-    cb = spark.read.parquet(_side_dir(out_dir, "codebook"))
+    cent = read_table(spark, _side_dir(out_dir, "centroids"))
+    cb = read_table(spark, _side_dir(out_dir, "codebook"))
     queries = emb.where(F.col(id_col) < n_queries).select(
         F.col(id_col).alias("q_id"), F.col(vec_col).alias("q_vec")
     )
@@ -116,7 +117,7 @@ def ivfpq_layout_topk(spark: SparkSession, out_dir: str, emb: DataFrame,
     probe_cell_ids = sorted(
         {r.cell for r in probes.select("cell").distinct().collect()}
     )
-    codes = spark.read.parquet(out_dir).where(
+    codes = read_table(spark, out_dir).where(
         F.col("cell").isin(probe_cell_ids)
     )
     q_long = _pq_long(
@@ -152,8 +153,8 @@ def pq_layout_topk(spark: SparkSession, out_dir: str, emb: DataFrame,
     corpus encode happened at write time, which is the only place it
     happens at 100 TB; query-time work is the LUT build (broadcast-
     sized) plus one scan of the compressed codes."""
-    cb = spark.read.parquet(_side_dir(out_dir, "codebook"))
-    codes = spark.read.parquet(out_dir).select("vec_id", "m", "code")
+    cb = read_table(spark, _side_dir(out_dir, "codebook"))
+    codes = read_table(spark, out_dir).select("vec_id", "m", "code")
     q_long = _pq_long(
         emb.where(F.col(id_col) < n_queries)
         .select(F.col(id_col).alias("q_id"), vec_col),
@@ -297,8 +298,8 @@ def append_ivfpq_vectors(spark: SparkSession, out_dir: str,
             "quantizers from a fresh build's. Rebuild the layout to "
             "re-train instead."
         )
-    cent = spark.read.parquet(_side_dir(out_dir, "centroids"))
-    cb = spark.read.parquet(_side_dir(out_dir, "codebook"))
+    cent = read_table(spark, _side_dir(out_dir, "centroids"))
+    cb = read_table(spark, _side_dir(out_dir, "codebook"))
     assign = assign_to_centroids(
         new_emb.select(F.col(id_col).alias("c_id"),
                        F.col(vec_col).alias("c_vec")),
@@ -314,7 +315,7 @@ def append_ivfpq_vectors(spark: SparkSession, out_dir: str,
         r.cell for r in assign.select("cell").distinct().collect()
     )
     n_dup = (
-        spark.read.parquet(out_dir)
+        read_table(spark, out_dir)
         .where(F.col("cell").isin(target_cells))
         .select("vec_id").distinct()
         .join(F.broadcast(new_emb.select(F.col(id_col).alias("vec_id"))),

@@ -21,6 +21,8 @@ import os
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .catalog import read_table
+
 Z_BITS = 16  # per-key bits: 2 keys x 16 bits -> 32-bit z-value
 
 
@@ -261,7 +263,7 @@ def compact_parquet_dir(spark: SparkSession, path: str,
     n = max(1, math.ceil(total / target_bytes))
     tmp = path.rstrip("/") + "_compact_tmp"
     old = path.rstrip("/") + "_compact_old"
-    spark.read.parquet(path).repartition(n).write.mode("overwrite").parquet(
+    read_table(spark, path).repartition(n).write.mode("overwrite").parquet(
         tmp
     )
     if os.path.exists(old):

@@ -6,7 +6,7 @@ array<smallint> codes table — 0..255 per dimension, 4x smaller than
 float32 before parquet's integer encodings shrink it further — plus a
 single-row (mn_l, mx_l) stats side table (O(dim), independent of corpus
 size). A probe reads codes only: dequantize map-side against the
-broadcast stats row, score with the same asymmetric squared-L2, never
+collected stats row, score with the same asymmetric squared-L2, never
 touching raw vectors.
 
 Quantize-then-dequantize is bit-identical to the query-time
@@ -20,12 +20,11 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..config import SCORE_ROUND
-from ..functions import vector as V
-from ..operators.knn import SQ_LEVELS, _to_double, sq_stats
+from ..operators.knn import SQ_LEVELS, _to_double, sq8_scan_topk, sq_stats
+from .catalog import read_table
 from .fingerprint import ensure_layout, layout_fingerprint
 
 
@@ -48,9 +47,8 @@ def _side_dir(out_dir: str, name: str) -> str:
 def _sq8_codes(vec, mn_l, mx_l):
     """floor-quantize each dimension to 0..255 against (mn, mx); a
     constant dim (mx == mn) stores code 0 (dequant maps it back to mn
-    regardless). Same clamp/floor/association as knn._sq8_dequant's
-    inline form, so the stored integer is exactly the one the query-time
-    path computes."""
+    regardless). Same clamp/floor as knn.sq8_codes, so the stored integer
+    is exactly the one the query-time path computes."""
     def one(x, i):
         mn = F.element_at(mn_l, i + F.lit(1))
         mx = F.element_at(mx_l, i + F.lit(1))
@@ -64,21 +62,6 @@ def _sq8_codes(vec, mn_l, mx_l):
         )
 
     return F.transform(vec, one)
-
-
-def _sq8_dequant_codes(q8, mn_l, mx_l):
-    """Reconstruct x' = mn + q/255 * (mx - mn) from stored codes —
-    token-for-token the ELSE branch of knn._sq8_dequant (cast through
-    smallint is exact for 0..255, so the doubles are bit-identical)."""
-    def one(q, i):
-        mn = F.element_at(mn_l, i + F.lit(1))
-        mx = F.element_at(mx_l, i + F.lit(1))
-        s = mx - mn
-        return F.when(s == F.lit(0.0), mn).otherwise(
-            mn + q.cast("double") / F.lit(SQ_LEVELS) * s
-        )
-
-    return F.transform(q8, one)
 
 
 def write_sq8_layout(emb: DataFrame, out_dir: str,
@@ -116,28 +99,12 @@ def sq8_layout_topk(spark: SparkSession, out_dir: str, emb: DataFrame,
                     k: int, n_queries: int = 10,
                     id_col: str = "vec_id",
                     vec_col: str = "embedding") -> DataFrame:
-    """SQ8 top-k from DISK: scan the codes table, dequantize map-side
-    against the broadcast stats row, score raw query vs reconstruction
-    with the same rounded squared-L2 as the query-time operator. Output:
-    q_id, c_id, sq_dist, rank — identical to knn.sq8_topk."""
-    stats = spark.read.parquet(_side_dir(out_dir, "stats"))
-    codes = spark.read.parquet(out_dir)
-    cand = codes.crossJoin(F.broadcast(stats)).select(
-        F.col("vec_id").alias("c_id"),
-        _sq8_dequant_codes(F.col("q8"),
-                           F.col("mn_l"), F.col("mx_l")).alias("deq"),
-    )
+    """SQ8 top-k from DISK: the stats row collected from its side table,
+    the codes table scanned and dequantized map-side by the one SQ8 scan
+    (knn.sq8_scan_topk), raw queries vs reconstructions. Output: q_id,
+    c_id, sq_dist, rank — identical to knn.sq8_topk."""
+    stats = read_table(spark, _side_dir(out_dir, "stats")).first()
     queries = emb.where(F.col(id_col) < n_queries).select(
-        F.col(id_col).alias("q_id"),
-        _to_double(F.col(vec_col)).alias("q_vec"),
-    )
-    scored = cand.crossJoin(F.broadcast(queries)).select(
-        "q_id", "c_id",
-        F.round(V.l2sq(F.col("q_vec"), F.col("deq")),
-                SCORE_ROUND).alias("sq_dist"),
-    )
-    w = Window.partitionBy("q_id").orderBy(F.asc("sq_dist"), F.asc("c_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-    )
+        F.col(id_col).alias("q_id"), F.col(vec_col).alias("q_vec"))
+    return sq8_scan_topk(read_table(spark, out_dir), k, stats["mn_l"],
+                         stats["mx_l"], queries, "vec_id", "q8", coded=True)

@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 
 from ..config import BM25_B, BM25_K1, SCORE_ROUND
 from ..functions.text import dd_tokenize, tokenize
+from ..index.catalog import read_table
 
 
 def tokenize_docs(docs: DataFrame, id_col: str = "doc_id",
@@ -405,7 +406,7 @@ def segment_fts_index(spark, seg_dir: str,
             # through to the normalized four-table path below, which
             # serves the same rows from the segment tables
             try:
-                df = spark.read.parquet(scored_dir)
+                df = read_table(spark, scored_dir)
             except Exception:
                 sig = None
         if sig is not None:
@@ -416,15 +417,15 @@ def segment_fts_index(spark, seg_dir: str,
                     _SCORED_PROBE_MEMO.pop(k, None)
             _SCORED_PROBE_MEMO[key] = (sig, df)
             return {SEG_SCORED: df}
-    postings = spark.read.parquet(os.path.join(seg_dir, "postings"))
+    postings = read_table(spark, os.path.join(seg_dir, "postings"))
     docfreq = (
-        spark.read.parquet(os.path.join(seg_dir, "docfreq"))
+        read_table(spark, os.path.join(seg_dir, "docfreq"))
         .groupBy("term")
         .agg(F.sum("df").cast("long").alias("df"))
     )
-    docstats = spark.read.parquet(os.path.join(seg_dir, "docstats"))
+    docstats = read_table(spark, os.path.join(seg_dir, "docstats"))
     corpus_stats = (
-        spark.read.parquet(os.path.join(seg_dir, "segstats"))
+        read_table(spark, os.path.join(seg_dir, "segstats"))
         .agg(
             F.sum("n_docs").cast("long").alias("n_docs"),
             (F.sum("sum_dl") / F.sum("n_docs")).alias("avgdl"),
@@ -438,7 +439,7 @@ def segment_fts_index(spark, seg_dir: str,
     }
     if os.path.exists(scored_dir):
         try:
-            index[SEG_SCORED] = spark.read.parquet(scored_dir)
+            index[SEG_SCORED] = read_table(spark, scored_dir)
         except Exception:
             pass  # racing append deleted it; the normalized tables serve
     return index

@@ -1209,40 +1209,50 @@ def ivfpq_topk(emb: DataFrame, k: int, n_queries: int = 10,
     are collected to the driver, and each batch assigns its vectors to
     cells (the assign_to_centroids rule), encodes them (the
     pq_encode_with rule) and ADC-scores them for the queries whose
-    NPROBE probe cells hold the row's cell.
+    NPROBE probe cells hold the row's cell. The three side tables are
+    one collect of the rows any of their predicates keeps, split on the
+    driver by the predicates' flags; a codebook row's M subvectors are
+    slices of its vector.
     """
     import numpy as np
     from pyspark.sql import types as T
 
     sub = dim // m
     nlist = derive_nlist(emb.count())
-    cent_rows = sorted(
-        emb.where(centroid_pred(id_col, nlist))
-        .select(F.col(id_col).alias("cent_id"), F.col(vec_col).alias("cvec"))
-        .collect(),
-        key=lambda r: r["cent_id"],
+    flags = {"cent": centroid_pred(id_col, nlist),
+             "cb": pq_sample_pred(id_col),
+             "q": F.col(id_col) < n_queries}
+    bound = nlist + PQ_K + topk.MAX_QUERIES
+    side = (
+        emb.where(flags["cent"] | flags["cb"] | flags["q"])
+        .select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec"),
+                *[c.alias(n) for n, c in flags.items()])
+        .limit(bound + 1).collect()
     )
-    books, sq = _pq_books(sorted(
-        pq_codebook(emb, id_col, vec_col, dim, m).collect(),
-        key=lambda r: (r["m"], r["code"]),
-    ), m)
-    qrows = topk.collect_queries(
-        emb.where(F.col(id_col) < n_queries)
-        .select(F.col(id_col).alias("q_id"), vec_col),
-        "q_id",
-    )
+    if len(side) > bound:
+        raise ValueError(
+            f"IVF-PQ side tables hold more than nlist + PQ_K + "
+            f"MAX_QUERIES = {bound} rows; ids must be unique"
+        )
+    side.sort(key=lambda r: r["id"])
+    cent_rows = [r for r in side if r["cent"]]
+    cb_rows = [r for r in side if r["cb"]]
+    qrows = topk.check_queries([r for r in side if r["q"]], "id")
     out_schema = T.StructType([
         T.StructField("q_id", emb.schema[id_col].dataType),
         T.StructField("c_id", emb.schema[id_col].dataType),
         T.StructField("adc_dist", T.DoubleType()),
     ])
     score = None
-    if qrows and cent_rows and all(len(C) for C in books):
-        CC = topk.matrix(r["cvec"] for r in cent_rows)
-        cc_ids = np.array([int(r["cent_id"]) for r in cent_rows],
-                          dtype=np.int64)
-        Q = topk.matrix(r[1] for r in qrows)
+    if qrows and cent_rows and cb_rows:
+        CC = topk.matrix(r["vec"] for r in cent_rows)
+        cc_ids = np.array([int(r["id"]) for r in cent_rows], dtype=np.int64)
+        Q = topk.matrix(r["vec"] for r in qrows)
         probe = cc_ids[topk.top_cells(Q, CC, NPROBE)]
+        CB = topk.matrix(r["vec"] for r in cb_rows)
+        books = [np.ascontiguousarray(CB[:, mi * sub:(mi + 1) * sub])
+                 for mi in range(m)]
+        sq = [(C * C).sum(axis=1) for C in books]
         lut = _pq_lut(Q, books, sq, sub)
 
         def score(pdf):
@@ -1254,7 +1264,7 @@ def ivfpq_topk(emb: DataFrame, k: int, n_queries: int = 10,
 
     return topk.scan_topk(
         emb.select(id_col, vec_col), k, out_schema, score,
-        {"q_id": np.array([r[0] for r in qrows])}, {"c_id": id_col},
+        {"q_id": np.array([r["id"] for r in qrows])}, {"c_id": id_col},
         "adc_dist", desc=False,
     )
 
@@ -1596,16 +1606,22 @@ def _to_double(vec):
     return F.transform(vec, lambda v: v.cast("double"))
 
 
-def sq_stats(emb: DataFrame, id_col: str = "vec_id",
-             vec_col: str = "embedding") -> DataFrame:
-    """Single-row (mn_l, mx_l): per-dimension corpus min/max — the SQ8
-    'codebook'. O(dim) output regardless of corpus size, so it is always
-    the broadcast side; computing it is one explode + partial-agg pass."""
+def sq_dim_stats(emb: DataFrame, vec_col: str = "embedding") -> DataFrame:
+    """(d, mn, mx): the corpus min and max of each dimension d — the SQ8
+    'codebook', one row per dimension regardless of corpus size; one
+    explode + partial-agg pass."""
     long = emb.select(
         F.posexplode(_to_double(F.col(vec_col))).alias("d", "x")
     )
-    per = long.groupBy("d").agg(F.min("x").alias("mn"),
-                                F.max("x").alias("mx"))
+    return long.groupBy("d").agg(F.min("x").alias("mn"),
+                                 F.max("x").alias("mx"))
+
+
+def sq_stats(emb: DataFrame, id_col: str = "vec_id",
+             vec_col: str = "embedding") -> DataFrame:
+    """Single-row (mn_l, mx_l) of :func:`sq_dim_stats` in dimension
+    order — the stats side table write_sq8_layout stores."""
+    per = sq_dim_stats(emb, vec_col)
     return per.agg(
         F.transform(F.array_sort(F.collect_list(F.struct("d", "mn"))),
                     lambda s: s["mn"]).alias("mn_l"),
@@ -1614,54 +1630,78 @@ def sq_stats(emb: DataFrame, id_col: str = "vec_id",
     )
 
 
-def _sq8_dequant(vec, mn_l, mx_l):
-    """floor-quantize each dimension to 0..255 against (mn, mx), then
-    reconstruct x' = mn + q/255 * (mx - mn); constant dims (mx == mn)
-    map to mn. The formula's association mirrors the DuckDB twin
-    token-for-token so the doubles are bit-identical before rounding."""
-    def one(x, i):
-        mn = F.element_at(mn_l, i + F.lit(1))
-        mx = F.element_at(mx_l, i + F.lit(1))
-        s = mx - mn
-        q = F.floor(
-            F.greatest(F.least((x - mn) / s, F.lit(1.0)), F.lit(0.0))
-            * F.lit(SQ_LEVELS)
-        )
-        return F.when(s == F.lit(0.0), mn).otherwise(
-            mn + q / F.lit(SQ_LEVELS) * s
-        )
+def sq8_codes(X, mn, mx):
+    """(n, d) codes of X's rows, as floats: each dimension clamped to
+    [0, 1] against (mn, mx), times 255, floored; 0 for a constant
+    dimension (mx == mn). A NaN ratio clamps to 1, as Spark's ``least``
+    orders NaN last, and ``+ 0.0`` makes a -0.0 code 0, as the floor to
+    an integer does — the integer write_sq8_layout stores and the DuckDB
+    twin computes."""
+    import numpy as np
 
-    return F.transform(vec, one)
+    s = mx - mn
+    with np.errstate(divide="ignore", invalid="ignore"):
+        r = np.maximum(np.fmin((X - mn) / s, 1.0), 0.0)
+    return np.where(s == 0.0, 0.0, np.floor(r * SQ_LEVELS) + 0.0)
+
+
+def sq8_dequant(C, mn, mx):
+    """Reconstruction ``mn + c / 255 * (mx - mn)`` of codes C (the
+    DuckDB twin's association); a constant dimension maps to mn."""
+    import numpy as np
+
+    s = mx - mn
+    return np.where(s == 0.0, mn, mn + C / SQ_LEVELS * s)
+
+
+def sq8_scan_topk(corpus: DataFrame, k: int, mn, mx, queries: DataFrame,
+                  id_col: str, vec_col: str, coded: bool) -> DataFrame:
+    """SQ8 top-k of ``corpus`` (``vec_col`` raw vectors, or stored codes
+    when ``coded``) for the (q_id, q_vec) ``queries``: raw query vs
+    dequantized candidate, rounded squared L2 ascending, ties to the
+    lower id. ``mn``/``mx`` are the per-dimension stats in dimension
+    order. One Arrow top-k scan (functions/topk) with the query batch on
+    the driver. Output: q_id, c_id, sq_dist, rank."""
+    import numpy as np
+    from pyspark.sql import types as T
+
+    mn = np.array(mn, dtype=np.float64)
+    mx = np.array(mx, dtype=np.float64)
+    qrows = topk.collect_queries(queries, "q_id")
+    Q = topk.matrix(r["q_vec"] for r in qrows)
+
+    def score(pdf):
+        X = topk.matrix(pdf[vec_col])
+        codes = X if coded else sq8_codes(X, mn, mx)
+        return topk.rounded_l2sq(sq8_dequant(codes, mn, mx), Q), None
+
+    out_schema = T.StructType([
+        T.StructField("q_id", queries.schema["q_id"].dataType),
+        T.StructField("c_id", corpus.schema[id_col].dataType),
+        T.StructField("sq_dist", T.DoubleType()),
+    ])
+    return topk.scan_topk(
+        corpus.select(id_col, vec_col), k, out_schema, score,
+        {"q_id": np.array([r["q_id"] for r in qrows])}, {"c_id": id_col},
+        "sq_dist", desc=False,
+    )
 
 
 def sq8_topk(emb: DataFrame, k: int, n_queries: int = 10,
              id_col: str = "vec_id",
              vec_col: str = "embedding") -> DataFrame:
     """8-bit scalar-quantized top-k: raw query vs dequantized candidate
-    squared-L2 (asymmetric, like ADC). One broadcast of the O(dim) stats
-    row, one map-side dequant pass over the corpus, one top-k shuffle —
-    the SQ8 scan of a 100 TB vector table reads 1/4 the bytes.
+    squared-L2 (asymmetric, like ADC). The O(dim) per-dimension stats are
+    collected (one row per dimension), then one scan quantizes and scores
+    each batch map-side — the SQ8 scan of a 100 TB vector table reads
+    1/4 the bytes.
     Output: q_id, c_id, sq_dist (ascending = nearer), rank."""
-    stats = sq_stats(emb, id_col, vec_col)
-    cand = emb.crossJoin(F.broadcast(stats)).select(
-        F.col(id_col).alias("c_id"),
-        _sq8_dequant(_to_double(F.col(vec_col)),
-                     F.col("mn_l"), F.col("mx_l")).alias("deq"),
-    )
+    dims = sorted(sq_dim_stats(emb, vec_col).collect())
     queries = emb.where(F.col(id_col) < n_queries).select(
-        F.col(id_col).alias("q_id"),
-        _to_double(F.col(vec_col)).alias("q_vec"),
-    )
-    scored = cand.crossJoin(F.broadcast(queries)).select(
-        "q_id", "c_id",
-        F.round(V.l2sq(F.col("q_vec"), F.col("deq")),
-                SCORE_ROUND).alias("sq_dist"),
-    )
-    w = Window.partitionBy("q_id").orderBy(F.asc("sq_dist"), F.asc("c_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-    )
+        F.col(id_col).alias("q_id"), F.col(vec_col).alias("q_vec"))
+    return sq8_scan_topk(emb, k, [r["mn"] for r in dims],
+                         [r["mx"] for r in dims], queries, id_col, vec_col,
+                         coded=False)
 
 
 def sq8_recall(emb: DataFrame, k: int, n_queries: int = 10,
@@ -1743,7 +1783,7 @@ def pq_rescore_topk(emb: DataFrame, k: int, n_queries: int = 10,
 
 def _dd_sq8_base(n_queries: int, table: str, id_col: str,
                  vec_col: str) -> str:
-    """Shared SQ8 CTEs — mirrors sq_stats/_sq8_dequant token-for-token
+    """Shared SQ8 CTEs — mirrors sq_dim_stats/sq8_codes/sq8_dequant
     (same clamp, floor, association; DuckDB's lambda index i is 1-based
     like the mn_l/mx_l subscripts)."""
     deq = (

@@ -28,6 +28,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..index.catalog import read_table
+
 MEDIA_SCHEMA = T.StructType(
     [
         T.StructField("media_id", T.StringType(), False),  # sha256 of bytes
@@ -511,7 +513,7 @@ def decode_stats_permissive(spark, media_dirs: list[str],
     )
     if bad_records_dir is not None:
         ledger.write.mode("overwrite").parquet(bad_records_dir)
-        ledger = spark.read.parquet(bad_records_dir)
+        ledger = read_table(spark, bad_records_dir)
     return ledger.select(*_PERMISSIVE_STATS_COLS).orderBy("file_name")
 
 
@@ -552,7 +554,7 @@ def read_quarantine(spark, bad_records_dir: str) -> DataFrame:
     scan of the written parquet (status != 'ok' prunes at the row-group
     level; ok rows carry NULL payloads anyway)."""
     return (
-        spark.read.parquet(bad_records_dir)
+        read_table(spark, bad_records_dir)
         .where(F.col("status") != "ok")
         .select("file_name", "format", "status", "error",
                 F.col("payload").alias("content"))

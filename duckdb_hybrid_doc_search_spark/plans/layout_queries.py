@@ -16,7 +16,7 @@ import re
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..index.catalog import load_table
+from ..index.catalog import load_table, read_table
 from ..index.fingerprint import (ensure_layout, layout_fingerprint,
                                  layout_name, sweep_siblings,
                                  warehouse_root)
@@ -185,9 +185,9 @@ def lineitem_compaction_stats(spark: SparkSession,
     )
     frag = os.path.join(warehouse_root("layout_metrics"), "compact_scratch")
     li.repartition(40).write.mode("overwrite").parquet(frag)
-    n_rows = spark.read.parquet(frag).count()
+    n_rows = read_table(spark, frag).count()
     stats = compact_parquet_dir(spark, frag, target_bytes=1 << 30)
-    after_rows = spark.read.parquet(frag).count()
+    after_rows = read_table(spark, frag).count()
     return spark.createDataFrame(
         [(stats["files_before"], stats["files_after"],
           n_rows, after_rows, n_rows == after_rows)],
@@ -252,7 +252,7 @@ def corpus_write_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
             .partitionBy("shard")
             .parquet(path)
         ))
-    written = spark.read.parquet(out)
+    written = read_table(spark, out)
     files = written.select(
         "shard", F.input_file_name().alias("f")
     ).distinct().groupBy("shard").agg(F.count(F.lit(1)).alias("n_files"))
@@ -329,7 +329,7 @@ def orders_partition_prune_stats(spark: SparkSession,
         if lo <= int(d.split("=", 1)[1]) <= hi
     ]
 
-    pruned = spark.read.parquet(outdir).where(
+    pruned = read_table(spark, outdir).where(
         (F.col("o_year") >= lo) & (F.col("o_year") <= hi)
     )
     files_read = (

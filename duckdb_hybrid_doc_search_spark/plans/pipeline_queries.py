@@ -8,7 +8,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..index.catalog import load_table
+from ..index.catalog import load_table, read_table
 from ..operators import bpe, curation, dedup, knn, packing, textstats, udtfs
 from .registry import register
 
@@ -151,7 +151,7 @@ def dedup_embedding_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _emb(spark, sf_dir)
     out_dir = ensure_ivf_multiprobe_layout(spark, emb, sf_dir)
     return dedup.dedup_embedding_ivf(
-        emb, cells=spark.read.parquet(out_dir)
+        emb, cells=read_table(spark, out_dir)
         .select("vec_id", "embedding", "cell"),
     )
 
@@ -173,7 +173,7 @@ def dedup_embedding_ivf_whitened(spark: SparkSession,
     emb = _emb(spark, sf_dir)
     out_dir = ensure_ivf_multiprobe_whitened_layout(spark, emb, sf_dir)
     return dedup.dedup_embedding_ivf(
-        emb, cells=spark.read.parquet(out_dir)
+        emb, cells=read_table(spark, out_dir)
         .select("vec_id", "embedding", "cell"),
         threshold=dedup.WHITEN_DUP_THRESHOLD,
     )
@@ -197,7 +197,7 @@ def dedup_embedding_ivf_append_probe(spark: SparkSession,
     emb = _emb(spark, sf_dir)
     out_dir = ensure_ivf_multiprobe_append_layout(spark, emb, sf_dir)
     return dedup.dedup_embedding_ivf(
-        emb, cells=spark.read.parquet(out_dir)
+        emb, cells=read_table(spark, out_dir)
         .select("vec_id", "embedding", "cell"),
     )
 
@@ -617,7 +617,7 @@ def ann_ivf_kmeans_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _emb(spark, sf_dir)
     trained_dir = ensure_ivf_trained_layout(spark, emb, sf_dir)
     tcent = read_layout_centroids(spark, trained_dir)
-    tassign = spark.read.parquet(trained_dir).select(
+    tassign = read_table(spark, trained_dir).select(
         F.col("vec_id").alias("c_id"), "cell")
     return knn.ivf_kmeans_recall(emb, ANN_K, ANN_N_QUERIES,
                                  tcent=tcent, tassign=tassign)
@@ -1110,7 +1110,7 @@ def ann_ivf_nprobe_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     return knn.ivf_nprobe_curve(
         emb, ANN_K, ANN_N_QUERIES,
         cent=read_layout_centroids(spark, out_dir),
-        assign=spark.read.parquet(out_dir).select(
+        assign=read_table(spark, out_dir).select(
             F.col("vec_id").alias("c_id"), "cell"),
     )
 

@@ -104,6 +104,10 @@ RECHECK: dict[str, int] = dict.fromkeys([
     # norm instead of dividing: the queries whose plans reach it (the
     # IVF, IVF-PQ, PQ-rescore and hybrid ones are listed above)
     "cosine_topk", "mllib_brp_recall",
+    # ... and the SQ8 scan moved onto the Arrow top-k kernel (the other
+    # ann_sq8_* and ann_ivfpq_* queries, whose plans also changed, and
+    # every query that reads a layout are listed above)
+    "ann_sq8_topk",
 ], 16)
 
 

@@ -36,6 +36,7 @@ from ..config import (RERANK_TRUNCATE_CHARS, SCORE_ROUND, SCORE_THRESHOLD,
                       TOP_K_DEFAULT)
 from ..functions import topk
 from ..functions.fusion import fuse_values
+from ..index.catalog import read_table
 from ..models.embedder import hash_embed_text
 from ..models.reranker import cross_encoder_scores
 from ..models.tokenizer import tokenize_query
@@ -274,7 +275,7 @@ class DocSearchEngine:
                 "serves from a driver snapshot; search a corpus this size "
                 "with search/engine.hybrid_search_batch"
             )
-        load = lambda t: spark.read.parquet(path(t))  # noqa: E731
+        load = lambda t: read_table(spark, path(t))  # noqa: E731
         self.documents = load("documents")
         self.embeddings = load("embeddings")
         self.index = {"postings_scored": load("postings_scored")}

@@ -14,6 +14,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..index.catalog import load_table, read_table
+
 
 def read_documents_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bounded file stream over the documents parquet (one file = one
@@ -95,7 +97,7 @@ def run_streaming_incremental_dedup(spark: SparkSession, sf_dir: str,
                                       ensure_dedup_layout)
     from ..operators.dedup import BATCH_MOD, decide_batch_against_store
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = load_table(spark, sf_dir, "documents")
     existing = docs.where(F.col("doc_id") % BATCH_MOD != 0)
     base = ensure_dedup_layout(spark, existing, sf_dir)
     run_root = tempfile.mkdtemp(prefix="stream_incdedup_")
@@ -126,7 +128,7 @@ def run_streaming_incremental_dedup(spark: SparkSession, sf_dir: str,
             # driver round-trip, and the broadcast is a hash probe, not
             # a plan full of isin() literals
             kept = (
-                spark.read.parquet(slice_dir)
+                read_table(spark, slice_dir)
                 .where(F.col("decision") == "kept")
                 .select("doc_id")
             )
@@ -159,7 +161,7 @@ def run_streaming_incremental_dedup(spark: SparkSession, sf_dir: str,
             )
         # materialize off the sink before the run dir is removed; the
         # caller gets a live frame, production keeps the sink itself
-        result = spark.read.parquet(f"{sink}/batch-*").select(
+        result = read_table(spark, f"{sink}/batch-*").select(
             "doc_id", "decision", "n_near"
         ).localCheckpoint()
     finally:

@@ -17,7 +17,9 @@ construction, with the swap-in write keeping probes consistent mid-update.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
+
+from ..index.catalog import load_table, read_table
 
 
 def read_markdown_stream(spark: SparkSession, dirs: list[str]) -> DataFrame:
@@ -68,27 +70,29 @@ def run_streaming_index_update(spark: SparkSession, watch_dir: str,
 
 
 def ensure_fts_base_store(spark: SparkSession, docs: DataFrame,
-                          sf_dir: str, root: str | None = None,
-                          name: str = "segbase") -> str:
+                          keep: Column, sf_dir: str,
+                          root: str | None = None) -> str:
     """Build (once, fingerprint-keyed) a BASE-ONLY segmented FTS store
-    over `docs` — the starting state the streaming append loop copies
-    per run (appends must never mutate the shared cache, mirroring
-    streaming/docs.run_streaming_incremental_dedup's store copy).
+    over the slice ``docs.where(keep)`` — the starting state the
+    streaming append loops copy per run (appends must never mutate the
+    shared cache, mirroring streaming/docs.run_streaming_incremental_dedup's
+    store copy).
 
-    ``name`` must identify the LOGICAL corpus: the file-stat fingerprint
-    hashes input FILES, not plans (index/fingerprint.py's documented
-    contract), so two different FILTERS of the same parquet fingerprint
-    identically — callers slicing the corpus differently (the SEG_SPLIT
-    append loop vs the ingestion pipeline's BATCH_MOD split) must pass
-    distinct names or they silently share one cached store."""
-    from ..index.fingerprint import ensure_layout, layout_fingerprint
+    The file-stat fingerprint hashes input FILES, not plans, so two
+    slices of one parquet fingerprint alike; the key therefore also
+    carries the slice predicate's text (fingerprint.predicate_tag).
+    Pass ``keep`` over column names (``F.col``), and ``F.lit(True)`` for
+    the whole corpus."""
+    from ..index.fingerprint import (ensure_layout, layout_fingerprint,
+                                     predicate_tag)
     from ..index.fts_layout import (_LAYOUT_VERSION, SEG_DONE,
                                     write_fts_segments)
 
+    base = docs.where(keep)
     return ensure_layout("fts_segment_layout", sf_dir,
-                         f"{name}-v{_LAYOUT_VERSION}",
+                         f"segbase-v{_LAYOUT_VERSION}-{predicate_tag(keep)}",
                          layout_fingerprint(docs, "doc_id", "text"),
-                         lambda out_dir: write_fts_segments(docs, out_dir),
+                         lambda out_dir: write_fts_segments(base, out_dir),
                          SEG_DONE, root)
 
 
@@ -148,9 +152,9 @@ def run_streaming_fts_append(spark: SparkSession, sf_dir: str, query: str,
     from .docs import read_documents_stream
     from .util import bounded_file_source, drive_bounded, own_run_root
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = load_table(spark, sf_dir, "documents")
     is_new = F.col("doc_id") % SEG_SPLIT_MOD == SEG_SPLIT_REM
-    base = ensure_fts_base_store(spark, docs.where(~is_new), sf_dir)
+    base = ensure_fts_base_store(spark, docs, ~is_new, sf_dir)
     run_root, caller_owns_root = own_run_root(run_root, "stream_ftsappend_")
     store = f"{run_root}/store"
     shutil.copytree(base, store)
@@ -164,7 +168,7 @@ def run_streaming_fts_append(spark: SparkSession, sf_dir: str, query: str,
                            skip_existing=fold_every is not None)
         if (
             fold_every is not None
-            and spark.read.parquet(f"{store}/segstats").count() >= fold_every
+            and read_table(spark, f"{store}/segstats").count() >= fold_every
         ):
             fold_fts_segments(spark, store)
 
@@ -193,7 +197,7 @@ def ensure_ivf_stream_base(spark: SparkSession, sf_dir: str,
                                     read_layout_meta, write_ivf_partitioned)
     from ..operators.knn import centroid_pred, derive_nlist
 
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    emb = load_table(spark, sf_dir, "embeddings")
 
     def build(out_dir: str) -> None:
         nlist = derive_nlist(emb.count())
@@ -244,7 +248,7 @@ def run_streaming_ivf_append(spark: SparkSession, sf_dir: str,
     from ..operators.knn import centroid_pred
     from .util import bounded_file_source, drive_bounded, own_run_root
 
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    emb = load_table(spark, sf_dir, "embeddings")
     base, nlist = ensure_ivf_stream_base(spark, sf_dir)
     is_new = (~centroid_pred("vec_id", nlist)) & (
         F.col("vec_id") % APPEND_SPLIT_MOD == APPEND_SPLIT_REM

@@ -34,6 +34,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..index.catalog import load_table, read_table
 from ..operators import textstats
 from ..operators.curation import QUALITY_FLOOR
 from ..operators.dedup import BATCH_MOD
@@ -125,7 +126,7 @@ def ingest_batch(spark: SparkSession, batch: DataFrame, batch_id: int, *,
             dec.write.mode("overwrite").parquet(slice_dir)
             with open(marker, "w"):
                 pass
-        decided = spark.read.parquet(slice_dir)
+        decided = read_table(spark, slice_dir)
         kept_ids = decided.where(
             F.col("decision") == "kept").select("doc_id")
         kept_docs = batch.join(F.broadcast(kept_ids), "doc_id",
@@ -141,14 +142,14 @@ def ingest_batch(spark: SparkSession, batch: DataFrame, batch_id: int, *,
         manifest_dir = f"{manifest}/batch-{batch_id}"
         admitted_ids.write.mode("overwrite").parquet(manifest_dir)
         admitted_docs = batch.join(
-            F.broadcast(spark.read.parquet(manifest_dir)),
+            F.broadcast(read_table(spark, manifest_dir)),
             "doc_id", "leftsemi")
         append_fts_segment(spark, fstore, admitted_docs,
                            append_id=f"mb{batch_id}",
                            skip_existing=True)
         if (
             fold_every is not None
-            and spark.read.parquet(f"{fstore}/segstats").count()
+            and read_table(spark, f"{fstore}/segstats").count()
             >= fold_every
         ):
             fold_fts_segments(spark, fstore)
@@ -169,7 +170,7 @@ def ingest_batch(spark: SparkSession, batch: DataFrame, batch_id: int, *,
                 .alias("n_kept"),
             )
             .crossJoin(
-                spark.read.parquet(manifest_dir)
+                read_table(spark, manifest_dir)
                 .agg(F.count(F.lit(1)).alias("n_indexed"))
             )
             .select(
@@ -219,14 +220,11 @@ def run_streaming_ingest(spark: SparkSession, sf_dir: str,
     from .index_maintenance import ensure_fts_base_store
     from .util import bounded_file_source, drive_bounded, own_run_root
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = load_table(spark, sf_dir, "documents")
     is_batch = F.col("doc_id") % BATCH_MOD == 0
     existing = docs.where(~is_batch)
     dstore_base = ensure_dedup_layout(spark, existing, sf_dir)
-    # distinct cache name: the file-stat fingerprint can't tell this
-    # BATCH_MOD slice from the append loop's SEG_SPLIT slice
-    fstore_base = ensure_fts_base_store(spark, existing, sf_dir,
-                                        name="ingestbase")
+    fstore_base = ensure_fts_base_store(spark, docs, ~is_batch, sf_dir)
     run_root, caller_owns_root = own_run_root(run_root, "stream_ingest_")
     dstore = f"{run_root}/dedup_store"
     fstore = f"{run_root}/fts_store"
@@ -257,7 +255,7 @@ def run_streaming_ingest(spark: SparkSession, sf_dir: str,
                     "n_near_dup long, n_kept long, n_indexed long, "
                     "n_quality_rejected long"
             )
-        return spark.read.parquet(f"{ledger}/batch-*").orderBy("batch_id")
+        return read_table(spark, f"{ledger}/batch-*").orderBy("batch_id")
 
     return drive_bounded(source, ingest_slice, query_name, result_fn,
                          run_root, caller_owns_root)

@@ -8,6 +8,7 @@ from __future__ import annotations
 import os
 
 import pytest
+from pyspark.sql import functions as F
 
 from duckdb_hybrid_doc_search_spark.index import fingerprint
 from duckdb_hybrid_doc_search_spark.index.fingerprint import (
@@ -225,8 +226,9 @@ def _site_cases():
          "fts_folded_layout", "fold-v2", "docs", "_SEG_FOLD_DONE",
          seg_patch + [(fts_layout, "fold_fts_segments", _noop)]),
         ("fts_base_store", lambda s, d, docs, emb:
-            index_maintenance.ensure_fts_base_store(s, docs, d),
-         "fts_segment_layout", "segbase-v2", "docs", "_SEG_DONE", seg_patch),
+            index_maintenance.ensure_fts_base_store(s, docs, F.lit(True), d),
+         "fts_segment_layout", "segbase-v2-sc8871a8c29a5", "docs",
+         "_SEG_DONE", seg_patch),
         ("ivf_stream_base", lambda s, d, docs, emb:
             index_maintenance.ensure_ivf_stream_base(s, d)[0],
          "ivf_stream_base", "ivfstreambase-v3", "emb", "_LAYOUT_DONE",
@@ -295,3 +297,29 @@ def test_orc_and_layout_metric_directory_names(spark, sf_dir, tmp_path,
     for name in (f"{sf}-zorderd-{lfp}", f"{sf}-sortbd-{lfp}",
                  f"{sf}-shards-{dfp}", f"{sf}-opart1-{ofp}"):
         assert os.path.exists(os.path.join(metrics, name, "_SUCCESS")), name
+
+
+def test_base_store_key_carries_the_slice(spark, sf_dir, tmp_path,
+                                          monkeypatch):
+    """A base store built over the whole corpus does not stand in for
+    the registered append loop's slice (doc_id % 7 != 3) in the same
+    warehouse: the slice predicate is part of the key, so the loop
+    builds its own base and its probe still equals the oracle."""
+    from duckdb_hybrid_doc_search_spark.index.catalog import load_table
+    from duckdb_hybrid_doc_search_spark.plans import registry
+    from duckdb_hybrid_doc_search_spark.streaming.index_maintenance import (
+        ensure_fts_base_store)
+
+    from .oracle_harness import compare
+
+    wh = str(tmp_path / "wh")
+    monkeypatch.setattr(
+        fingerprint, "warehouse_root",
+        lambda lf, root=None: root or os.path.join(wh, lf))
+    docs = load_table(spark, sf_dir, "documents")
+    full = ensure_fts_base_store(spark, docs, F.lit(True), sf_dir)
+    registry._load_all()
+    q = registry.REGISTRY["streaming_fts_segment_append"]
+    compare(spark, sf_dir, q.spark_fn, q.oracle)
+    stores = os.listdir(os.path.dirname(full))
+    assert len(stores) == 2 and os.path.basename(full) in stores

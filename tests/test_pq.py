@@ -230,3 +230,16 @@ def test_pq_rescore_recall_reports_the_gap_closing(spark, sf_dir):
     mean_adc = sum(r.recall_adc for r in rows) / NQ
     mean_resc = sum(r.recall_rescore for r in rows) / NQ
     assert mean_resc > mean_adc, (mean_adc, mean_resc)
+
+
+def test_ivfpq_side_collect_keeps_the_query_bound(spark, sf_dir,
+                                                  monkeypatch):
+    """The one side-table collect of ivfpq_topk still refuses a query
+    batch over MAX_QUERIES, before any scan."""
+    import pytest
+
+    from duckdb_hybrid_doc_search_spark.functions import topk
+
+    monkeypatch.setattr(topk, "MAX_QUERIES", NQ - 1)
+    with pytest.raises(ValueError, match="MAX_QUERIES"):
+        knn.ivfpq_topk(_emb(spark, sf_dir), K, NQ)

@@ -185,8 +185,7 @@ def test_ingest_redelivery_is_idempotent(spark, sf_dir, tmp_path):
         import ensure_fts_base_store
 
     base = ensure_fts_base_store(
-        spark, docs.where(F.col("doc_id") % BATCH_MOD != 0), sf_dir,
-        name="ingestbase")
+        spark, docs, ~(F.col("doc_id") % BATCH_MOD == 0), sf_dir)
     shutil.rmtree(f"{run_root}/fts_store")
     shutil.copytree(base, f"{run_root}/fts_store")
     ingest_batch(spark, batch, 0, **kw)
@@ -258,7 +257,8 @@ def test_ingest_empty_batch_is_skipped_whole(spark, sf_dir, tmp_path):
     fstore = str(tmp_path / "fstore")
     shutil.copytree(ensure_dedup_layout(spark, existing, sf_dir), dstore)
     shutil.copytree(
-        ensure_fts_base_store(spark, existing, sf_dir, name="ingestbase"),
+        ensure_fts_base_store(
+            spark, docs, ~(F.col("doc_id") % BATCH_MOD == 0), sf_dir),
         fstore)
     seg_files_before = sorted(
         os.listdir(os.path.join(fstore, "segstats")))

@@ -225,3 +225,28 @@ def test_local_topk_fewer_finite_keys_than_k(desc):
         ids = rng.permutation(n).astype(np.int64)
         for keep in (None, rng.random((n, 2)) < 0.5):
             _check_local(S, ids, k, desc, keep)
+
+
+def test_rounded_l2sq_is_the_scalar_fold():
+    """rounded_l2sq equals the per-pair form it vectorizes: three left
+    folds from 0.0, ``q·q - 2 q·x + x·x``, rounded half up at SCORE_ROUND
+    with +0.0 for a negative value that rounds to zero (Spark's
+    F.round)."""
+    from duckdb_hybrid_doc_search_spark.config import SCORE_ROUND
+    from duckdb_hybrid_doc_search_spark.utils import round_half_up
+
+    def fold(a, b):
+        acc = 0.0
+        for x, y in zip(a, b):
+            acc = acc + x * y
+        return acc
+
+    rng = np.random.default_rng(11)
+    X = rng.standard_normal((40, 7)).astype(np.float32).astype(np.float64)
+    Q = np.vstack([X[:3], X[:3] + 1e-9, rng.standard_normal((4, 7))])
+    got = topk.rounded_l2sq(X, Q)
+    for i, x in enumerate(X):
+        for j, q in enumerate(Q):
+            d = fold(q, q) - 2.0 * fold(q, x) + fold(x, x)
+            want = round_half_up(d, SCORE_ROUND) + 0.0
+            assert got[i, j] == want and str(got[i, j]) == str(want)
