@@ -2,8 +2,8 @@
 
 Every GEMM-shaped vector top-k in the engine — brute-force kNN, the kNN
 evaluation operators, PQ and IVF-PQ ADC scans, the SQ8 scans (query-time
-and written layout), the written-IVF-layout probe and the batch hybrid
-VSS branch — runs through :func:`scan_topk`:
+and written layout), every IVF probe (operators/knn.ivf_probe_topk) and
+the batch hybrid VSS branch — runs through :func:`scan_topk`:
 the bounded query batch is collected to the driver
 (:func:`collect_queries`), each Arrow batch of the corpus is scored
 against every query at once by a site-supplied score block, each query
@@ -21,6 +21,18 @@ N x Q pairs would.
 
 :func:`grouped_topk` ranks a list of (group, score, id) rows in the same
 order; the serving snapshot ranks its fused candidates with it.
+
+The IVF cell rule — rounded cosine descending, ties to the lower
+centroid id, NaN (a zero norm) last, as the DuckDB oracles' ``row_number``
+over ``round(cosine) DESC, cent_id ASC`` — is :func:`top_cells` alone,
+over a centroid table collected by :func:`collect_centroids`. Its sites:
+the cell assignment (operators/knn.assign_to_centroids, which every IVF,
+IVF-PQ and dedup layout build and append goes through), the cell picks
+inside the IVF-PQ scans (knn.ivfpq_topk, knn.ivfpq_residual_topk), the
+one IVF probe (knn.ivf_probe_topk: knn.ivf_topk, knn.ivf_kmeans_recall,
+index/ivf_layout.ivf_frozen_layout_topk, search/engine.ivf_vss_topk) and
+the probe pairs of knn.ivf_nprobe_curve and
+index/ivfpq_layout.ivfpq_layout_topk (knn.probe_pairs).
 """
 
 from __future__ import annotations
@@ -41,6 +53,10 @@ from ..utils import round_half_up_array
 # batch is 50 queries (knn.CLS_N_QUERIES).
 MAX_QUERIES = 1024
 
+# Largest centroid table an IVF site collects to the driver: the nlist
+# knn.derive_nlist gives a corpus of 2**32 vectors.
+MAX_CENTROIDS = 65536
+
 # one Arrow batch -> its (n, q) scores and an optional (n, q) keep-mask
 ScoreBlock = Callable[[pd.DataFrame], tuple[np.ndarray, np.ndarray | None]]
 
@@ -60,6 +76,21 @@ def check_queries(rows: list[Row], key: str) -> list[Row]:
             "rows; the batch is collected to the driver, so split it"
         )
     return sorted(rows, key=lambda r: r[key])
+
+
+def collect_centroids(cent: DataFrame) -> tuple[np.ndarray, np.ndarray]:
+    """(ids, C) of a (cent_id, cvec) centroid table on the driver, sorted
+    by cent_id, the order :func:`top_cells` breaks ties in. Raises
+    ValueError rather than collect more than MAX_CENTROIDS rows."""
+    rows = cent.select("cent_id", "cvec").limit(MAX_CENTROIDS + 1).collect()
+    if len(rows) > MAX_CENTROIDS:
+        raise ValueError(
+            f"centroid table has more than MAX_CENTROIDS={MAX_CENTROIDS} "
+            "rows; it is collected to the driver"
+        )
+    rows.sort(key=lambda r: r["cent_id"])
+    return (np.array([int(r["cent_id"]) for r in rows], dtype=np.int64),
+            matrix(r["cvec"] for r in rows))
 
 
 def matrix(vectors: Iterable[Sequence[float]]) -> np.ndarray:
@@ -91,8 +122,7 @@ def rounded_l2sq(X: np.ndarray, Q: np.ndarray) -> np.ndarray:
     SCORE_ROUND as Spark's ``F.round`` rounds: the dot identity
     ``q·q - 2 q·x + x·x`` with each dot a left fold from 0.0 over the
     dimensions, the float order of functions/vector.l2sq and its DuckDB
-    twin; half up (utils.round_half_up_array), and ``+ 0.0`` because
-    Spark rounds a small negative value to +0.0, not -0.0."""
+    twin; half up (utils.round_half_up_array)."""
     qq, xx = np.zeros(len(Q)), np.zeros(len(X))
     qx = np.zeros((len(X), len(Q)))
     for i in range(X.shape[1]):
@@ -100,13 +130,15 @@ def rounded_l2sq(X: np.ndarray, Q: np.ndarray) -> np.ndarray:
         qx += X[:, i, None] * Q[None, :, i]
         xx += X[:, i] * X[:, i]
     return round_half_up_array((qq[None, :] - 2.0 * qx) + xx[:, None],
-                               SCORE_ROUND) + 0.0
+                               SCORE_ROUND)
 
 
 def top_cells(Q: np.ndarray, C: np.ndarray, n: int) -> np.ndarray:
-    """(q, min(n, len(C))) positions in C of each query's n probe cells:
-    rounded cosine descending, ties to the earlier (lower-id) centroid
-    — C must be sorted by centroid id."""
+    """(q, min(n, len(C))) positions in C of each row of Q's n nearest
+    cells by the IVF cell rule: rounded cosine descending, ties to the
+    earlier (lower-id) centroid, NaN last — C must be sorted by centroid
+    id (:func:`collect_centroids`). The one implementation of the rule:
+    ``top_cells(X, C, 1)[:, 0]`` is each vector's assigned cell."""
     take = min(n, len(C))
     return np.argsort(-rounded_cosine(Q, C), axis=1, kind="stable")[:, :take]
 

@@ -19,7 +19,8 @@ from pyspark.sql import functions as F
 
 from ..functions import topk
 from ..operators.dedup import DEDUP_IVF_NPROBE
-from ..operators.knn import NPROBE, centroid_pred, derive_nlist, ivf_assign
+from ..operators.knn import (centroid_pred, derive_nlist, ivf_assign,
+                              ivf_probe_topk)
 from .catalog import read_table
 from .fingerprint import ensure_layout, layout_fingerprint
 
@@ -433,50 +434,24 @@ def read_layout_centroids(spark: SparkSession, out_dir: str) -> DataFrame:
 
 
 def ivf_frozen_layout_topk(spark: SparkSession, out_dir: str,
-                           queries: DataFrame, k: int) -> DataFrame:
+                           queries: DataFrame, k: int,
+                           score=topk.rounded_cosine,
+                           score_col: str = "cos_sim",
+                           desc: bool = True) -> DataFrame:
     """IVF top-k against a WRITTEN layout using its frozen centroid
     table (read from the side table — never recomputed, so the probe is
     centroid-source-agnostic: sampled, trained, and caller-frozen
     layouts all probe identically). ``queries`` carries (q_id, q_vec).
-    Candidates come from the partition-PRUNED cell scan: cost is
-    nprobe/nlist of the layout by construction.
-
-    Each query's NPROBE cells are picked on the driver from the frozen
-    centroid table (functions/topk.top_cells), and the pruned scan of
-    their union is scored by one Arrow top-k scan, each query keeping
-    only the rows of its own cells."""
-    import numpy as np
-    from pyspark.sql import types as T
-
-    cent_rows = sorted(
-        read_layout_centroids(spark, out_dir).collect(),
-        key=lambda r: r["cent_id"],
-    )
-    qrows = topk.collect_queries(queries, "q_id")
-    out_schema = T.StructType([
-        T.StructField("q_id", queries.schema["q_id"].dataType),
-        T.StructField("c_id", T.LongType()),
-        T.StructField("cos_sim", T.DoubleType()),
-    ])
-    score, probe_ids = None, []
-    if qrows and cent_rows:
-        cc_ids = np.array([int(r["cent_id"]) for r in cent_rows],
-                          dtype=np.int64)
-        Q = topk.matrix(r["q_vec"] for r in qrows)
-        probe = cc_ids[topk.top_cells(
-            Q, topk.matrix(r["cvec"] for r in cent_rows), NPROBE)]
-        probe_ids = sorted(set(probe.ravel().tolist()))
-
-        def score(pdf):
-            return (topk.rounded_cosine(topk.matrix(pdf["embedding"]), Q),
-                    topk.probe_mask(pdf["cell"].to_numpy(), probe))
-
-    return topk.scan_topk(
-        probe_cells(spark, out_dir, probe_ids)
-        .select("vec_id", "embedding", "cell"),
-        k, out_schema, score,
-        {"q_id": np.array([r["q_id"] for r in qrows])}, {"c_id": "vec_id"},
-        "cos_sim", desc=True,
+    The one IVF probe (operators/knn.ivf_probe_topk) over the
+    partition-PRUNED cell scan: cost is nprobe/nlist of the layout by
+    construction. ``score``, ``score_col`` and ``desc`` are the probe's
+    score block (rounded cosine, descending, by default)."""
+    return ivf_probe_topk(
+        read_layout_centroids(spark, out_dir), queries,
+        read_table(spark, out_dir).select(
+            F.col("vec_id").alias("c_id"), F.col("embedding").alias("c_vec"),
+            "cell"),
+        k, score, score_col, desc,
     )
 
 

@@ -24,7 +24,7 @@ from pyspark.sql import functions as F
 from ..config import SCORE_ROUND
 from ..functions import vector as V
 from ..operators.knn import (NPROBE, PQ_DIM, PQ_M, _pq_long, derive_nlist,
-                             ivf_assign, pq_codebook, pq_encode)
+                             ivf_assign, pq_codebook, pq_encode, probe_pairs)
 from .catalog import read_table
 from .fingerprint import ensure_layout, layout_fingerprint
 
@@ -97,29 +97,14 @@ def ivfpq_layout_topk(spark: SparkSession, out_dir: str, emb: DataFrame,
     from the PRUNED partition scan of the written codes table and the
     LUT from the written codebook — the raw embeddings table supplies
     only the query vectors (the bounded side)."""
-    cent = read_table(spark, _side_dir(out_dir, "centroids"))
     cb = read_table(spark, _side_dir(out_dir, "codebook"))
     queries = emb.where(F.col(id_col) < n_queries).select(
         F.col(id_col).alias("q_id"), F.col(vec_col).alias("q_vec")
     )
-    qc = queries.crossJoin(F.broadcast(cent)).select(
-        "q_id", "cent_id",
-        F.round(V.cosine_similarity(F.col("q_vec"), F.col("cvec")),
-                SCORE_ROUND).alias("qsim"),
-    )
-    wq = Window.partitionBy("q_id").orderBy(F.desc("qsim"), F.asc("cent_id"))
-    probes = (
-        qc.withColumn("rn", F.row_number().over(wq))
-        .where(F.col("rn") <= NPROBE)
-        .select("q_id", F.col("cent_id").alias("cell"))
-    )
-    # bounded collect: NPROBE * n_queries cell ids route the pruned scan
-    probe_cell_ids = sorted(
-        {r.cell for r in probes.select("cell").distinct().collect()}
-    )
-    codes = read_table(spark, out_dir).where(
-        F.col("cell").isin(probe_cell_ids)
-    )
+    probes, cells = probe_pairs(
+        read_table(spark, _side_dir(out_dir, "centroids")), queries, NPROBE)
+    # the NPROBE * n_queries probed cells route the pruned scan
+    codes = read_table(spark, out_dir).where(F.col("cell").isin(cells))
     q_long = _pq_long(
         emb.where(F.col(id_col) < n_queries)
         .select(F.col(id_col).alias("q_id"), vec_col),
@@ -131,7 +116,7 @@ def ivfpq_layout_topk(spark: SparkSession, out_dir: str, emb: DataFrame,
                 SCORE_ROUND).alias("d"),
     )
     scored = (
-        probes.join(codes, "cell")
+        probes.select("q_id", "cell").join(codes, "cell")
         .select("q_id", F.col("vec_id").alias("c_id"), "m", "code")
         .join(F.broadcast(lut), ["q_id", "m", "code"])
         .groupBy("q_id", "c_id")

@@ -136,79 +136,48 @@ def dd_centroid_pred(id_col: str, table: str = "embeddings") -> str:
 def assign_to_centroids(vecs: DataFrame, cent: DataFrame,
                         p: int = 1, with_sim: bool = False,
                         keep_vec: bool = False) -> DataFrame:
-    """(c_id, cell): nearest-centroid assignment by cosine, tie -> lower
-    centroid id. `vecs` has (c_id, c_vec); `cent` has (cent_id, cvec) and
-    is broadcast. The SINGLE source of the assignment rule — build-time
-    assignment (ivf_assign) and incremental appends
-    (index/ivf_layout.append_ivf_vectors) must use the same rounding and
-    tie-break or appended cells drift from built cells.
+    """(c_id, cell): each vector's nearest centroid by the IVF cell rule
+    (functions/topk.top_cells: rounded cosine, tie -> lower centroid id,
+    a zero-norm centroid last). `vecs` has (c_id, c_vec); `cent` has
+    (cent_id, cvec) and is collected to the driver
+    (topk.collect_centroids). Build-time assignment (ivf_assign) and
+    incremental appends (index/ivf_layout.append_ivf_vectors) both come
+    here, so appended cells cannot drift from built cells.
 
     ``p`` > 1 keeps each vector's top-p cells (one row per cell) — the
     MULTI-PROBE assignment the cell-bucketed dedup layout persists
     (r11 VERDICT #2: single-probe assignment loses near-dup pairs at
     cell boundaries; top-2 assignment recovers most of them at a
-    bounded p^2 pair-space factor). The rank-1 row of a p>1 call is
-    identical to the p=1 call by construction (same ordering, same
-    tie-break), so probe layouts and dedup layouts never disagree on a
-    vector's primary cell.
-
-    r14: one Arrow-GEMM pass over the vectors with the centroid table
-    collected to the driver (the same bounded ~sqrt(N) rows the old
-    crossJoin broadcast shipped) replaces the N x nlist row
-    materialization + per-vector row_number window — the window's
-    exchange+sort was the dominant cost of every IVF build at test
-    scale and carries N x nlist rows at any scale. Same rule to the
-    bit that matters: csim rounded at SCORE_ROUND, argmax ties to the
-    LOWER cent_id (centroids are cid-sorted; first-max / stable
-    argsort), pinned value-identical to the window form at sf0.001/
-    0.01/0.1 and re-verified against every downstream oracle.
+    bounded p^2 pair-space factor). The rank-1 row of a p>1 call is the
+    p=1 call's row, so probe layouts and dedup layouts never disagree
+    on a vector's primary cell.
 
     ``with_sim`` adds the kept cell's rounded cosine as ``csim`` and
     ``keep_vec`` passes the vector through — the SemDeDup keep rule
-    needs both, and emitting them here keeps the assignment rule in
-    this one function instead of a second crossJoin+window plan."""
+    needs both, and the in-plan IVF probe scores the passed-through
+    vectors."""
     import numpy as np
     import pandas as pd
 
-    crows = sorted(cent.select("cent_id", "cvec").collect(),
-                   key=lambda r: r["cent_id"])
-    C = np.array([[float(x) for x in r["cvec"]] for r in crows],
-                 dtype=np.float64)
-    cids = np.array([int(r["cent_id"]) for r in crows], dtype=np.int64)
-    cnorm = np.sqrt((C * C).sum(axis=1))
+    cids, C = topk.collect_centroids(cent)
     take = min(p, len(cids))
 
     def fn(batches):
         for pdf in batches:
             if not len(pdf):
                 continue
-            X = np.array(pdf["c_vec"].tolist(), dtype=np.float64)
-            sims = np.round(
-                (X @ C.T)
-                / (np.sqrt((X * X).sum(axis=1))[:, None] * cnorm[None, :]),
-                SCORE_ROUND,
-            )
-            if take == 1:
-                best = sims.argmax(axis=1)  # first max = lowest cent_id
-                out = {
-                    "c_id": pdf["c_id"].to_numpy(),
-                    "cell": cids[best],
-                }
-                if with_sim:
-                    out["csim"] = sims[np.arange(len(best)), best]
-            else:
-                idx = np.argsort(-sims, axis=1, kind="stable")[:, :take]
-                out = {
-                    "c_id": np.repeat(pdf["c_id"].to_numpy(), take),
-                    "cell": cids[idx].ravel(),
-                }
-                if with_sim:
-                    out["csim"] = np.take_along_axis(sims, idx, 1).ravel()
+            X = topk.matrix(pdf["c_vec"])
+            idx = topk.top_cells(X, C, p)
+            out = {
+                "c_id": np.repeat(pdf["c_id"].to_numpy(), take),
+                "cell": cids[idx].ravel(),
+            }
+            if with_sim:
+                out["csim"] = np.take_along_axis(
+                    topk.rounded_cosine(X, C), idx, 1).ravel()
             if keep_vec:
-                reps = 1 if take == 1 else take
-                vec = pdf["c_vec"]
-                out["c_vec"] = (vec if reps == 1
-                                else vec.repeat(reps).reset_index(drop=True))
+                out["c_vec"] = pdf["c_vec"].repeat(take).reset_index(
+                    drop=True)
             yield pd.DataFrame(out)
 
     schema = "c_id long, cell long"
@@ -219,32 +188,36 @@ def assign_to_centroids(vecs: DataFrame, cent: DataFrame,
     return vecs.select("c_id", "c_vec").mapInPandas(fn, schema)
 
 
-def ivf_assign(emb: DataFrame, id_col: str = "vec_id",
-               vec_col: str = "embedding",
-               nlist: int | None = None,
-               p: int = 1) -> tuple[DataFrame, DataFrame]:
-    """(centroids, assignments) for the IVF index.
-
-    Centroids are a deterministic subsample (centroid_pred — every
-    CENTROID_MOD-th id, capped at nlist centroids; a k-means stand-in
-    that keeps the oracle exact). ``nlist`` defaults to
-    derive_nlist(emb.count()) — one bounded scalar action, the same
-    count the oracle computes as a scalar subquery; layout builders over
-    a PARTIAL frame (the append-layout 80% base) must pass the
-    full-corpus nlist explicitly or append equivalence breaks. Every
-    vector is assigned to its nearest centroid by cosine (tie -> lower
-    centroid id); ``p`` > 1 keeps the top-p cells per vector (the
-    multi-probe dedup assignment — see assign_to_centroids). The
-    centroid set is ~sqrt(N) rows and broadcast; assignment is one
-    scan. THE single source of the sample-centroid derivation — the
+def sample_centroids(emb: DataFrame, id_col: str = "vec_id",
+                     vec_col: str = "embedding",
+                     nlist: int | None = None) -> DataFrame:
+    """The IVF centroid table (cent_id, cvec): a deterministic subsample
+    (centroid_pred — every CENTROID_MOD-th id, capped at nlist
+    centroids; a k-means stand-in that keeps the oracle exact).
+    ``nlist`` defaults to derive_nlist(emb.count()) — one bounded scalar
+    action, the same count the oracle computes as a scalar subquery;
+    layout builders over a PARTIAL frame (the append-layout 80% base)
+    must pass the full-corpus nlist explicitly or append equivalence
+    breaks. THE single source of the sample-centroid derivation — the
     dedup bucketing and the written layouts must not re-implement it
     (r12 review: drift between copies silently corrupts cell
     membership)."""
     if nlist is None:
         nlist = derive_nlist(emb.count())
-    cent = emb.where(centroid_pred(id_col, nlist)).select(
+    return emb.where(centroid_pred(id_col, nlist)).select(
         F.col(id_col).alias("cent_id"), F.col(vec_col).alias("cvec")
     )
+
+
+def ivf_assign(emb: DataFrame, id_col: str = "vec_id",
+               vec_col: str = "embedding",
+               nlist: int | None = None,
+               p: int = 1) -> tuple[DataFrame, DataFrame]:
+    """(centroids, assignments) for the IVF index: the
+    :func:`sample_centroids` table (~sqrt(N) rows) and every vector's
+    (c_id, cell) by :func:`assign_to_centroids`; ``p`` > 1 keeps the
+    top-p cells per vector (the multi-probe dedup assignment)."""
+    cent = sample_centroids(emb, id_col, vec_col, nlist)
     assign = assign_to_centroids(
         emb.select(F.col(id_col).alias("c_id"), F.col(vec_col).alias("c_vec")),
         cent,
@@ -253,41 +226,98 @@ def ivf_assign(emb: DataFrame, id_col: str = "vec_id",
     return cent, assign
 
 
-def _ivf_probe_topk(emb: DataFrame, cent: DataFrame, assign: DataFrame,
-                    k: int, n_queries: int, id_col: str,
-                    vec_col: str) -> DataFrame:
-    """The IVF probe given an arbitrary (cent_id, cvec) centroid table
-    and its (c_id, cell) assignment — shared by the deterministic-sample
-    index (ivf_topk) and the kmeans-trained variant (ivf_kmeans_recall):
-    the centroid SOURCE is a pluggable seam, the probe plan is one."""
-    queries = emb.where(F.col(id_col) < n_queries).select(
+def pick_probes(cent: DataFrame, queries: DataFrame, nprobe: int):
+    """(query rows sorted by q_id, their (q, d) matrix, (q, nprobe)
+    probe cell ids): the query batch (q_id, q_vec) and the centroid
+    table (cent_id, cvec) are collected to the driver, both bounded
+    (topk.collect_queries, topk.collect_centroids), and each query's
+    ``nprobe`` cells are picked by the cell rule (topk.top_cells). No
+    query or no centroid gives a (q, 0) probe array."""
+    import numpy as np
+
+    cids, C = topk.collect_centroids(cent)
+    qrows = topk.collect_queries(queries, "q_id")
+    Q = topk.matrix(r["q_vec"] for r in qrows)
+    if not (qrows and len(cids)):
+        return qrows, Q, np.zeros((len(qrows), 0), dtype=np.int64)
+    return qrows, Q, cids[topk.top_cells(Q, C, nprobe)]
+
+
+def probe_pairs(cent: DataFrame, queries: DataFrame,
+                nprobe: int) -> tuple[DataFrame, list[int]]:
+    """(q_id, cell, probe_rn) rows of each query's ``nprobe`` cells
+    (:func:`pick_probes`) as a driver-built frame, probe_rn 1..nprobe in
+    the cell rule's order, and the sorted distinct probed cells. The
+    frame comes from pandas, a local relation: a frame from a Python
+    list is an RDD whose every use runs Python tasks."""
+    import pandas as pd
+    from pyspark.sql import types as T
+
+    qrows, _, probe = pick_probes(cent, queries, nprobe)
+    pairs = queries.sparkSession.createDataFrame(
+        pd.DataFrame([(r["q_id"], int(c), rn)
+                      for r, cells in zip(qrows, probe)
+                      for rn, c in enumerate(cells, 1)],
+                     columns=["q_id", "cell", "probe_rn"]),
+        T.StructType([
+            T.StructField("q_id", queries.schema["q_id"].dataType),
+            T.StructField("cell", T.LongType()),
+            T.StructField("probe_rn", T.IntegerType()),
+        ]),
+    )
+    return pairs, sorted(set(probe.ravel().tolist()))
+
+
+def ivf_probe_topk(cent: DataFrame, queries: DataFrame, corpus: DataFrame,
+                   k: int, score=topk.rounded_cosine,
+                   score_col: str = "cos_sim",
+                   desc: bool = True) -> DataFrame:
+    """The one IVF probe: each query's NPROBE cells of the centroid
+    table ``cent`` (cent_id, cvec) are picked on the driver
+    (:func:`pick_probes`), and the rows of ``corpus`` (c_id, c_vec,
+    cell) in their union — a partition-pruned scan when ``corpus`` is a
+    written cell layout — are scored by one Arrow top-k scan, each query
+    keeping only the rows of its own cells. ``score(X, Q)`` is the
+    site's (n, q) score block, ``score_col`` its output column and
+    ``desc`` its order; the default is the rounded cosine, descending.
+    ``queries`` carries (q_id, q_vec). The centroid source is a seam:
+    sampled, trained and a layout's frozen centroids probe alike.
+
+    Output: q_id, c_id, <score_col>, rank."""
+    import numpy as np
+    from pyspark.sql import types as T
+
+    qrows, Q, probe = pick_probes(cent, queries, NPROBE)
+    block = None
+    if probe.size:
+        def block(pdf):
+            return (score(topk.matrix(pdf["c_vec"]), Q),
+                    topk.probe_mask(pdf["cell"].to_numpy(), probe))
+
+    schema = T.StructType([
+        T.StructField("q_id", queries.schema["q_id"].dataType),
+        T.StructField("c_id", corpus.schema["c_id"].dataType),
+        T.StructField(score_col, T.DoubleType()),
+    ])
+    return topk.scan_topk(
+        corpus.select("c_id", "c_vec", "cell")
+        .where(F.col("cell").isin(sorted(set(probe.ravel().tolist())))),
+        k, schema, block,
+        {"q_id": np.array([r["q_id"] for r in qrows])}, {"c_id": "c_id"},
+        score_col, desc,
+    )
+
+
+def _queries(emb: DataFrame, n_queries: int, id_col: str,
+             vec_col: str) -> DataFrame:
+    return emb.where(F.col(id_col) < n_queries).select(
         F.col(id_col).alias("q_id"), F.col(vec_col).alias("q_vec")
     )
-    qc = queries.crossJoin(F.broadcast(cent)).select(
-        "q_id", "q_vec", "cent_id",
-        F.round(V.cosine_similarity(F.col("q_vec"), F.col("cvec")),
-                SCORE_ROUND).alias("qsim"),
-    )
-    wq = Window.partitionBy("q_id").orderBy(F.desc("qsim"), F.asc("cent_id"))
-    probes = (
-        qc.withColumn("rn", F.row_number().over(wq))
-        .where(F.col("rn") <= NPROBE)
-        .select("q_id", "q_vec", F.col("cent_id").alias("cell"))
-    )
-    cand = probes.join(assign, "cell").join(
-        emb.select(F.col(id_col).alias("c_id"), F.col(vec_col).alias("c_vec")),
-        "c_id",
-    )
-    scored = cand.select(
-        "q_id", "c_id",
-        F.round(V.cosine_similarity(F.col("q_vec"), F.col("c_vec")),
-                SCORE_ROUND).alias("cos_sim"),
-    )
-    wk = Window.partitionBy("q_id").orderBy(F.desc("cos_sim"), F.asc("c_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(wk))
-        .where(F.col("rank") <= k)
-    )
+
+
+def _vectors(emb: DataFrame, id_col: str, vec_col: str) -> DataFrame:
+    return emb.select(F.col(id_col).alias("c_id"),
+                      F.col(vec_col).alias("c_vec"))
 
 
 def ivf_topk(emb: DataFrame, k: int, n_queries: int = 10,
@@ -297,9 +327,16 @@ def ivf_topk(emb: DataFrame, k: int, n_queries: int = 10,
     full-corpus scan of cosine_distance_topk is replaced by reading ~
     nprobe/n_cells of the data. Approximate by construction; recall vs the
     exact scan is a quality metric, not a correctness bug (flagged, not
-    hidden — SURVEY.md §4.1)."""
-    cent, assign = ivf_assign(emb, id_col, vec_col)
-    return _ivf_probe_topk(emb, cent, assign, k, n_queries, id_col, vec_col)
+    hidden — SURVEY.md §4.1). The in-plan form of the written layout's
+    probe (index/ivf_layout.ivf_frozen_layout_topk): the cells come from
+    assign_to_centroids, vectors passed through."""
+    cent = sample_centroids(emb, id_col, vec_col)
+    return ivf_probe_topk(
+        cent, _queries(emb, n_queries, id_col, vec_col),
+        assign_to_centroids(_vectors(emb, id_col, vec_col), cent,
+                            keep_vec=True),
+        k,
+    )
 
 
 # --- DuckDB oracle SQL ------------------------------------------------------
@@ -665,11 +702,11 @@ def ivf_nprobe_curve(emb: DataFrame, k: int, n_queries: int,
     probes, cost rises linearly; the knee is the operating point).
 
     ONE pass: candidates are gathered once at max(sweep) probes with
-    their probe rank attached, each candidate's cosine is scored once,
-    then the sweep values fan out by an explode and each (nprobe, query)
-    slice ranks the candidates whose probe rank qualifies. Recall is
-    against the exact brute-force top-k; mean_candidates records the
-    per-query scan cost that bought it.
+    their probe rank attached (:func:`probe_pairs`), each candidate's
+    cosine is scored once, then the sweep values fan out by an explode
+    and each (nprobe, query) slice ranks the candidates whose probe rank
+    qualifies. Recall is against the exact brute-force top-k;
+    mean_candidates records the per-query scan cost that bought it.
 
     ``cent``/``assign`` take a WRITTEN layout's frozen centroid table
     and stored (c_id, cell) assignment — the registered query passes
@@ -683,28 +720,11 @@ def ivf_nprobe_curve(emb: DataFrame, k: int, n_queries: int,
     """
     if cent is None or assign is None:
         cent, assign = ivf_assign(emb, id_col, vec_col)
-    queries = emb.where(F.col(id_col) < n_queries).select(
-        F.col(id_col).alias("q_id"), F.col(vec_col).alias("q_vec")
-    )
-    qc = queries.crossJoin(F.broadcast(cent)).select(
-        "q_id", "q_vec", "cent_id",
-        F.round(V.cosine_similarity(F.col("q_vec"), F.col("cvec")),
-                SCORE_ROUND).alias("qsim"),
-    )
-    wq = Window.partitionBy("q_id").orderBy(F.desc("qsim"), F.asc("cent_id"))
-    probes = (
-        qc.withColumn("rn", F.row_number().over(wq))
-        .where(F.col("rn") <= max(NPROBE_SWEEP))
-        .select("q_id", "q_vec", F.col("cent_id").alias("cell"),
-                F.col("rn").alias("probe_rn"))
-    )
+    queries = _queries(emb, n_queries, id_col, vec_col)
     cand = (
-        probes.join(assign, "cell")
-        .join(
-            emb.select(F.col(id_col).alias("c_id"),
-                       F.col(vec_col).alias("c_vec")),
-            "c_id",
-        )
+        queries.join(probe_pairs(cent, queries, max(NPROBE_SWEEP))[0], "q_id")
+        .join(assign, "cell")
+        .join(_vectors(emb, id_col, vec_col), "c_id")
         .select(
             "q_id", "probe_rn", "c_id",
             F.round(V.cosine_similarity(F.col("q_vec"), F.col("c_vec")),
@@ -723,12 +743,8 @@ def ivf_nprobe_curve(emb: DataFrame, k: int, n_queries: int,
         .where(F.col("rank") <= k)
         .select("nprobe", "q_id", "c_id")
     )
-    brute = knn_join(
-        queries,
-        emb.select(F.col(id_col).alias("c_id"),
-                   F.col(vec_col).alias("c_vec")),
-        k,
-    ).select("q_id", "c_id")
+    brute = knn_join(queries, _vectors(emb, id_col, vec_col), k).select(
+        "q_id", "c_id")
     hits = approx.join(brute, ["q_id", "c_id"]).groupBy(
         "nprobe", "q_id"
     ).agg(F.count(F.lit(1)).alias("n_hit"))
@@ -1257,8 +1273,7 @@ def ivfpq_topk(emb: DataFrame, k: int, n_queries: int = 10,
 
         def score(pdf):
             X = topk.matrix(pdf[vec_col])
-            # first max = lowest cent_id, the assign_to_centroids rule
-            cells = cc_ids[topk.rounded_cosine(X, CC).argmax(axis=1)]
+            cells = cc_ids[topk.top_cells(X, CC, 1)[:, 0]]
             return (_adc(_pq_codes(X, books, sq, sub), lut),
                     topk.probe_mask(cells, probe))
 
@@ -1428,13 +1443,7 @@ def ivfpq_residual_topk(emb: DataFrame, k: int, n_queries: int = 10,
     from pyspark.sql import types as T
 
     sub = dim // m
-    nlist = derive_nlist(emb.count())
-    cent_rows = sorted(
-        emb.where(centroid_pred(id_col, nlist))
-        .select(F.col(id_col).alias("cent_id"), F.col(vec_col).alias("cvec"))
-        .collect(),
-        key=lambda r: r["cent_id"],
-    )
+    _, CC = topk.collect_centroids(sample_centroids(emb, id_col, vec_col))
     srows = sorted(
         emb.where(pq_sample_pred(id_col))
         .select(F.col(id_col).alias("sid"), vec_col).collect(),
@@ -1451,12 +1460,9 @@ def ivfpq_residual_topk(emb: DataFrame, k: int, n_queries: int = 10,
         T.StructField("adc_dist", T.DoubleType()),
     ])
     score = None
-    if qrows and cent_rows and srows:
-        CC = topk.matrix(r["cvec"] for r in cent_rows)
-
+    if qrows and len(CC) and srows:
         def assign_pos(X):
-            # the assign_to_centroids rule: first max = lowest cent_id
-            return topk.rounded_cosine(X, CC).argmax(axis=1)
+            return topk.top_cells(X, CC, 1)[:, 0]
 
         # residual codebook: residuals of the deterministic sample rows
         # against THEIR OWN cells
@@ -2115,8 +2121,8 @@ def kmeans_centroids(emb: DataFrame, k: int | None = None,
                      vec_col: str = "embedding") -> DataFrame:
     """TRAINED centroid table for the IVF seam: Lloyd's k-means (init =
     first k rows by id, the embeddings_kmeans_train recipe), returning
-    (cent_id, cvec) shaped exactly like ivf_assign's deterministic
-    sample — so trained centroids drop into _ivf_probe_topk,
+    (cent_id, cvec) shaped exactly like the deterministic sample
+    (sample_centroids) — so trained centroids drop into ivf_probe_topk,
     assign_to_centroids, SemDeDup, or the written layouts unchanged.
 
     Scale shape: the driver loop holds only k x dim floats; each
@@ -2176,7 +2182,7 @@ def ivf_kmeans_recall(emb: DataFrame, k: int, n_queries: int = 10,
 
     ``tcent``/``tassign`` (r12, r11 VERDICT #4): callers holding a
     WRITTEN trained layout pass its frozen centroid table and stored
-    (c_id, cell) assignment instead of retraining Lloyd in-plan per
+    (c_id, c_vec, cell) assignment instead of retraining Lloyd in-plan per
     execution — the registered bench row was re-paying the write-time
     training cost (9.85s driver) on every run even though
     ensure_ivf_trained_layout persists the identical centroid set
@@ -2186,33 +2192,24 @@ def ivf_kmeans_recall(emb: DataFrame, k: int, n_queries: int = 10,
 
     Rows-only by design: the kmeans iteration is a float loop whose
     assignment boundaries can flip across engines (same reason
-    embeddings_kmeans_train is rows-only); the probe itself reuses the
-    oracled _ivf_probe_topk plan. Output: q_id, recall_kmeans,
+    embeddings_kmeans_train is rows-only); both sides probe through
+    ivf_probe_topk, as ivf_topk does. Output: q_id, recall_kmeans,
     recall_sample.
     """
     if tcent is None:
         tcent = kmeans_centroids(emb, None, KMEANS_IVF_ITERS,
                                  id_col, vec_col)
     if tassign is None:
-        tassign = assign_to_centroids(
-            emb.select(F.col(id_col).alias("c_id"),
-                       F.col(vec_col).alias("c_vec")),
-            tcent,
-        )
-    trained = _ivf_probe_topk(emb, tcent, tassign, k, n_queries,
-                              id_col, vec_col).select("q_id", "c_id")
+        tassign = assign_to_centroids(_vectors(emb, id_col, vec_col), tcent,
+                                      keep_vec=True)
+    queries = _queries(emb, n_queries, id_col, vec_col)
+    trained = ivf_probe_topk(tcent, queries, tassign, k).select(
+        "q_id", "c_id")
     sampled = ivf_topk(emb, k, n_queries, id_col, vec_col).select(
         "q_id", "c_id"
     )
-    queries = emb.where(F.col(id_col) < n_queries).select(
-        F.col(id_col).alias("q_id"), F.col(vec_col).alias("q_vec")
-    )
-    exact = knn_join(
-        queries,
-        emb.select(F.col(id_col).alias("c_id"),
-                   F.col(vec_col).alias("c_vec")),
-        k,
-    ).select("q_id", "c_id")
+    exact = knn_join(queries, _vectors(emb, id_col, vec_col), k).select(
+        "q_id", "c_id")
     hits_t = trained.join(exact, ["q_id", "c_id"]).groupBy("q_id").agg(
         F.count(F.lit(1)).alias("n_t")
     )

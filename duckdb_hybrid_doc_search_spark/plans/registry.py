@@ -108,6 +108,11 @@ RECHECK: dict[str, int] = dict.fromkeys([
     # ann_sq8_* and ann_ivfpq_* queries, whose plans also changed, and
     # every query that reads a layout are listed above)
     "ann_sq8_topk",
+    # ... and every IVF cell assignment and probe-cell pick went through
+    # topk.top_cells, every IVF probe through knn.ivf_probe_topk: the
+    # queries that reach them (the IVF, IVF-PQ, dedup-IVF and hybrid IVF
+    # ones are listed above)
+    "dedup_semantic_cells", "dedup_semantic_kmeans_cells",
 ], 16)
 
 

@@ -20,6 +20,7 @@ top-k AND final top-k.
 from __future__ import annotations
 
 import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -27,7 +28,6 @@ from pyspark.sql import types as T
 from ..config import SCORE_ROUND, SCORE_THRESHOLD, TOP_K_DEFAULT
 from ..functions import topk
 from ..functions.fusion import dd_fuse_scores, fuse
-from ..functions.vector import cosine_distance, lit_vector
 from ..models.embedder import hash_embed_text
 from ..models.reranker import dd_overlap_rerank, overlap_rerank_expr
 from ..models.tokenizer import tokenize_query
@@ -98,6 +98,12 @@ def _fused_top(docs: DataFrame, index: dict[str, DataFrame] | None,
     )
 
 
+def vss_distance(X: np.ndarray, Q: np.ndarray) -> np.ndarray:
+    """(n, q) VSS score block: the cosine DISTANCE of the rows of X to
+    the rows of Q, rounded at SCORE_ROUND — hybrid_search's vss_score."""
+    return np.round(1.0 - topk.cosine(X, Q), SCORE_ROUND)
+
+
 def ivf_vss_topk(spark, embeddings: DataFrame, sf_dir: str,
                  qvec: list[float], top_k: int,
                  layout_root: str | None = None) -> DataFrame:
@@ -108,43 +114,26 @@ def ivf_vss_topk(spark, embeddings: DataFrame, sf_dir: str,
     scan cost tracks nprobe/n_cells of the corpus. Approximate by
     construction (cells the probe skips can hide true neighbors); the
     oracle carries identical probe semantics, so approximation is pinned,
-    not fuzzy. Probe-cell selection is one bounded collect (NPROBE ids)
-    off a broadcast centroid scan — same pattern as ivf_partitioned_topk.
+    not fuzzy. The one IVF probe (index/ivf_layout.ivf_frozen_layout_topk)
+    over the layout's frozen centroids, scored by the rounded cosine
+    DISTANCE ascending, as batch_candidates scores it.
     """
-    from ..functions.vector import cosine_similarity
-    from ..index.ivf_layout import ensure_ivf_layout, probe_cells
-    from ..operators.knn import NPROBE, ivf_assign
+    from ..index.ivf_layout import ensure_ivf_layout, ivf_frozen_layout_topk
 
     # layout_root: synthetic-corpus probes (tools/scale_probe DOC100X)
     # pass a temp root so their layouts never key into the shared
     # warehouse cache
     layout_dir = ensure_ivf_layout(spark, embeddings, sf_dir,
                                    root=layout_root)
-    cent, _ = ivf_assign(embeddings)
-    top_cells = (
-        cent.select(
-            "cent_id",
-            F.round(
-                cosine_similarity(F.col("cvec"), lit_vector(qvec)),
-                SCORE_ROUND,
-            ).alias("qsim"),
-        )
-        .orderBy(F.desc("qsim"), F.asc("cent_id"))
-        .limit(NPROBE)
-    )
-    cells = sorted(r.cent_id for r in top_cells.collect())
-    return (
-        probe_cells(spark, layout_dir, cells)
-        .select(
-            F.col("vec_id").alias("doc_id"),
-            F.round(
-                cosine_distance(F.col("embedding"), lit_vector(qvec)),
-                SCORE_ROUND,
-            ).alias("vss_score"),
-        )
-        .orderBy(F.asc_nulls_last("vss_score"), F.asc("doc_id"))
-        .limit(top_k)
-    )
+    # from pandas, a local relation (a Python list would be an RDD that
+    # runs Python tasks when the probe collects it)
+    query = spark.createDataFrame(
+        pd.DataFrame({"q_id": [0], "q_vec": [[float(x) for x in qvec]]}),
+        "q_id int, q_vec array<double>")
+    return ivf_frozen_layout_topk(
+        spark, layout_dir, query, top_k,
+        vss_distance, "vss_score", desc=False,
+    ).select(F.col("c_id").alias("doc_id"), "vss_score")
 
 
 def hybrid_search_ivf(spark, docs: DataFrame, embeddings: DataFrame,
@@ -297,9 +286,7 @@ def batch_candidates(index: dict[str, DataFrame], embeddings: DataFrame,
     ])
     vss = topk.scan_topk(
         embeddings.select(id_col, "embedding"), top_k, schema,
-        lambda pdf: (np.round(
-            1.0 - topk.cosine(topk.matrix(pdf["embedding"]), Q), SCORE_ROUND
-        ), None),
+        lambda pdf: (vss_distance(topk.matrix(pdf["embedding"]), Q), None),
         {"query_id": np.arange(len(Q), dtype=np.int32)},
         {"doc_id": id_col}, "vss_score", desc=False,
     ).select("query_id", "doc_id", "vss_score")

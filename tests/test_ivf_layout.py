@@ -3,13 +3,25 @@ query-time IVF operator."""
 
 from __future__ import annotations
 
+import duckdb
 import pytest
 from pyspark.sql import functions as F
 
+from duckdb_hybrid_doc_search_spark.config import SCORE_ROUND
+from duckdb_hybrid_doc_search_spark.functions import vector as V
 from duckdb_hybrid_doc_search_spark.index.catalog import load_table
 from duckdb_hybrid_doc_search_spark.index.ivf_layout import (
     ivf_partitioned_topk, probe_cells, write_ivf_partitioned)
-from duckdb_hybrid_doc_search_spark.operators.knn import ivf_topk
+from duckdb_hybrid_doc_search_spark.operators.knn import (
+    assign_to_centroids, dd_ivf_topk_sql, ivf_topk)
+
+
+def _rows(df_or_rows):
+    """Sorted tuples, floats as the oracle hash renders them."""
+    rows = df_or_rows.collect() if hasattr(df_or_rows, "collect") \
+        else df_or_rows
+    return sorted(tuple(round(v, 9) if isinstance(v, float) else v
+                        for v in r) for r in rows)
 
 
 def test_ivf_partition_pruning_and_equality(spark, sf_dir, tmp_path):
@@ -32,6 +44,61 @@ def test_ivf_partition_pruning_and_equality(spark, sf_dir, tmp_path):
         for r in ivf_partitioned_topk(spark, out, emb, 5, 10).collect()
     )
     assert got == want
+    # both share the probe, so check them against the independent
+    # DuckDB oracle too
+    con = duckdb.connect()
+    con.execute("CREATE VIEW embeddings AS SELECT * FROM read_parquet("
+                f"'{sf_dir}/embeddings.parquet')")
+    oracle = _rows(con.execute(dd_ivf_topk_sql(5, 10)).fetchall())
+    assert len(oracle) == 50 and _rows(want) == oracle
+
+
+def _duck(rows):
+    con = duckdb.connect()
+    con.execute("CREATE TABLE embeddings (vec_id BIGINT, embedding FLOAT[])")
+    con.executemany("INSERT INTO embeddings VALUES (?, ?)", rows)
+    return con
+
+
+@pytest.mark.parametrize("p", [1, 2])
+def test_zero_norm_centroid_ranks_last_in_assignment(spark, p):
+    """A zero-norm centroid's cosine is NaN/NULL and ranks last, as the
+    oracles' ``row_number`` orders it; np.argmax (the first NaN) once
+    sent every vector to it."""
+    vecs = [(0, [1.0, 0.0]), (1, [0.9, 0.1]), (2, [0.0, 1.0])]
+    cents = [(10, [0.0, 0.0]), (11, [1.0, 0.0]), (12, [0.0, 1.0])]
+    got = _rows(assign_to_centroids(
+        spark.createDataFrame(vecs, "c_id long, c_vec array<float>"),
+        spark.createDataFrame(cents, "cent_id long, cvec array<float>"),
+        p=p))
+    con = _duck(vecs)
+    con.execute("CREATE TABLE cent (cent_id BIGINT, cvec FLOAT[])")
+    con.executemany("INSERT INTO cent VALUES (?, ?)", cents)
+    csim = V.dd_cosine_similarity("e.embedding", "c.cvec")
+    want = _rows(con.execute(f"""
+SELECT c_id, cell FROM (
+  SELECT e.vec_id AS c_id, c.cent_id AS cell,
+         row_number() OVER (PARTITION BY e.vec_id
+           ORDER BY round({csim}, {SCORE_ROUND}) DESC, c.cent_id ASC) AS rn
+  FROM embeddings e CROSS JOIN cent c
+) WHERE rn <= {p}""").fetchall())
+    assert got == want
+    assert want == ([(0, 11), (1, 11), (2, 12)] if p == 1 else
+                    [(0, 11), (0, 12), (1, 11), (1, 12), (2, 11), (2, 12)])
+
+
+def test_zero_norm_centroid_ivf_topk_matches_oracle(spark):
+    """ivf_topk over a table whose sampled centroid 0 has a zero norm
+    (ids 0, 50 and 100 are the centroid slots), queries 0..5 (query 0 is
+    that zero vector): the rows the DuckDB oracle gives."""
+    rows = [(0, [0.0, 0.0]), (50, [1.0, 0.0]), (100, [0.0, 1.0]),
+            (1, [1.0, 0.0]), (2, [0.9, 0.1]), (3, [0.0, 1.0]),
+            (4, [0.3, 0.7]), (5, [0.6, 0.4])]
+    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    got = _rows(ivf_topk(emb, 3, 6))
+    want = _rows(_duck(rows).execute(dd_ivf_topk_sql(3, 6)).fetchall())
+    assert got == want
+    assert {(1, 1, 1.0, 1), (1, 50, 1.0, 2), (0, 0, None, 1)} <= set(want)
 
 
 def test_ivf_recall_vs_brute_force(spark, sf_dir):
@@ -376,7 +443,8 @@ def test_trained_layout_centroids_equal_inplan_trainer(spark, sf_dir,
     # and the layout-served recall row equals the in-plan-trained row
     tcent = read_layout_centroids(spark, tdir)
     tassign = spark.read.parquet(tdir).select(
-        F.col("vec_id").alias("c_id"), "cell")
+        F.col("vec_id").alias("c_id"), F.col("embedding").alias("c_vec"),
+        "cell")
     from_layout = [tuple(r) for r in ivf_kmeans_recall(
         emb, 5, 10, tcent=tcent, tassign=tassign).collect()]
     in_plan = [tuple(r) for r in ivf_kmeans_recall(emb, 5, 10).collect()]

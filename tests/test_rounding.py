@@ -1,9 +1,11 @@
 """utils.round_half_up_array against the scalar utils.round_half_up, which
 stays the specification: equal bit for bit (the sign of zero included) on
-inputs dense in ties of the sixth decimal."""
+inputs dense in ties of the sixth decimal. Both give +0.0 for a value that
+rounds to zero, as Spark's ``F.round`` does."""
 
 from __future__ import annotations
 
+import math
 from decimal import Decimal
 
 import numpy as np
@@ -65,3 +67,13 @@ def test_docstring_case_and_empty():
         == [1.23916] == [round_half_up(1.2391595, 6)]
     assert round_half_up_array(np.zeros(0), 6).shape == (0,)
     assert np.isnan(round_half_up_array(np.array([np.nan]), 6)[0])
+
+
+def test_zero_is_positive_as_in_spark():
+    """Spark's ``F.round(x, 6)`` is +0.0 for -1e-17, -0.0 and -4e-7; the
+    oracle hash renders -0.0 as '-0.0', so the sign must match."""
+    xs = [-1e-17, -0.0, -4e-7, 0.0, 4e-7, -4.999999e-7]
+    for v in [round_half_up(x, SCORE_ROUND) for x in xs] + \
+            round_half_up_array(np.array(xs), SCORE_ROUND).tolist():
+        assert v == 0.0 and math.copysign(1.0, v) == 1.0, xs
+    assert math.copysign(1.0, round_half_up(-5e-7, SCORE_ROUND)) == -1.0

@@ -12,6 +12,7 @@ from __future__ import annotations
 
 import math
 import os
+import re
 
 import numpy as np
 import pytest
@@ -149,9 +150,22 @@ def test_query_batch_bound(spark):
         knn.knn_join(queries, corpus, 2)
 
 
+# a second copy of the top-k order or of the IVF cell rule (an argmax
+# cell pick, a Spark ordering over centroid ids: a centroid window or
+# an orderBy().limit(NPROBE))
+KERNEL_COPIES = {
+    "np.lexsort": re.compile(r"lexsort"),
+    ".argmax(": re.compile(r"\.argmax\("),
+    "ordering on cent_id": re.compile(
+        r"F\.(asc|desc)\w*\(\s*[\"']cent_id|orderBy\([^)]*[\"']cent_id"),
+    "limit(NPROBE)": re.compile(r"\.limit\(\s*NPROBE\b"),
+}
+
+
 def test_no_topk_sort_outside_kernel():
-    """The local top-k order lives in functions/topk.py only: a second
-    copy could drift from the window's order."""
+    """The local top-k order and the IVF cell rule live in
+    functions/topk.py only (local_topk, top_cells): a second copy could
+    drift from the window's order or from the oracles' cell rule."""
     pkg = os.path.join(os.path.dirname(os.path.dirname(
         os.path.abspath(__file__))), "duckdb_hybrid_doc_search_spark")
     offenders = []
@@ -162,9 +176,57 @@ def test_no_topk_sort_outside_kernel():
                     continue
                 path = os.path.join(root, name)
                 with open(path, encoding="utf-8") as f:
-                    if "lexsort" in f.read():
-                        offenders.append(os.path.relpath(path, pkg))
-    assert not offenders, f"np.lexsort outside functions/topk.py: {offenders}"
+                    text = f.read()
+                offenders += [(os.path.relpath(path, pkg), what)
+                              for what, pat in KERNEL_COPIES.items()
+                              if pat.search(text)]
+    assert not offenders, f"outside functions/topk.py: {offenders}"
+
+
+# vector components: small integers give exact cosine ties (parallel
+# vectors), +-1e-9 rounds to -0.0 and 0.0, all-zero rows give NaN
+COMPONENTS = st.sampled_from([0.0, 1.0, -1.0, 2.0, 1e-9, -1e-9])
+
+
+@st.composite
+def cell_cases(draw):
+    d = draw(st.integers(1, 3))
+    nq, nc = draw(st.integers(0, 5)), draw(st.integers(0, 7))
+    Q, C = (np.array(draw(st.lists(COMPONENTS, min_size=m * d,
+                                   max_size=m * d)),
+                     dtype=np.float64).reshape(m, d) for m in (nq, nc))
+    return Q, C, draw(st.integers(1, 9))
+
+
+@settings(max_examples=300, deadline=None)
+@given(cell_cases())
+def test_top_cells_matches_sorted_reference(case):
+    """top_cells picks what a full sort of each query's rounded cosines
+    picks: descending, -0.0 == 0.0, ties to the lower position (id), NaN
+    rows and columns (zero norms) last, n >= len(C) keeps every cell."""
+    Q, C, n = case
+    with np.errstate(invalid="ignore"):
+        S = topk.rounded_cosine(Q, C)
+        got = topk.top_cells(Q, C, n)
+    assert got.shape == (len(Q), min(n, len(C)))
+    for i in range(len(Q)):
+        want = sorted(range(len(C)),
+                      key=lambda j: _ref_key(S[i, j], j, True))[:n]
+        assert got[i].tolist() == want
+
+
+def test_top_cells_zero_norm_and_signed_zero():
+    """A zero-norm centroid ranks last, not first (np.argmax returns the
+    first NaN); -0.0 ties 0.0 and goes to the lower id."""
+    C = np.array([[0.0, 0.0], [1.0, 0.0], [0.0, 1.0]])
+    X = np.array([[1.0, 0.0], [0.9, 0.1], [0.0, 1.0], [0.0, 0.0]])
+    with np.errstate(invalid="ignore"):
+        assert topk.top_cells(X, C, 1)[:, 0].tolist() == [1, 1, 2, 0]
+        assert topk.top_cells(X, C, 3).tolist() == [
+            [1, 2, 0], [1, 2, 0], [2, 1, 0], [0, 1, 2]]
+    C = np.array([[-1e-9, 1.0], [1e-9, 1.0], [0.0, 1.0]])
+    assert topk.top_cells(np.array([[1.0, 0.0]]), C, 3).tolist() == [
+        [0, 1, 2]]
 
 
 @pytest.mark.parametrize("desc", [True, False])
