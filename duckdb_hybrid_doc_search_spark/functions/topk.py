@@ -101,13 +101,15 @@ def matrix(vectors: Iterable[Sequence[float]]) -> np.ndarray:
 
 def cosine(X: np.ndarray, Q: np.ndarray,
            xnorm: np.ndarray | None = None) -> np.ndarray:
-    """(n, q) cosine similarity of the rows of X against the rows of Q.
+    """(n, q) cosine similarity of the rows of X against the rows of Q;
+    NaN where either row has a zero norm (0 / 0, without a warning).
     ``xnorm``, X's row norms ``np.sqrt((X * X).sum(axis=1))``, may be
     passed in when X is scored many times; the result is the same."""
     if xnorm is None:
         xnorm = np.sqrt((X * X).sum(axis=1))
     S = X @ Q.T
-    S /= xnorm[:, None] * np.sqrt((Q * Q).sum(axis=1))[None, :]
+    with np.errstate(invalid="ignore"):
+        S /= xnorm[:, None] * np.sqrt((Q * Q).sum(axis=1))[None, :]
     return S
 
 

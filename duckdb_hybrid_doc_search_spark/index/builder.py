@@ -6,14 +6,19 @@ process pool per file plus ONE serial driver-process embedding call
 (indexer.py:86-96); here the whole build is one lazy DataFrame chain —
  files -> chunks (mapInPandas) -> ids -> path trim -> embeddings
 (pandas_udf, executor-parallel) -> write — and the FTS tables derive from
-the chunk tokens with explode + groupBy (operators/bm25.fts_tables).
+the chunk tokens once (`build_fts_index_from_tokens`): one explode +
+groupBy gives postings, persisted; docfreq is its groupBy by term; the
+corpus stats are observed on the docstats write and reach corpus_stats
+and postings_scored as values, so no table re-aggregates another.
 Layout per SURVEY.md §4.3: narrow tables so a BM25 probe never reads
 content bytes and a kNN scan streams only vectors.
 
 A full build (`index_directories`) and an incremental one
 (`index_incremental`) share one chunk pipeline, driven by the build
 settings recorded in meta.json, and one writer, which writes the tables
-of TABLES in order and counts each table's rows on its own write.
+of TABLES in order, each as zstd-compressed Parquet, and counts each
+table's rows on its own write. A full build of fixtures/docs runs 12
+Spark jobs.
 
 `--clear` semantics (reference db.py:199-206): each table is written in
 overwrite mode, which deletes the table's directory and then writes it
@@ -27,29 +32,82 @@ from __future__ import annotations
 import json
 import os
 import shutil
+from typing import Callable
 
+import pandas as pd
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..config import TEST_EMBED_DIM
 from .catalog import read_table
 from ..models.embedder import embed_udf
-from ..operators.bm25 import fts_tables, scored_postings
 from ..operators.chunker import chunk_documents, with_doc_ids
 from ..sources.markdown import read_markdown_dirs
 
 # every table a build writes, in write order
 TABLES = ("documents", "embeddings", "postings", "docfreq", "docstats",
           "corpus_stats", "postings_scored")
+# the types of a global count (never null) and average (null over no rows)
+CORPUS_STATS_SCHEMA = "n_docs bigint not null, avgdl double"
 
 
-def build_fts_index_from_tokens(docs: DataFrame) -> dict[str, DataFrame]:
-    """FTS tables from pre-tokenized chunks (tokens array column), plus
-    the denormalized probe table `postings_scored`
-    (operators/bm25.scored_postings), so a long-lived engine's BM25
-    branch is a join-free scan."""
-    index = fts_tables(docs.select("doc_id", F.col("tokens").alias("toks")))
-    index["postings_scored"] = scored_postings(index)
+def build_fts_index_from_tokens(docs: DataFrame,
+                                write: Callable[..., dict] | None = None
+                                ) -> dict[str, DataFrame]:
+    """The FTS tables of pre-tokenized chunks (tokens array column),
+    TABLES[2:] in write order, each derived once and handed to
+    ``write(name, frame, *observed)`` as soon as it is derived. ``write``
+    materializes the frame and returns its row count ``rows`` and the
+    ``observed`` aggregates, taken on that run; by default the frame
+    runs to Spark's noop sink.
+
+    postings is one explode + groupBy, persisted while docfreq and
+    postings_scored read it; it carries each chunk's length dl, so
+    postings_scored joins docfreq alone. The corpus stats are what the
+    docstats write observes: corpus_stats is a one-row local frame of
+    them, and postings_scored carries them as literals. The rows equal
+    operators/bm25.fts_tables + scored_postings of the same chunks.
+
+    postings and postings_scored are hash-partitioned by doc_id and
+    sorted by (doc_id, term): each Parquet file's doc_id dictionary then
+    holds only its own documents' ids, the largest part of both tables
+    (64 characters each)."""
+    write = write or (lambda name, df, *observed: _write(df, None, *observed))
+    toks = docs.select("doc_id", F.col("tokens").alias("toks"))
+    count, dl = F.count(F.lit(1)), F.size("toks").alias("dl")
+    by_doc = ("doc_id", "term")
+    postings = (
+        toks.repartition("doc_id")
+        .select("doc_id", dl, F.explode("toks").alias("term"))
+        .groupBy("term", "doc_id", "dl").agg(count.alias("tf"))
+        .sortWithinPartitions(*by_doc)
+        .persist())
+    index = {
+        "postings": postings.select("term", "doc_id", "tf"),
+        "docfreq": postings.groupBy("term").agg(count.alias("df"))
+        .sortWithinPartitions("term"),
+        "docstats": toks.select("doc_id", dl),
+    }
+    try:
+        write("postings", index["postings"])
+        write("docfreq", index["docfreq"])
+        seen = write("docstats", index["docstats"],
+                     F.avg("dl").alias("avgdl"))
+        n_docs, avgdl = seen["rows"], seen["avgdl"]
+        index["corpus_stats"] = docs.sparkSession.createDataFrame(
+            pd.DataFrame({"n_docs": [n_docs], "avgdl": [avgdl]}),
+            CORPUS_STATS_SCHEMA)
+        write("corpus_stats", index["corpus_stats"])
+        # a no-op when the join keeps postings' layout (docfreq broadcast)
+        index["postings_scored"] = (
+            postings.join(index["docfreq"], "term")
+            .select("term", "doc_id", "tf", "df", "dl",
+                    F.lit(n_docs).cast("long").alias("n_docs"),
+                    F.lit(avgdl).cast("double").alias("avgdl"))
+            .repartition("doc_id").sortWithinPartitions(*by_doc))
+        write("postings_scored", index["postings_scored"])
+    finally:
+        postings.unpersist()
     return index
 
 
@@ -94,18 +152,34 @@ def _embeddings(chunks: DataFrame, settings: dict[str, str | None]
     return chunks.select("doc_id", embed(F.col("content")).alias("embedding"))
 
 
+def _write(df: DataFrame, path: str | None, *observed) -> dict:
+    """Write df as zstd Parquet at path (to Spark's noop sink without
+    one); returns its row count ``rows`` and the ``observed`` aggregates,
+    observed on the write itself."""
+    obs = Observation()
+    w = df.observe(obs, F.count(F.lit(1)).alias("rows"), *observed) \
+        .write.mode("overwrite")
+    if path is None:
+        w.format("noop").save()
+    else:
+        w.parquet(path, compression="zstd")
+    return obs.get
+
+
 def _write_index(documents: DataFrame, embeddings: DataFrame,
                  out_dir: str) -> dict[str, int]:
     """Write every table of TABLES under out_dir; returns each table's
     row count, observed on the write itself."""
-    tables = {"documents": documents, "embeddings": embeddings,
-              **build_fts_index_from_tokens(documents)}
     counts: dict[str, int] = {}
-    for name in TABLES:
-        obs = Observation()
-        tables[name].observe(obs, F.count(F.lit(1)).alias("rows")).write \
-            .mode("overwrite").parquet(os.path.join(out_dir, name))
-        counts[name] = obs.get["rows"]
+
+    def write(name: str, df: DataFrame, *observed) -> dict:
+        seen = _write(df, os.path.join(out_dir, name), *observed)
+        counts[name] = seen["rows"]
+        return seen
+
+    write("documents", documents)
+    write("embeddings", embeddings)
+    build_fts_index_from_tokens(documents, write)
     return counts
 
 

@@ -58,7 +58,8 @@ def build_fts_index(docs: DataFrame, id_col: str = "doc_id",
 
 def fts_tables(toks: DataFrame) -> dict[str, DataFrame]:
     """The four FTS index tables of a (doc_id, toks) frame, lazily: the
-    one derivation behind build_fts_index and the index builder."""
+    derivation behind build_fts_index. The index builder's writer
+    (index/builder.build_fts_index_from_tokens) writes the same rows."""
     docstats = toks.select("doc_id", F.size("toks").alias("dl"))
     postings = (
         toks.select("doc_id", F.explode("toks").alias("term"))
@@ -192,6 +193,7 @@ def bm25_batch_topk_terms(index: dict[str, DataFrame],
 
     Output: query_id, doc_id, score, rank.
     """
+    import pandas as pd
     from pyspark.sql import Window
 
     # probe_only index dicts carry only postings_scored — derive the
@@ -202,7 +204,11 @@ def bm25_batch_topk_terms(index: dict[str, DataFrame],
         for qi, terms in enumerate(query_terms)
         for t in sorted(set(terms))
     ]
-    qterms = spark.createDataFrame(qrows, "query_id int, term string")
+    # from pandas, a local relation: a frame from a Python list is an
+    # RDD whose every use runs Python tasks
+    qterms = spark.createDataFrame(
+        pd.DataFrame(qrows, columns=["query_id", "term"]),
+        "query_id int, term string")
     all_terms = sorted({t for _, t in qrows})
 
     scored = (

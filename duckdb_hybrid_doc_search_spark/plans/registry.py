@@ -113,6 +113,9 @@ RECHECK: dict[str, int] = dict.fromkeys([
     # queries that reach them (the IVF, IVF-PQ, dedup-IVF and hybrid IVF
     # ones are listed above)
     "dedup_semantic_cells", "dedup_semantic_kmeans_cells",
+    # ... and the batch query frames of bm25_batch_topk,
+    # hybrid_search_batch(_reranked) and search_rank_agreement are built
+    # from pandas, not from a Python list (all four are listed above)
 ], 16)
 
 

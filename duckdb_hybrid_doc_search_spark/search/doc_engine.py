@@ -49,11 +49,12 @@ RESULT_FIELDS = ("doc_id", "file_path", "header_path", "line_start",
 DISPLAY_FIELDS = RESULT_FIELDS[:6]
 
 # Largest index, in on-disk bytes of the tables the snapshot reads, that
-# an engine opens. On the 1031-chunk bench index (64-dim embeddings) the
-# snapshot, rerank term ids included, held 2.7 bytes of driver memory per
-# on-disk byte (2.61 MB for 0.98 MB: tracemalloc plus Arrow's allocator),
-# so the bound is ~700 MB of driver memory.
-MAX_SNAPSHOT_BYTES = 256 * 1024 * 1024
+# an engine opens. On the 1031-chunk bench index (64-dim embeddings,
+# zstd-compressed tables) the snapshot, rerank term ids included, held
+# 3.7 bytes of driver memory per on-disk byte (2.67 MB for 0.73 MB:
+# tracemalloc plus Arrow's allocator), so the bound is ~700 MiB of
+# driver memory.
+MAX_SNAPSHOT_BYTES = 192 * 1024 * 1024
 
 # Largest array, in bytes, a search builds for one block of its
 # queries: a batch is scored in blocks of max(1, BLOCK_BYTES // (8 m))

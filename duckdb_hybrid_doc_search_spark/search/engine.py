@@ -327,9 +327,10 @@ def hybrid_search_batch(docs: DataFrame, embeddings: DataFrame,
         from ..models.reranker import RERANK_TRUNCATE_CHARS
 
         spark = docs.sparkSession
-        qrows = [(qi, sorted(set(t))) for qi, t in enumerate(qterms)]
-        qdf = spark.createDataFrame(
-            qrows, "query_id int, qterms array<string>")
+        qdf = spark.createDataFrame(   # from pandas: a local relation
+            pd.DataFrame({"query_id": range(len(qterms)),
+                          "qterms": [sorted(set(t)) for t in qterms]}),
+            "query_id int, qterms array<string>")
         truncated = F.substring(F.col("text"), 1, RERANK_TRUNCATE_CHARS)
         overlap = F.when(
             F.size("qterms") > 0,

@@ -330,6 +330,8 @@ def rank_agreement(index: dict[str, DataFrame], emb: DataFrame,
 
     Output per query: query_id, n_common, overlap_at_k, footrule.
     """
+    import pandas as pd
+
     from ..models.embedder import hash_embed_text
     from ..operators.knn import knn_join
 
@@ -337,8 +339,9 @@ def rank_agreement(index: dict[str, DataFrame], emb: DataFrame,
     bm = bm25.bm25_batch_topk_from_index(index, queries, k).select(
         "query_id", "doc_id", F.col("rank").alias("r_fts")
     )
-    qdf = spark.createDataFrame(
-        [(i, hash_embed_text(q)) for i, q in enumerate(queries)],
+    qdf = spark.createDataFrame(   # from pandas: a local relation
+        pd.DataFrame({"q_id": range(len(queries)),
+                      "q_vec": [hash_embed_text(q) for q in queries]}),
         "q_id int, q_vec array<float>",
     )
     cos = knn_join(

@@ -4,11 +4,17 @@ plan needs. Counted per job group with the status tracker, UI off."""
 
 from __future__ import annotations
 
+import pathlib
+import shutil
 import time
 
 import pytest
 
+from duckdb_hybrid_doc_search_spark.index.builder import (index_directories,
+                                                          index_incremental)
 from duckdb_hybrid_doc_search_spark.plans import registry
+
+FIX = pathlib.Path(__file__).parent.parent / "fixtures" / "docs"
 
 # jobs of one warm run (the noop write included): side-table and query
 # collects, the top-k scan's shuffle stage and the write
@@ -22,14 +28,20 @@ MAX_JOBS = {
 }
 
 
-def _run_jobs(spark, sf_dir, name, group):
-    """(job count, stage names) of one run of ``name`` through the noop
-    sink in job group ``group``."""
+# jobs of an index build of fixtures/docs, one above the 12 and 24
+# measured: a write job per table, plus the postings shuffle, the
+# docfreq shuffle, and postings_scored's docfreq shuffle and broadcast;
+# an incremental pass adds its added/kept/removed counts (18 and 30
+# jobs before the writer derived the FTS tables once)
+MAX_BUILD_JOBS = {"full": 13, "incremental": 25}
+
+
+def _jobs(spark, group, fn):
+    """(job count, stage names) of ``fn()`` run in job group ``group``."""
     sc = spark.sparkContext
     sc.setJobGroup(group, group)
     try:
-        registry.REGISTRY[name].spark_fn(spark, sf_dir).write.format(
-            "noop").mode("overwrite").save()
+        fn()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
@@ -44,6 +56,30 @@ def _run_jobs(spark, sf_dir, name, group):
     names = [st.getStageInfo(s).name for j in jobs for s in j.stageIds
              if st.getStageInfo(s) is not None]
     return len(jobs), names
+
+
+def _run_jobs(spark, sf_dir, name, group):
+    """(job count, stage names) of one run of ``name`` through the noop
+    sink in job group ``group``."""
+    return _jobs(spark, group, lambda: registry.REGISTRY[name].spark_fn(
+        spark, sf_dir).write.format("noop").mode("overwrite").save())
+
+
+def test_index_build_jobs(spark, tmp_path):
+    """A full build and an incremental pass (one file edited, one added,
+    one removed) run no more jobs than the one writer needs."""
+    corpus, out = tmp_path / "corpus", str(tmp_path / "idx")
+    shutil.copytree(FIX, corpus)
+    dirs = [str(corpus)]
+    n_full, stages = _jobs(spark, "build.full",
+                           lambda: index_directories(spark, dirs, out))
+    assert n_full <= MAX_BUILD_JOBS["full"], stages
+    (corpus / "no_headers.md").write_text("an EDITED paragraph\n")
+    (corpus / "brand_new.md").write_text("# New Doc\n\nfresh content\n")
+    (corpus / "dup_content.md").unlink()
+    n_incr, stages = _jobs(spark, "build.incremental",
+                           lambda: index_incremental(spark, dirs, out))
+    assert n_incr <= MAX_BUILD_JOBS["incremental"], stages
 
 
 @pytest.mark.parametrize("name", sorted(MAX_JOBS))

@@ -13,6 +13,7 @@ from __future__ import annotations
 import math
 import os
 import re
+import warnings
 
 import numpy as np
 import pytest
@@ -205,7 +206,8 @@ def test_top_cells_matches_sorted_reference(case):
     picks: descending, -0.0 == 0.0, ties to the lower position (id), NaN
     rows and columns (zero norms) last, n >= len(C) keeps every cell."""
     Q, C, n = case
-    with np.errstate(invalid="ignore"):
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")   # zero norms give NaN silently
         S = topk.rounded_cosine(Q, C)
         got = topk.top_cells(Q, C, n)
     assert got.shape == (len(Q), min(n, len(C)))
@@ -220,10 +222,12 @@ def test_top_cells_zero_norm_and_signed_zero():
     first NaN); -0.0 ties 0.0 and goes to the lower id."""
     C = np.array([[0.0, 0.0], [1.0, 0.0], [0.0, 1.0]])
     X = np.array([[1.0, 0.0], [0.9, 0.1], [0.0, 1.0], [0.0, 0.0]])
-    with np.errstate(invalid="ignore"):
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")   # zero norms give NaN silently
         assert topk.top_cells(X, C, 1)[:, 0].tolist() == [1, 1, 2, 0]
         assert topk.top_cells(X, C, 3).tolist() == [
             [1, 2, 0], [1, 2, 0], [2, 1, 0], [0, 1, 2]]
+        assert np.isnan(topk.cosine(X, C)[3]).all()
     C = np.array([[-1e-9, 1.0], [1e-9, 1.0], [0.0, 1.0]])
     assert topk.top_cells(np.array([[1.0, 0.0]]), C, 3).tolist() == [
         [0, 1, 2]]
